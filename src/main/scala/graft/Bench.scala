@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark entry point (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -229,73 +229,40 @@ object Bench {
       } catch {
         case e: Throwable => recordStorageFailure("storage bench", e); Nil
       }
-    // IVF index economics, split so the headline is honest: the BUILD is a
-    // once-per-corpus-state cost (full assignment + partitioned write), the
-    // PROBE is the steady-state per-batch cost — the number that argues the
-    // 100 TB story. A fresh directory isolates the build timing from the
-    // query rounds' memoized index; min of two probes, like the storage ops.
+    // ANN index economics, split so the headline is honest: the BUILD is a
+    // once-per-corpus-state cost (IVF: full assignment + partitioned write;
+    // PQ: train + encode; IVF-PQ: both), the PROBE is the steady-state
+    // per-batch cost — the number that argues the 100 TB story (IVF-PQ's
+    // probe scans the compressed codes of ONLY the probed cells). A fresh
+    // directory isolates the build timing from the query rounds' memoized
+    // index; min of two probes, like the storage ops.
+    val annIndexes: Seq[(String, String => Any, String => DataFrame)] = Seq(
+      ("ivf", graft.operators.IvfIndex.build(spark, sfDir, _),
+        graft.operators.IvfIndex.topk(spark, sfDir, _)),
+      ("pq", graft.operators.PqIndex.build(spark, sfDir, _),
+        graft.operators.PqIndex.recall(spark, sfDir, _)),
+      ("ivfpq", graft.operators.IvfPqIndex.build(spark, sfDir, _),
+        graft.operators.IvfPqIndex.recall(spark, sfDir, _)))
     storageResults = storageResults ++ (
       if (skipStorage) Nil
-      else try {
-        val idx = java.nio.file.Files.createTempDirectory("graft-bench-ivf").toString
-        val t0 = System.nanoTime()
-        graft.operators.IvfIndex.build(spark, sfDir, idx)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val tProbe = (1 to 2).map { _ =>
-          val p0 = System.nanoTime()
-          graft.operators.IvfIndex.topk(spark, sfDir, idx).count()
-          (System.nanoTime() - p0) / 1e9
-        }.min
-        val p = new org.apache.hadoop.fs.Path(idx)
-        scala.util.Try(
-          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true))
-        Seq("ivf_index_build" -> tBuild, "ivf_index_probe" -> tProbe)
-      } catch {
-        case e: Throwable => recordStorageFailure("ivf index bench", e); Nil
-      })
-    // PQ index economics, same split: BUILD = train + encode the corpus
-    // once; PROBE = broadcast-LUT ADC over the persisted codes table plus
-    // the fixed-size exact re-rank — the steady-state compressed-ANN cost.
-    storageResults = storageResults ++ (
-      if (skipStorage) Nil
-      else try {
-        val idx = java.nio.file.Files.createTempDirectory("graft-bench-pq").toString
-        val t0 = System.nanoTime()
-        graft.operators.PqIndex.build(spark, sfDir, idx)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val tProbe = (1 to 2).map { _ =>
-          val p0 = System.nanoTime()
-          graft.operators.PqIndex.recall(spark, sfDir, idx).count()
-          (System.nanoTime() - p0) / 1e9
-        }.min
-        val p = new org.apache.hadoop.fs.Path(idx)
-        scala.util.Try(
-          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true))
-        Seq("pq_index_build" -> tBuild, "pq_index_probe" -> tProbe)
-      } catch {
-        case e: Throwable => recordStorageFailure("pq index bench", e); Nil
-      })
-    // composed IVF-PQ index: the probe pays the coarse cell selection plus
-    // a compressed-domain scan of ONLY the probed cells — strictly less IO
-    // than either single index's probe at scale.
-    storageResults = storageResults ++ (
-      if (skipStorage) Nil
-      else try {
-        val idx = java.nio.file.Files.createTempDirectory("graft-bench-ivfpq").toString
-        val t0 = System.nanoTime()
-        graft.operators.IvfPqIndex.build(spark, sfDir, idx)
-        val tBuild = (System.nanoTime() - t0) / 1e9
-        val tProbe = (1 to 2).map { _ =>
-          val p0 = System.nanoTime()
-          graft.operators.IvfPqIndex.recall(spark, sfDir, idx).count()
-          (System.nanoTime() - p0) / 1e9
-        }.min
-        val p = new org.apache.hadoop.fs.Path(idx)
-        scala.util.Try(
-          p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true))
-        Seq("ivfpq_index_build" -> tBuild, "ivfpq_index_probe" -> tProbe)
-      } catch {
-        case e: Throwable => recordStorageFailure("ivfpq index bench", e); Nil
+      else annIndexes.flatMap { case (name, build, probe) =>
+        try {
+          val idx = java.nio.file.Files.createTempDirectory(s"graft-bench-$name").toString
+          val t0 = System.nanoTime()
+          build(idx)
+          val tBuild = (System.nanoTime() - t0) / 1e9
+          val tProbe = (1 to 2).map { _ =>
+            val p0 = System.nanoTime()
+            probe(idx).count()
+            (System.nanoTime() - p0) / 1e9
+          }.min
+          val p = new org.apache.hadoop.fs.Path(idx)
+          scala.util.Try(
+            p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true))
+          Seq(s"${name}_index_build" -> tBuild, s"${name}_index_probe" -> tProbe)
+        } catch {
+          case e: Throwable => recordStorageFailure(s"$name index bench", e); Nil
+        }
       })
 
     val byRound = rounds.toSeq.map(_.toMap)

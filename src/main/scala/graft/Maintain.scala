@@ -33,12 +33,11 @@ import graft.streaming.SinkCompaction
   * catches external appends and builds the first sidecar); `stats <col>`
   * does the same for the per-file min/max zone-map sidecar
   * ([[graft.core.StatsIndex.refresh]] — footer-only reads of new files);
-  * `ivf|pq|ivfpq|dedup <partCol> <indexDir>` keeps a persisted index in
-  * step with its source table ([[graft.operators.IvfIndex.sync]] /
-  * [[graft.operators.PqIndex.sync]] / [[graft.operators.IvfPqIndex.sync]]
-  * for the ANN indexes, [[graft.operators.DedupIndex.sync]] for the
-  * MinHash band sidecar — build when absent, else an O(changes)
-  * change-feed refresh);
+  * `ivf|pq|ivfpq|dedup <partCol> <indexDir>` keeps a persisted index (the
+  * three ANN indexes or the MinHash band sidecar) in step with its source
+  * table through the one protocol they share,
+  * [[graft.operators.DerivedIndex.sync]] — build when absent, else an
+  * O(changes) change-feed refresh;
   * `restore <partCol> <version> <key,key>` rolls table content back to a
   * prior version as a new commit ([[graft.batch.Upsert.restoreTo]] —
   * incident recovery over the ops surface); `clone <partCol> <dstDir>
@@ -65,6 +64,11 @@ object Maintain {
       "view", "shallow", "materialize", "pack", "packsync", "widen",
       "widenmat")
 
+  /** The change-feed-maintained indexes, by mode word. */
+  private val derivedIndexes: Map[String, graft.operators.DerivedIndex] = Map(
+    "ivf" -> graft.operators.IvfIndex, "pq" -> graft.operators.PqIndex,
+    "ivfpq" -> graft.operators.IvfPqIndex, "dedup" -> graft.operators.DedupIndex)
+
   /** Run one maintenance mode against `table`. `modeArgs` are the
     * positional args after the mode word (see object doc); `m` supplies
     * the knobs. Returns one JSON line per op performed. Throws on unknown
@@ -89,22 +93,9 @@ object Maintain {
         // consume the change feed (O(changes) rewrite)
         val partCol = arg(0, s"the partition column ($mode <partCol> <indexDir>)")
         val indexDir = arg(1, s"the index directory ($mode <partCol> <indexDir>)")
-        val (rebuilt, changed, to) = mode match {
-          case "ivf" =>
-            val s = graft.operators.IvfIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedRows, s.toVersion)
-          case "pq" =>
-            val s = graft.operators.PqIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedRows, s.toVersion)
-          case "dedup" =>
-            val s = graft.operators.DedupIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedDocs, s.toVersion)
-          case _ =>
-            val s = graft.operators.IvfPqIndex.sync(spark, table, partCol, indexDir)
-            (s.rebuilt, s.changedRows, s.toVersion)
-        }
-        Seq(s"""{"op":"$mode-sync","table":$tableJson,"rebuilt":$rebuilt,""" +
-          s""""changedRows":$changed,"toVersion":$to}""")
+        val st = derivedIndexes(mode).sync(spark, table, partCol, indexDir)
+        Seq(s"""{"op":"$mode-sync","table":$tableJson,"rebuilt":${st.rebuilt},""" +
+          s""""changedRows":${st.changedRows},"toVersion":${st.toVersion}}""")
       case "bloom" =>
         val column = arg(0, "the indexed column (bloom <col>)")
         // incremental: existing filters are reused (data files are

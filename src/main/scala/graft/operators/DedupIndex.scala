@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted MinHash-LSH band index — the 100 TB shape of
@@ -28,44 +27,15 @@ import org.apache.spark.sql.functions._
   *
   * Verified screen output is row-identical to computing both sides
   * in-query ([[DedupQueries.incrementalScreen]] semantics — spec'd
-  * parity). Maintenance: [[refresh]] consumes the source table's change
-  * data feed — removed documents' bands leave, net-inserted documents'
-  * bands land, and only the AFFECTED prefix partitions rewrite
-  * (O(changed docs × B) band rows spread over ≤ min(256, changes×B)
-  * prefixes), vs [[buildFromTable]]'s O(corpus). Unlike the ANN indexes
-  * there is NO trained state (bands are a pure per-document function), so
-  * refresh equals rebuild EXACTLY at every version — no drift threshold,
-  * no retrain path. */
-object DedupIndex {
-
-  private def bandsDir(indexDir: String) = s"$indexDir/bands"
-
-  private def metaFile(indexDir: String) =
-    new org.apache.hadoop.fs.Path(s"$indexDir/meta.json")
-
-  private final case class Meta(version: Long, docs: Long)
-
-  private def writeMeta(s: SparkSession, indexDir: String, m: Meta): Unit =
-    // atomic overwrite-rename: an in-place create(overwrite) can tear
-    // mid-write and wedge sync() (see IvfPqIndex.writeMeta)
-    graft.core.AtomicWrite.replaceFile(s, metaFile(indexDir),
-      s"""{"version":${m.version},"docs":${m.docs}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def readMeta(s: SparkSession, indexDir: String): Meta = {
-    val p = metaFile(indexDir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val txt =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val o = graft.http.Json.parse(txt).asObj
-    def num(k: String): Long = o(k) match {
-      case graft.http.JNum(n) => n.toLong
-      case other => throw new IllegalStateException(s"dedup index meta $k: $other")
-    }
-    Meta(num("version"), num("docs"))
-  }
+  * parity). Maintenance: [[refresh]] ([[DerivedIndex]]) consumes the
+  * source table's change data feed — removed documents' bands leave,
+  * net-inserted documents' bands land, and only the AFFECTED prefix
+  * partitions rewrite (O(changed docs × B) band rows spread over
+  * ≤ min(256, changes×B) prefixes), vs [[buildFromTable]]'s O(corpus).
+  * Unlike the ANN indexes there is NO trained state (bands are a pure
+  * per-document function), so refresh equals rebuild EXACTLY at every
+  * version — no drift threshold, no retrain path. */
+object DedupIndex extends DerivedIndex("bands", "bp", "doc_id", countField = "docs") {
 
   /** `(doc_id, band, bp)` of any frame carrying `doc_id` + `text` — the
     * one banding rule every path shares (build, refresh, screen probe),
@@ -89,15 +59,28 @@ object DedupIndex {
       s: SparkSession,
       table: String,
       partCol: String,
-      indexDir: String): Long = {
-    val version = graft.core.TxnLog.currentVersion(s, table)
-    val docs = graft.batch.Upsert.readCommitted(s, table, partCol)
-    bandRows(docs).select("doc_id", "band", "bp")
-      .write.mode("overwrite").partitionBy("bp").parquet(bandsDir(indexDir))
-    val n = s.read.parquet(bandsDir(indexDir))
-      .select("doc_id").distinct().count()
-    writeMeta(s, indexDir, Meta(version, n))
-    n
+      indexDir: String): Long =
+    buildSnapshot(s, table, partCol, indexDir) { docs =>
+      bandRows(docs).select("doc_id", "band", "bp")
+        .write.mode("overwrite").partitionBy("bp").parquet(dataDir(indexDir))
+    }
+
+  /** Bands are a pure per-document function: no state to pin or retrain. */
+  override protected def trained: Boolean = false
+
+  protected def rebuild(
+      s: SparkSession, table: String, partCol: String, indexDir: String,
+      pinned: Boolean): Unit =
+    buildFromTable(s, table, partCol, indexDir)
+
+  /** Net-inserted documents' bands land; the touched prefixes are the
+    * changed documents' OLD homes, read from the sidecar (the text may be
+    * gone, so they cannot be recomputed), plus the new bands' homes. */
+  protected def delta(
+      s: SparkSession, indexDir: String, d: DerivedIndex.Delta): (DataFrame, DataFrame) = {
+    val added = bandRows(d.inserted).select("doc_id", "band", "bp")
+    (d.live.join(d.changedIds, Seq("doc_id"), "left_semi").select("bp")
+      .union(added.select("bp")), added)
   }
 
   /** Screen a batch of new documents (`doc_id`, `text`) against the
@@ -121,7 +104,7 @@ object DedupIndex {
     // shingles (no md5 signing), so re-shingling the batch for it costs
     // O(batch tokenization) — trivial next to the candidate join it feeds.
     val bBands = bandRows(batch)
-    val idx = s.read.parquet(bandsDir(indexDir))
+    val idx = s.read.parquet(dataDir(indexDir))
     val cand = bBands.as("x").join(idx.as("y"),
         col("x.bp") === col("y.bp") && col("x.band") === col("y.band") &&
           col("x.doc_id") =!= col("y.doc_id"))
@@ -140,108 +123,5 @@ object DedupIndex {
           size(array_union(col("sh_n"), col("sh_o"))).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("new_id", "old_id", "jaccard")
-  }
-
-  /** Incremental maintenance outcome. `rebuilt = true` only on the
-    * crashed-swap recovery path — there is no drift rebuild (no trained
-    * state). */
-  final case class RefreshStats(
-      rebuilt: Boolean, changedDocs: Long, prefixesTouched: Long,
-      fromVersion: Long, toVersion: Long)
-
-  /** Catch the index up to its source table's tip by CONSUMING THE CHANGE
-    * FEED — never a corpus rescan. Removed/updated documents' band rows
-    * leave, net-inserted documents' bands land, and only the AFFECTED
-    * prefix partitions rewrite (staging + per-prefix swap, the same
-    * install discipline as the ANN indexes — including the mid-swap-crash
-    * triage: staging debris newer than the meta version means a live
-    * prefix dir may already be gone, recover by full rebuild). */
-  def refresh(
-      s: SparkSession,
-      table: String,
-      partCol: String,
-      indexDir: String): RefreshStats = {
-    import graft.batch.ChangeFeed
-    val meta = readMeta(s, indexDir)
-    val tip = graft.core.TxnLog.currentVersion(s, table)
-    val idxFs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val debris = idxFs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
-      .filter(_.getPath.getName.startsWith(".refresh-"))
-    val suspectSwap = debris.exists { st =>
-      scala.util.Try(st.getPath.getName.stripPrefix(".refresh-v").toLong)
-        .toOption.forall(_ > meta.version)
-    }
-    if (suspectSwap) {
-      buildFromTable(s, table, partCol, indexDir)
-      debris.foreach(st => idxFs.delete(st.getPath, true))
-      return RefreshStats(rebuilt = true, 0L, 0L, meta.version, tip)
-    }
-    debris.foreach(st => idxFs.delete(st.getPath, true))
-    if (tip <= meta.version)
-      return RefreshStats(rebuilt = false, 0L, 0L, meta.version, tip)
-    val changes = ChangeFeed.readChanges(s, table, partCol,
-      meta.version, Some(tip)).cache()
-    try {
-      val changedIds = changes.select("doc_id").distinct()
-      val changedCount = changedIds.count()
-      // net state per doc across the range: newest leg wins (same
-      // convergence rule as the ANN refreshes) — an updated doc's OLD
-      // bands leave via the changedIds anti-join, its new bands come from
-      // the insert leg
-      val newest = Window.partitionBy("doc_id")
-        .orderBy(col(ChangeFeed.CommitVersionCol).desc,
-          col(ChangeFeed.ChangeTypeCol).desc)
-      val netInserted = changes.withColumn("_rn", row_number().over(newest))
-        .filter(col("_rn") === 1)
-        .filter(col(ChangeFeed.ChangeTypeCol) === "insert")
-      val newBands = bandRows(netInserted).select("doc_id", "band", "bp")
-      // affected prefixes: the changed docs' OLD homes (from the index —
-      // bands are a pure doc function, but the text may be gone, so read
-      // the sidecar, not recompute) plus the new bands' homes
-      val idx = s.read.parquet(bandsDir(indexDir))
-      val affected = idx.join(changedIds, Seq("doc_id"), "left_semi")
-        .select("bp").union(newBands.select("bp")).distinct()
-        .collect().map(_.getString(0)).sorted
-      if (affected.nonEmpty) {
-        val survivors = idx
-          .filter(col("bp").isin(affected.map(x => x: Any): _*))
-          .join(changedIds, Seq("doc_id"), "left_anti")
-          .select("doc_id", "band", "bp")
-        val staging = s"$indexDir/.refresh-v$tip"
-        survivors.unionByName(newBands.filter(
-            col("bp").isin(affected.map(x => x: Any): _*)))
-          .write.mode("overwrite").partitionBy("bp").parquet(staging)
-        val fs = new org.apache.hadoop.fs.Path(bandsDir(indexDir))
-          .getFileSystem(s.sessionState.newHadoopConf())
-        affected.foreach { p =>
-          val live = new org.apache.hadoop.fs.Path(s"${bandsDir(indexDir)}/bp=$p")
-          val staged = new org.apache.hadoop.fs.Path(s"$staging/bp=$p")
-          fs.delete(live, true)
-          if (fs.exists(staged) && !fs.rename(staged, live))
-            throw new java.io.IOException(s"refresh: failed to install $staged")
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      }
-      writeMeta(s, indexDir, Meta(tip,
-        s.read.parquet(bandsDir(indexDir)).select("doc_id").distinct().count()))
-      RefreshStats(rebuilt = false, changedCount, affected.length.toLong,
-        meta.version, tip)
-    } finally changes.unpersist()
-  }
-
-  /** Scheduled-maintenance entry ([[graft.Maintain]] `dedup` mode): build
-    * the table-backed index when none exists at `indexDir`, refresh it
-    * from the change feed otherwise. */
-  def sync(
-      s: SparkSession, table: String, partCol: String,
-      indexDir: String): RefreshStats = {
-    val p = metaFile(indexDir)
-    if (p.getFileSystem(s.sessionState.newHadoopConf()).exists(p))
-      refresh(s, table, partCol, indexDir)
-    else {
-      val n = buildFromTable(s, table, partCol, indexDir)
-      RefreshStats(rebuilt = true, n, 0L, 0L, readMeta(s, indexDir).version)
-    }
   }
 }

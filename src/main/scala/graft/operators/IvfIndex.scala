@@ -26,61 +26,42 @@ import org.apache.spark.sql.functions._
   *
   * Maintenance: for a plain corpus directory, refresh on change = rebuild
   * (the codebook memo's fingerprint detects staleness at train time). For
-  * a TxnLog-maintained VECTOR TABLE, [[refresh]] consumes the table's
-  * change data feed instead: inserted vectors assign to their cells and
-  * append, removed vectors leave their cells, and only the touched cell
-  * partitions rewrite — O(changes), the incremental-maintenance shape a
-  * 100 TB index needs. The codebook stays fixed across refreshes (standard
-  * IVF practice); [[refresh]] triggers a full retraining rebuild when the
-  * accumulated drift passes its threshold. */
-object IvfIndex {
+  * a TxnLog-maintained VECTOR TABLE, [[refresh]] ([[DerivedIndex]])
+  * consumes the table's change data feed instead: inserted vectors assign
+  * to their cells and append, removed vectors leave their cells, and only
+  * the touched cell partitions rewrite — O(changes), the
+  * incremental-maintenance shape a 100 TB index needs. The codebook stays
+  * fixed across refreshes (standard IVF practice); [[refresh]] triggers a
+  * full retraining rebuild when the accumulated drift passes its
+  * threshold. */
+object IvfIndex extends DerivedIndex("cells", "cell", "vec_id") {
 
-  private def cellsDir(indexDir: String) = s"$indexDir/cells"
   private def codebookDir(indexDir: String) = s"$indexDir/codebook"
 
-  /** Built-index memo, per (session, corpus dir), keyed on the same corpus
-    * fingerprint as the codebook memo: an index is built ONCE per corpus
-    * state and reused by every probe (the production shape — repeated
-    * bench/verify invocations must not each materialize a corpus-sized
-    * index copy into /tmp). A corpus rewrite invalidates the entry; the
-    * superseded index directory is deleted when replaced. */
-  private val built =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, (String, String)]]())
+  private val built = new CorpusMemo("embeddings", "graft-ivf-index")
 
-  /** The memoized index directory for the corpus at `d`, building (and
-    * retiring any stale predecessor) if absent or out of date. */
-  def ensureBuilt(s: SparkSession, d: String): String = built.synchronized {
-    val fp = SimilarityQueries.corpusFingerprint(s, d)
-    val m = Option(built.get(s)).getOrElse(Map.empty)
-    m.get(d) match {
-      case Some((oldFp, dir)) if oldFp == fp => dir
-      case stale =>
-        val dir = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
-        build(s, d, dir)
-        stale.foreach { case (_, old) =>
-          val p = new org.apache.hadoop.fs.Path(old)
-          scala.util.Try(
-            p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true))
-        }
-        built.put(s, m.updated(d, (fp, dir)))
-        dir
-    }
-  }
+  /** The index directory for the corpus at `d`, built once per corpus
+    * state ([[CorpusMemo]]) and reused by every probe. */
+  def ensureBuilt(s: SparkSession, d: String): String = built(s, d)(build(s, d, _))
 
   /** Train (or reuse the memoized) codebook for the corpus at `d` and
     * materialize the cell assignment under `indexDir`. Returns the number
     * of distinct cells written. */
   def build(s: SparkSession, d: String, indexDir: String): Long = {
-    val rows = SimilarityQueries.codebookRows(s, d)
-    val cent = broadcast(SimilarityQueries.centroidsDf(s, rows))
-    val q = SimilarityQueries.quantized(s, d)
-    assignTo(cent, q).write.mode("overwrite")
-      .partitionBy("cell").parquet(cellsDir(indexDir))
+    write(s, SimilarityQueries.quantized(s, d),
+      SimilarityQueries.codebookRows(s, d), indexDir)
+    s.read.parquet(dataDir(indexDir)).select("cell").distinct().count()
+  }
+
+  /** Materialize the cell assignment of `q` against `rows` plus the
+    * codebook itself under `indexDir`. */
+  private def write(
+      s: SparkSession, q: DataFrame, rows: Seq[(Long, Seq[Long])], indexDir: String): Unit = {
+    assignTo(broadcast(SimilarityQueries.centroidsDf(s, rows)), q)
+      .write.mode("overwrite").partitionBy("cell").parquet(dataDir(indexDir))
     import s.implicits._
     s.createDataset(rows).toDF("cid", "cqv")
       .coalesce(1).write.mode("overwrite").parquet(codebookDir(indexDir))
-    s.read.parquet(cellsDir(indexDir)).select("cell").distinct().count()
   }
 
   /** Nearest-centroid assignment of quantized vectors (`vec_id, qv, nrm`)
@@ -105,32 +86,9 @@ object IvfIndex {
 
   // ------------------------------------------------- table-backed variant
 
-  private def metaFile(indexDir: String) =
-    new org.apache.hadoop.fs.Path(s"$indexDir/meta.json")
-
-  private final case class Meta(version: Long, rows: Long)
-
-  private def writeMeta(s: SparkSession, indexDir: String, m: Meta): Unit =
-    // atomic overwrite-rename: an in-place create(overwrite) can tear
-    // mid-write and wedge sync() (see IvfPqIndex.writeMeta)
-    graft.core.AtomicWrite.replaceFile(s, metaFile(indexDir),
-      s"""{"version":${m.version},"rows":${m.rows}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def readMeta(s: SparkSession, indexDir: String): Meta = {
-    val p = metaFile(indexDir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val txt =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val o = graft.http.Json.parse(txt).asObj
-    def num(k: String): Long = o(k) match {
-      case graft.http.JNum(n) => n.toLong
-      case other => throw new IllegalStateException(s"index meta $k: $other")
-    }
-    Meta(num("version"), num("rows"))
-  }
+  private def readCodebook(s: SparkSession, indexDir: String): Seq[(Long, Seq[Long])] =
+    s.read.parquet(codebookDir(indexDir)).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
 
   /** Quantize vector-table rows (`vec_id`, `embedding`) with the exact
     * transform the directory path uses, so table- and dir-backed indexes
@@ -155,160 +113,30 @@ object IvfIndex {
       partCol: String,
       indexDir: String,
       codebook: Option[Seq[(Long, Seq[Long])]] = None): Long = {
-    val version = graft.core.TxnLog.currentVersion(s, table)
-    val q = quantizeRows(s, graft.batch.Upsert.readCommitted(s, table, partCol))
-    val rows = codebook.getOrElse(SimilarityQueries.trainCentroidsOn(q))
-    val cent = broadcast(SimilarityQueries.centroidsDf(s, rows))
-    assignTo(cent, q).write.mode("overwrite")
-      .partitionBy("cell").parquet(cellsDir(indexDir))
-    import s.implicits._
-    s.createDataset(rows).toDF("cid", "cqv")
-      .coalesce(1).write.mode("overwrite").parquet(codebookDir(indexDir))
-    writeMeta(s, indexDir, Meta(version, q.count()))
-    s.read.parquet(cellsDir(indexDir)).select("cell").distinct().count()
+    buildSnapshot(s, table, partCol, indexDir) { src =>
+      val q = quantizeRows(s, src)
+      write(s, q, codebook.getOrElse(SimilarityQueries.trainCentroidsOn(q)), indexDir)
+    }
+    s.read.parquet(dataDir(indexDir)).select("cell").distinct().count()
   }
 
-  /** Incremental maintenance outcome: what the refresh read and rewrote.
-    * `rebuilt = true` means drift passed the threshold and the index was
-    * re-trained from scratch instead. */
-  final case class RefreshStats(
-      rebuilt: Boolean, changedRows: Long, cellsTouched: Long,
-      fromVersion: Long, toVersion: Long)
+  protected def rebuild(
+      s: SparkSession, table: String, partCol: String, indexDir: String,
+      pinned: Boolean): Unit =
+    buildFromTable(s, table, partCol, indexDir,
+      if (pinned) scala.util.Try(readCodebook(s, indexDir)).toOption else None)
 
-  /** Catch the index up to its source table's tip by CONSUMING THE CHANGE
-    * FEED — never a corpus rescan. Deleted/updated vectors leave the cells
-    * their OLD embeddings assigned to (the feed's delete rows carry the
-    * full pre-image, so the old assignment recomputes from the fixed
-    * codebook), net-inserted vectors assign and land in theirs, and only
-    * the AFFECTED cell partitions rewrite (dynamic partition overwrite;
-    * untouched cells keep their exact files). Cost is O(changed rows +
-    * affected cells), vs [[buildFromTable]]'s O(corpus).
-    *
-    * The codebook stays fixed, so refreshed state is IDENTICAL to a full
-    * rebuild with the same codebook (spec'd hash parity) — but a codebook
-    * trained long ago degrades recall as the corpus drifts. When
-    * accumulated changes exceed `maxStaleFraction` of the indexed rows,
-    * refresh retrains via [[buildFromTable]] instead and reports
-    * `rebuilt = true`. */
-  def refresh(
-      s: SparkSession,
-      table: String,
-      partCol: String,
-      indexDir: String,
-      maxStaleFraction: Double = 0.2): RefreshStats = {
-    import graft.batch.ChangeFeed
-    val meta = readMeta(s, indexDir)
-    val tip = graft.core.TxnLog.currentVersion(s, table)
-    // staging-debris triage BEFORE any early return: `.refresh-v<N>` dirs
-    // exist only while a swap is in flight, and meta.version advances only
-    // AFTER every affected cell is installed and the staging dir deleted.
-    // So debris with N > meta.version means the previous refresh may have
-    // died MID-SWAP — a live cell dir may already be deleted with the
-    // staged copy its ONLY surviving pre-image. Sweeping it would destroy
-    // rows the change feed can never restore (unchanged vectors are not in
-    // the feed): recover by a full rebuild from the source table (pinned
-    // to the surviving codebook so refresh≡rebuild parity holds), THEN
-    // sweep. Debris at or below meta.version (or unparsable) can only be
-    // from a fully-installed swap and sweeps safely.
-    val idxFs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val debris = idxFs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
-      .filter(_.getPath.getName.startsWith(".refresh-"))
-    val suspectSwap = debris.exists { st =>
-      scala.util.Try(st.getPath.getName.stripPrefix(".refresh-v").toLong)
-        .toOption.forall(_ > meta.version)
-    }
-    if (suspectSwap) {
-      val pinned = scala.util.Try(
-        s.read.parquet(codebookDir(indexDir)).collect()
-          .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
-      ).toOption
-      buildFromTable(s, table, partCol, indexDir, pinned)
-      debris.foreach(st => idxFs.delete(st.getPath, true))
-      return RefreshStats(rebuilt = true, 0L, 0L, meta.version, tip)
-    }
-    debris.foreach(st => idxFs.delete(st.getPath, true))
-    if (tip <= meta.version)
-      return RefreshStats(rebuilt = false, 0L, 0L, meta.version, tip)
-    val changes = ChangeFeed.readChanges(s, table, partCol,
-      meta.version, Some(tip)).cache()
-    try {
-      val changedIds = changes.select("vec_id").distinct()
-      val changedCount = changedIds.count()
-      if (changedCount > maxStaleFraction * math.max(1L, meta.rows)) {
-        buildFromTable(s, table, partCol, indexDir) // retrain: drift too large
-        return RefreshStats(rebuilt = true, changedCount, 0L, meta.version, tip)
-      }
-      val rows = s.read.parquet(codebookDir(indexDir))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
-      val cent = broadcast(SimilarityQueries.centroidsDf(s, rows))
-      // old homes of every removed/updated vector: the OLDEST delete leg
-      // per vec_id carries the embedding as of the index's version — later
-      // legs are intermediate states the index never held, and using one
-      // of those could compute the wrong home and leave a stale row behind
-      val oldestDelete = Window.partitionBy("vec_id")
-        .orderBy(col(ChangeFeed.CommitVersionCol).asc)
-      val removedHomes = assignTo(cent, quantizeRows(s,
-        changes.filter(col(ChangeFeed.ChangeTypeCol) === "delete")
-          .withColumn("_rd", row_number().over(oldestDelete))
-          .filter(col("_rd") === 1)))
-      val newest = Window.partitionBy("vec_id")
-        .orderBy(col(ChangeFeed.CommitVersionCol).desc,
-          col(ChangeFeed.ChangeTypeCol).desc)
-      val netInserted = assignTo(cent, quantizeRows(s,
-        changes.withColumn("_rn", row_number().over(newest))
-          .filter(col("_rn") === 1)
-          .filter(col(ChangeFeed.ChangeTypeCol) === "insert")))
-      // affected cells: bounded by the codebook size K, never corpus-sized
-      val affected = removedHomes.select("cell")
-        .union(netInserted.select("cell")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (affected.nonEmpty) {
-        // rebuild ONLY the affected cells, into a staging dir (writing over
-        // a path being read in the same plan is undefined), then swap each
-        // affected cell directory — a cell emptied by deletes has no staged
-        // dir and simply goes away. The index is a derived artifact: a
-        // crash mid-swap is repaired by rebuild, not by a txn protocol.
-        val survivors = s.read.parquet(cellsDir(indexDir))
-          .filter(col("cell").isin(affected.map(Long.box): _*))
-          .select(col("vec_id"), col("cell").cast("long").as("cell"),
-            col("qv"), col("nrm"))
-          .join(changedIds, Seq("vec_id"), "left_anti")
-        val staging = s"$indexDir/.refresh-v$tip"
-        survivors.unionByName(netInserted)
-          .write.mode("overwrite").partitionBy("cell").parquet(staging)
-        val fs = new org.apache.hadoop.fs.Path(cellsDir(indexDir))
-          .getFileSystem(s.sessionState.newHadoopConf())
-        affected.foreach { c =>
-          val live = new org.apache.hadoop.fs.Path(s"${cellsDir(indexDir)}/cell=$c")
-          val staged = new org.apache.hadoop.fs.Path(s"$staging/cell=$c")
-          fs.delete(live, true)
-          if (fs.exists(staged) && !fs.rename(staged, live))
-            throw new java.io.IOException(s"refresh: failed to install $staged")
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      }
-      writeMeta(s, indexDir, Meta(tip,
-        s.read.parquet(cellsDir(indexDir)).count()))
-      RefreshStats(rebuilt = false, changedCount, affected.length.toLong,
-        meta.version, tip)
-    } finally changes.unpersist()
-  }
-
-  /** Scheduled-maintenance entry ([[graft.Maintain]] `ivf` mode): build
-    * the table-backed index when none exists at `indexDir`, refresh it
-    * from the change feed otherwise. */
-  def sync(
-      s: SparkSession, table: String, partCol: String,
-      indexDir: String): RefreshStats = {
-    val p = metaFile(indexDir)
-    if (p.getFileSystem(s.sessionState.newHadoopConf()).exists(p))
-      refresh(s, table, partCol, indexDir)
-    else {
-      buildFromTable(s, table, partCol, indexDir)
-      val m = readMeta(s, indexDir)
-      RefreshStats(rebuilt = true, 0L, 0L, 0L, m.version)
-    }
+  /** Deleted/updated vectors leave the cells their OLD embeddings assigned
+    * to (the feed's delete rows carry the full pre-image, so the old
+    * assignment recomputes from the fixed codebook); net-inserted vectors
+    * assign and land in theirs. Touched cells are bounded by the codebook
+    * size K, never corpus-sized. */
+  protected def delta(
+      s: SparkSession, indexDir: String, d: DerivedIndex.Delta): (DataFrame, DataFrame) = {
+    val cent = broadcast(SimilarityQueries.centroidsDf(s, readCodebook(s, indexDir)))
+    val added = assignTo(cent, quantizeRows(s, d.inserted))
+    (assignTo(cent, quantizeRows(s, d.removed)).select("cell")
+      .union(added.select("cell")), added)
   }
 
   /** Top-5 ANN over the persisted index: row-identical with
@@ -359,9 +187,7 @@ object IvfIndex {
 
   private[graft] def probedWith(
       s: SparkSession, probesIn: DataFrame, indexDir: String): (DataFrame, DataFrame) = {
-    val rows = s.read.parquet(codebookDir(indexDir))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
-    val cent = broadcast(SimilarityQueries.centroidsDf(s, rows))
+    val cent = broadcast(SimilarityQueries.centroidsDf(s, readCodebook(s, indexDir)))
     // probe scoring: query vectors only — K×probes centroid dots, no corpus
     val probeCells = probeCellsFor(probesIn, cent)
     // probed cell ids: bounded by K (codebook size), NEVER corpus-sized —
@@ -369,7 +195,7 @@ object IvfIndex {
     // partition-pruned scan of only the probed cell directories
     val cellIds = probeCells.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted
-    val prunedAssign = s.read.parquet(cellsDir(indexDir))
+    val prunedAssign = s.read.parquet(dataDir(indexDir))
       .filter(col("cell").isin(cellIds.map(Long.box): _*))
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
         col("qv"), col("nrm"))

@@ -36,49 +36,28 @@ import org.apache.spark.sql.functions._
   *
   * Maintenance: the corpus-dir index rebuilds via the fingerprint memo
   * ([[ensureBuilt]]). For a TxnLog-maintained VECTOR TABLE,
-  * [[buildFromTable]]/[[refresh]]/[[sync]] mirror the single-index
-  * variants with BOTH quantizers pinned: removed/updated vectors leave
+  * [[refresh]]/[[sync]] run the single-index protocol ([[DerivedIndex]])
+  * with BOTH quantizers pinned: removed/updated vectors leave
   * the coarse cells their old embeddings assigned to, net-inserted
   * vectors assign against the pinned coarse codebook and encode against
   * the pinned PQ codebook, and only the AFFECTED `cell=` partitions
-  * rewrite (staging + per-cell swap, [[IvfIndex.refresh]]'s torn-swap
-  * triage verbatim). Refreshed state is therefore IDENTICAL to a rebuild
+  * rewrite. Refreshed state is therefore IDENTICAL to a rebuild
   * pinned to the same two codebooks (spec'd parity); accumulated drift
   * past the threshold retrains both quantizers via [[buildFromTable]] —
   * the index shape one would actually deploy at 100 TB now has the same
   * O(changes) maintenance story as its two parents. */
-object IvfPqIndex {
+object IvfPqIndex extends DerivedIndex("codes", "cell", "vec_id") {
 
   import SimilarityQueries.{PqM, PqSub}
 
-  private def codesDir(indexDir: String) = s"$indexDir/codes"
   private def coarseDir(indexDir: String) = s"$indexDir/coarse"
   private def pqDir(indexDir: String) = s"$indexDir/pq"
 
-  /** Built-index memo per (session, corpus dir) keyed on the corpus
-    * fingerprint — one build per corpus state, same contract as
-    * [[IvfIndex.ensureBuilt]]. */
-  private val built =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, (String, String)]]())
+  private val built = new CorpusMemo("embeddings", "graft-ivfpq-index")
 
-  def ensureBuilt(s: SparkSession, d: String): String = built.synchronized {
-    val fp = SimilarityQueries.corpusFingerprint(s, d)
-    val m = Option(built.get(s)).getOrElse(Map.empty)
-    m.get(d) match {
-      case Some((oldFp, dir)) if oldFp == fp => dir
-      case stale =>
-        val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-index").toString
-        build(s, d, dir)
-        stale.foreach { case (_, old) =>
-          val p = new org.apache.hadoop.fs.Path(old)
-          scala.util.Try(
-            p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true))
-        }
-        built.put(s, m.updated(d, (fp, dir)))
-        dir
-    }
-  }
+  /** The index directory for the corpus at `d`, built once per corpus
+    * state ([[CorpusMemo]]) and reused by every probe. */
+  def ensureBuilt(s: SparkSession, d: String): String = built(s, d)(build(s, d, _))
 
   /** Train both quantizers and materialize the cell-partitioned codes
     * table: coarse codebook = the memoized IVF trainer (identical to
@@ -87,19 +66,30 @@ object IvfPqIndex {
     * of vectors encoded. */
   def build(s: SparkSession, d: String, indexDir: String): Long = {
     val q = SimilarityQueries.quantized(s, d)
-    val coarse = SimilarityQueries.codebookRows(s, d)
-    val cent = broadcast(SimilarityQueries.centroidsDf(s, coarse))
-    val assigned = IvfIndex.assignTo(cent, q).select("vec_id", "cell")
-    val cb = PqIndex.codebookDf(s, PqIndex.trainCodebook(s, q))
-    PqIndex.encode(s, cb, q).drop("bucket")
-      .join(assigned, "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(codesDir(indexDir))
+    write(s, q, SimilarityQueries.codebookRows(s, d),
+      PqIndex.codebookDf(s, PqIndex.trainCodebook(s, q)), indexDir)
+    s.read.parquet(dataDir(indexDir)).count()
+  }
+
+  /** Cell-assign `q` against the coarse codebook and encode it against
+    * `cb` into the cell-partitioned codes table; persist both codebooks. */
+  private def write(
+      s: SparkSession, q: DataFrame, coarse: Seq[(Long, Seq[Long])], cb: DataFrame,
+      indexDir: String): Unit = {
+    codesOf(s, q, broadcast(SimilarityQueries.centroidsDf(s, coarse)), cb)
+      .write.mode("overwrite").partitionBy("cell").parquet(dataDir(indexDir))
     import s.implicits._
     s.createDataset(coarse).toDF("cid", "cqv")
       .coalesce(1).write.mode("overwrite").parquet(coarseDir(indexDir))
     cb.coalesce(1).write.mode("overwrite").parquet(pqDir(indexDir))
-    s.read.parquet(codesDir(indexDir)).count()
   }
+
+  /** `(vec_id, codes, cell)` rows of `q`: each vector's coarse cell
+    * ([[IvfIndex.assignTo]]) and its PQ codes ([[PqIndex.encode]]). */
+  private def codesOf(s: SparkSession, q: DataFrame, cent: DataFrame, cb: DataFrame): DataFrame =
+    PqIndex.encode(s, cb, q).drop("bucket")
+      .join(IvfIndex.assignTo(cent, q).select("vec_id", "cell"), "vec_id")
+      .select("vec_id", "codes", "cell")
 
   /** IVF-PQ recall@5 through the persisted index (see object doc for the
     * four probe stages). */
@@ -107,35 +97,6 @@ object IvfPqIndex {
     probed(s, d, indexDir)._1
 
   // ------------------------------------------------- table-backed variant
-
-  private def metaFile(indexDir: String) =
-    new org.apache.hadoop.fs.Path(s"$indexDir/meta.json")
-
-  private final case class Meta(version: Long, rows: Long)
-
-  private def writeMeta(s: SparkSession, indexDir: String, m: Meta): Unit =
-    // overwrite-rename, never create-in-place (a torn meta.json wedges
-    // sync() into a throwing refresh loop) and never delete+rename (the
-    // gap between them reads as "no index" and triggers a spurious full
-    // rebuild) — replaceFile's FileContext OVERWRITE rename closes both
-    graft.core.AtomicWrite.replaceFile(s, metaFile(indexDir),
-      s"""{"version":${m.version},"rows":${m.rows}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def readMeta(s: SparkSession, indexDir: String): Meta = {
-    val p = metaFile(indexDir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val txt =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val o = graft.http.Json.parse(txt).asObj
-    def num(k: String): Long = o(k) match {
-      case graft.http.JNum(n) => n.toLong
-      case other => throw new IllegalStateException(s"ivfpq index meta $k: $other")
-    }
-    Meta(num("version"), num("rows"))
-  }
 
   private def readCoarse(s: SparkSession, indexDir: String): Seq[(Long, Seq[Long])] =
     s.read.parquet(coarseDir(indexDir)).collect()
@@ -158,151 +119,34 @@ object IvfPqIndex {
       partCol: String,
       indexDir: String,
       coarse: Option[Seq[(Long, Seq[Long])]] = None,
-      pq: Option[Seq[(Int, Long, Seq[Long])]] = None): Long = {
-    val version = graft.core.TxnLog.currentVersion(s, table)
-    val q = IvfIndex.quantizeRows(s,
-      graft.batch.Upsert.readCommitted(s, table, partCol))
-    val coarseRows = coarse.getOrElse(SimilarityQueries.trainCentroidsOn(q))
-    val cent = broadcast(SimilarityQueries.centroidsDf(s, coarseRows))
-    val assigned = IvfIndex.assignTo(cent, q).select("vec_id", "cell")
-    val cb = PqIndex.codebookDf(s, pq.getOrElse(PqIndex.trainCodebook(s, q)))
-    PqIndex.encode(s, cb, q).drop("bucket")
-      .join(assigned, "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(codesDir(indexDir))
-    import s.implicits._
-    s.createDataset(coarseRows).toDF("cid", "cqv")
-      .coalesce(1).write.mode("overwrite").parquet(coarseDir(indexDir))
-    cb.coalesce(1).write.mode("overwrite").parquet(pqDir(indexDir))
-    val n = s.read.parquet(codesDir(indexDir)).count()
-    writeMeta(s, indexDir, Meta(version, n))
-    n
-  }
-
-  /** What a refresh read and rewrote; `rebuilt = true` means drift or a
-    * suspected torn swap forced a full [[buildFromTable]] instead. */
-  final case class RefreshStats(
-      rebuilt: Boolean, changedRows: Long, cellsTouched: Long,
-      fromVersion: Long, toVersion: Long)
-
-  /** Catch the codes table up to the source table's tip by consuming the
-    * CHANGE FEED — never a corpus re-encode. Removed/updated vectors leave
-    * the coarse cells their OLD embeddings assigned to (the feed's delete
-    * rows carry the full pre-image), net-inserted vectors assign against
-    * the pinned coarse codebook and encode against the pinned PQ codebook,
-    * and only the AFFECTED `cell=` partitions rewrite (staging + per-cell
-    * swap). Both codebooks stay fixed, so refreshed state is IDENTICAL to
-    * a rebuild pinned to the same pair; drift past `maxStaleFraction`
-    * retrains via [[buildFromTable]]. Same torn-swap triage as
-    * [[IvfIndex.refresh]]: staging debris NEWER than the recorded meta
-    * version means a prior refresh may have died mid-swap with the staged
-    * copy a cell's only surviving pre-image — recover by a pinned rebuild,
-    * never by sweeping. */
-  def refresh(
-      s: SparkSession,
-      table: String,
-      partCol: String,
-      indexDir: String,
-      maxStaleFraction: Double = 0.2): RefreshStats = {
-    import graft.batch.ChangeFeed
-    import org.apache.spark.sql.expressions.Window
-    val meta = readMeta(s, indexDir)
-    val tip = graft.core.TxnLog.currentVersion(s, table)
-    val idxFs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val debris = idxFs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
-      .filter(_.getPath.getName.startsWith(".refresh-"))
-    val suspectSwap = debris.exists { st =>
-      scala.util.Try(st.getPath.getName.stripPrefix(".refresh-v").toLong)
-        .toOption.forall(_ > meta.version)
+      pq: Option[Seq[(Int, Long, Seq[Long])]] = None): Long =
+    buildSnapshot(s, table, partCol, indexDir) { src =>
+      val q = IvfIndex.quantizeRows(s, src)
+      write(s, q, coarse.getOrElse(SimilarityQueries.trainCentroidsOn(q)),
+        PqIndex.codebookDf(s, pq.getOrElse(PqIndex.trainCodebook(s, q))), indexDir)
     }
-    if (suspectSwap) {
-      val coarse = scala.util.Try(readCoarse(s, indexDir)).toOption
-      val pq = scala.util.Try(readPq(s, indexDir)).toOption
-      buildFromTable(s, table, partCol, indexDir, coarse, pq)
-      debris.foreach(st => idxFs.delete(st.getPath, true))
-      return RefreshStats(rebuilt = true, 0L, 0L, meta.version, tip)
-    }
-    debris.foreach(st => idxFs.delete(st.getPath, true))
-    if (tip <= meta.version)
-      return RefreshStats(rebuilt = false, 0L, 0L, meta.version, tip)
-    val changes = ChangeFeed.readChanges(s, table, partCol,
-      meta.version, Some(tip)).cache()
-    try {
-      val changedIds = changes.select("vec_id").distinct()
-      val changedCount = changedIds.count()
-      if (changedCount > maxStaleFraction * math.max(1L, meta.rows)) {
-        buildFromTable(s, table, partCol, indexDir) // retrain: drift too large
-        return RefreshStats(rebuilt = true, changedCount, 0L, meta.version, tip)
-      }
-      val cent = broadcast(SimilarityQueries.centroidsDf(s, readCoarse(s, indexDir)))
-      val cb = PqIndex.codebookDf(s, readPq(s, indexDir))
-      // old homes of removed/updated vectors: the OLDEST delete leg per
-      // vec_id carries the embedding as of the index's version
-      val oldestDelete = Window.partitionBy("vec_id")
-        .orderBy(col(ChangeFeed.CommitVersionCol).asc)
-      val removedHomes = IvfIndex.assignTo(cent, IvfIndex.quantizeRows(s,
-        changes.filter(col(ChangeFeed.ChangeTypeCol) === "delete")
-          .withColumn("_rd", row_number().over(oldestDelete))
-          .filter(col("_rd") === 1)))
-      // net-new vectors: newest change leg per vec_id, kept if insert —
-      // assigned to their coarse cell AND encoded against the pinned
-      // sub-codebooks
-      val newest = Window.partitionBy("vec_id")
-        .orderBy(col(ChangeFeed.CommitVersionCol).desc,
-          col(ChangeFeed.ChangeTypeCol).desc)
-      val qNew = IvfIndex.quantizeRows(s,
-        changes.withColumn("_rn", row_number().over(newest))
-          .filter(col("_rn") === 1)
-          .filter(col(ChangeFeed.ChangeTypeCol) === "insert"))
-      val assignedNew = IvfIndex.assignTo(cent, qNew).select("vec_id", "cell")
-      val netInserted = PqIndex.encode(s, cb, qNew).drop("bucket")
-        .join(assignedNew, "vec_id")
-        .select(col("vec_id"), col("codes"), col("cell"))
-      // affected cells: bounded by the coarse codebook size K, never corpus
-      val affected = removedHomes.select("cell")
-        .union(assignedNew.select("cell")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      if (affected.nonEmpty) {
-        val survivors = s.read.parquet(codesDir(indexDir))
-          .filter(col("cell").isin(affected.map(Long.box).toIndexedSeq: _*))
-          .select(col("vec_id"), col("codes"),
-            col("cell").cast("long").as("cell"))
-          .join(changedIds, Seq("vec_id"), "left_anti")
-        val staging = s"$indexDir/.refresh-v$tip"
-        survivors.unionByName(netInserted)
-          .write.mode("overwrite").partitionBy("cell").parquet(staging)
-        val fs = new org.apache.hadoop.fs.Path(codesDir(indexDir))
-          .getFileSystem(s.sessionState.newHadoopConf())
-        affected.foreach { c =>
-          val live = new org.apache.hadoop.fs.Path(s"${codesDir(indexDir)}/cell=$c")
-          val staged = new org.apache.hadoop.fs.Path(s"$staging/cell=$c")
-          fs.delete(live, true)
-          if (fs.exists(staged) && !fs.rename(staged, live))
-            throw new java.io.IOException(s"ivfpq refresh: failed to install $staged")
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      }
-      writeMeta(s, indexDir, Meta(tip,
-        s.read.parquet(codesDir(indexDir)).count()))
-      RefreshStats(rebuilt = false, changedCount, affected.length.toLong,
-        meta.version, tip)
-    } finally changes.unpersist()
-  }
 
-  /** Scheduled-maintenance entry ([[graft.Maintain]] `ivfpq` mode): build
-    * the table-backed index when none exists at `indexDir`, refresh it
-    * from the change feed otherwise. */
-  def sync(
-      s: SparkSession, table: String, partCol: String,
-      indexDir: String): RefreshStats = {
-    val p = metaFile(indexDir)
-    if (p.getFileSystem(s.sessionState.newHadoopConf()).exists(p))
-      refresh(s, table, partCol, indexDir)
-    else {
-      buildFromTable(s, table, partCol, indexDir)
-      val m = readMeta(s, indexDir)
-      RefreshStats(rebuilt = true, 0L, 0L, 0L, m.version)
-    }
+  protected def rebuild(
+      s: SparkSession, table: String, partCol: String, indexDir: String,
+      pinned: Boolean): Unit =
+    if (pinned)
+      buildFromTable(s, table, partCol, indexDir,
+        scala.util.Try(readCoarse(s, indexDir)).toOption,
+        scala.util.Try(readPq(s, indexDir)).toOption)
+    else buildFromTable(s, table, partCol, indexDir)
+
+  /** Removed/updated vectors leave the coarse cells their OLD embeddings
+    * assigned to (the feed's delete rows carry the full pre-image);
+    * net-inserted vectors assign against the pinned coarse codebook and
+    * encode against the pinned PQ codebook. Touched cells are bounded by
+    * the coarse codebook size K, never the corpus. */
+  protected def delta(
+      s: SparkSession, indexDir: String, d: DerivedIndex.Delta): (DataFrame, DataFrame) = {
+    val cent = broadcast(SimilarityQueries.centroidsDf(s, readCoarse(s, indexDir)))
+    val qNew = IvfIndex.quantizeRows(s, d.inserted)
+    def cells(q: DataFrame) = IvfIndex.assignTo(cent, q).select("cell")
+    (cells(IvfIndex.quantizeRows(s, d.removed)).union(cells(qNew)),
+      codesOf(s, qNew, cent, PqIndex.codebookDf(s, readPq(s, indexDir))))
   }
 
   /** (recall frame, pruned codes read, ADC scores) — the latter two
@@ -328,9 +172,7 @@ object IvfPqIndex {
     val probes = q.filter(col("vec_id") < 20)
     // coarse stage: probe-side centroid math only, then the probed cell
     // ids — bounded by the coarse codebook size K, never the corpus
-    val coarse = s.read.parquet(coarseDir(indexDir))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
-    val cent = broadcast(SimilarityQueries.centroidsDf(s, coarse))
+    val cent = broadcast(SimilarityQueries.centroidsDf(s, readCoarse(s, indexDir)))
     // one action materializes the (query, probed cell) pairs — bounded by
     // probes × coarse-K, never corpus-sized
     val pcRows = IvfIndex.probeCellsFor(probes, cent)
@@ -338,7 +180,7 @@ object IvfPqIndex {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val cellIds = pcRows.map(_._2).distinct.sorted
     // the codes read partition-prunes to the probed cell dirs
-    val pruned = s.read.parquet(codesDir(indexDir))
+    val pruned = s.read.parquet(dataDir(indexDir))
       .filter(col("cell").isin(cellIds.map(Long.box).toIndexedSeq: _*))
       .select(col("vec_id"), col("codes"), col("cell").cast("long").as("cell"))
     import s.implicits._

@@ -89,66 +89,38 @@ object PackWriter extends graft.QueryModule {
   // the query level — the scalatest `sync ≡ re-pack` invariant, enforced
   // per corpus by the correctness gate itself.
 
-  private val packedTables =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        Map[String, (String, String)]]())
+  private val packedTables = new CorpusMemo("documents", "graft-pack-occ")
 
-  private def docsFingerprint(s: SparkSession, d: String): String = {
-    val root = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(root)
-    val entries = if (st.isDirectory) fs.listStatus(root).toSeq else Seq(st)
-    entries.map(e => s"${e.getPath.getName}:${e.getLen}:${e.getModificationTime}")
-      .sorted.mkString("|")
-  }
-
-  /** Build (once per corpus state — the IvfIndex.ensureBuilt memo
-    * discipline, so bench rounds past the first measure the READ) the two
-    * shard tables the occupancy queries read: `shard_w` = one-shot
-    * [[write]]; `shard_s` = a managed docs table seeded with each
-    * source's first ~3/5 of doc ids, bootstrap-synced, grown by the
-    * remaining wave, synced again — both must roll up to the identical
-    * pure-SQL accounting. */
+  /** Build (once per corpus state — [[CorpusMemo]], so bench rounds past
+    * the first measure the READ) the two shard tables the occupancy
+    * queries read: `shard_w` = one-shot [[write]]; `shard_s` = a managed
+    * docs table seeded with each source's first ~3/5 of doc ids,
+    * bootstrap-synced, grown by the remaining wave, synced again — both
+    * must roll up to the identical pure-SQL accounting. */
   private[graft] def ensurePacked(
-      s: SparkSession, d: String): (String, String) =
-    packedTables.synchronized {
-      val fp = docsFingerprint(s, d)
-      val m = Option(packedTables.get(s)).getOrElse(
-        Map.empty[String, (String, String)])
-      m.get(d) match {
-        case Some((oldFp, root)) if oldFp == fp =>
-          (s"$root/shard_w", s"$root/shard_s")
-        case stale =>
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-pack-occ").toString
-          write(s, d, s"$root/shard_w")
-          val docsDf = graft.core.Tables.documents(s, d)
-            .select("source", "doc_id", "text")
-          // per-source cut at 3/5 of the max doc id: wave 2 appends stay
-          // strictly above every wave-1 doc (the sync append discipline)
-          val cuts = docsDf.groupBy("source")
-            .agg((max("doc_id") * 3L / 5L).as("cut"))
-          val docsT = s"$root/docs"
-          graft.batch.Upsert.mergeByKey(s, docsT,
-            docsDf.join(broadcast(cuts), Seq("source"))
-              .filter(col("doc_id") <= col("cut")).drop("cut"),
-            "source", Seq("doc_id"))
-          sync(s, docsT, "source", s"$root/shard_s")
-          graft.batch.Upsert.mergeByKey(s, docsT,
-            docsDf.join(broadcast(cuts), Seq("source"))
-              .filter(col("doc_id") > col("cut")).drop("cut"),
-            "source", Seq("doc_id"))
-          sync(s, docsT, "source", s"$root/shard_s")
-          stale.foreach { case (_, old) =>
-            val p = new org.apache.hadoop.fs.Path(old)
-            scala.util.Try(
-              p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true))
-          }
-          packedTables.put(s, m.updated(d, (fp, root)))
-          (s"$root/shard_w", s"$root/shard_s")
-      }
+      s: SparkSession, d: String): (String, String) = {
+    val root = packedTables(s, d) { root =>
+      write(s, d, s"$root/shard_w")
+      val docsDf = graft.core.Tables.documents(s, d)
+        .select("source", "doc_id", "text")
+      // per-source cut at 3/5 of the max doc id: wave 2 appends stay
+      // strictly above every wave-1 doc (the sync append discipline)
+      val cuts = docsDf.groupBy("source")
+        .agg((max("doc_id") * 3L / 5L).as("cut"))
+      val docsT = s"$root/docs"
+      graft.batch.Upsert.mergeByKey(s, docsT,
+        docsDf.join(broadcast(cuts), Seq("source"))
+          .filter(col("doc_id") <= col("cut")).drop("cut"),
+        "source", Seq("doc_id"))
+      sync(s, docsT, "source", s"$root/shard_s")
+      graft.batch.Upsert.mergeByKey(s, docsT,
+        docsDf.join(broadcast(cuts), Seq("source"))
+          .filter(col("doc_id") > col("cut")).drop("cut"),
+        "source", Seq("doc_id"))
+      sync(s, docsT, "source", s"$root/shard_s")
     }
+    (s"$root/shard_w", s"$root/shard_s")
+  }
 
   /** Per-source fill curve of a shard table: sequence count, full
     * sequences, held tokens, per-sequence doc contributions. */

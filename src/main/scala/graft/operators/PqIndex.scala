@@ -33,15 +33,15 @@ import org.apache.spark.sql.functions._
   * pipeline and shares its DuckDB oracle — what the index changes is the
   * probe-time cost, not the answer.
   *
-  * Maintenance mirrors [[IvfIndex]]: for a plain corpus directory the
-  * fingerprint memo rebuilds on change; for a TxnLog-maintained vector
-  * table, [[refresh]] consumes the change data feed — deleted vectors'
+  * Maintenance: for a plain corpus directory the fingerprint memo
+  * rebuilds on change; for a TxnLog-maintained vector table, [[refresh]]
+  * ([[DerivedIndex]]) consumes the change data feed — deleted vectors'
   * codes leave their buckets, net-inserted vectors encode against the
   * PINNED codebook and land in theirs, and only the affected bucket
   * partitions rewrite: O(changes), with a drift threshold that forces a
   * retraining rebuild (a codebook trained long ago quantizes a drifted
   * corpus badly). */
-object PqIndex {
+object PqIndex extends DerivedIndex("codes", "bucket", "vec_id") {
 
   import SimilarityQueries.{PqM, PqSub, PqK}
 
@@ -50,35 +50,15 @@ object PqIndex {
     * still writes only 16 dirs. */
   private[operators] val NumBuckets = 16
 
-  private def codesDir(indexDir: String) = s"$indexDir/codes"
   private def codebookDir(indexDir: String) = s"$indexDir/codebook"
 
   // ----------------------------------------------------------- memoized dir
 
-  /** Built-index memo per (session, corpus dir), keyed on the corpus
-    * fingerprint — same contract as [[IvfIndex.ensureBuilt]]: one build
-    * per corpus state, probes reuse it, a rewrite retires the stale copy. */
-  private val built =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, (String, String)]]())
+  private val built = new CorpusMemo("embeddings", "graft-pq-index")
 
-  def ensureBuilt(s: SparkSession, d: String): String = built.synchronized {
-    val fp = SimilarityQueries.corpusFingerprint(s, d)
-    val m = Option(built.get(s)).getOrElse(Map.empty)
-    m.get(d) match {
-      case Some((oldFp, dir)) if oldFp == fp => dir
-      case stale =>
-        val dir = java.nio.file.Files.createTempDirectory("graft-pq-index").toString
-        build(s, d, dir)
-        stale.foreach { case (_, old) =>
-          val p = new org.apache.hadoop.fs.Path(old)
-          scala.util.Try(
-            p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true))
-        }
-        built.put(s, m.updated(d, (fp, dir)))
-        dir
-    }
-  }
+  /** The index directory for the corpus at `d`, built once per corpus
+    * state ([[CorpusMemo]]) and reused by every probe. */
+  def ensureBuilt(s: SparkSession, d: String): String = built(s, d)(build(s, d, _))
 
   // ------------------------------------------------------- build / encode
 
@@ -137,12 +117,16 @@ object PqIndex {
     * the number of vectors encoded. */
   def build(s: SparkSession, d: String, indexDir: String): Long = {
     val q = SimilarityQueries.quantized(s, d)
-    val cbRows = trainCodebook(s, q)
-    val cb = codebookDf(s, cbRows)
+    write(s, codebookDf(s, trainCodebook(s, q)), q, indexDir)
+    s.read.parquet(dataDir(indexDir)).count()
+  }
+
+  /** Encode `q` against `cb` into the bucketed codes table, and persist
+    * `cb` beside it. */
+  private def write(s: SparkSession, cb: DataFrame, q: DataFrame, indexDir: String): Unit = {
     encode(s, cb, q).write.mode("overwrite")
-      .partitionBy("bucket").parquet(codesDir(indexDir))
+      .partitionBy("bucket").parquet(dataDir(indexDir))
     cb.coalesce(1).write.mode("overwrite").parquet(codebookDir(indexDir))
-    s.read.parquet(codesDir(indexDir)).count()
   }
 
   // --------------------------------------------------------------- probe
@@ -158,7 +142,7 @@ object PqIndex {
       s: SparkSession, probes: DataFrame, indexDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val cb = s.read.parquet(codebookDir(indexDir))
-    val codes = s.read.parquet(codesDir(indexDir))
+    val codes = s.read.parquet(dataDir(indexDir))
     val parts = (0 until PqM).map { j =>
       val subP = probes.select(col("vec_id"),
         expr(s"slice(qv, ${j * PqSub + 1}, $PqSub)").as("pqv"))
@@ -190,33 +174,6 @@ object PqIndex {
 
   // ------------------------------------------------- table-backed variant
 
-  private def metaFile(indexDir: String) =
-    new org.apache.hadoop.fs.Path(s"$indexDir/meta.json")
-
-  private final case class Meta(version: Long, rows: Long)
-
-  private def writeMeta(s: SparkSession, indexDir: String, m: Meta): Unit =
-    // atomic overwrite-rename: an in-place create(overwrite) can tear
-    // mid-write and wedge sync() (see IvfPqIndex.writeMeta)
-    graft.core.AtomicWrite.replaceFile(s, metaFile(indexDir),
-      s"""{"version":${m.version},"rows":${m.rows}}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def readMeta(s: SparkSession, indexDir: String): Meta = {
-    val p = metaFile(indexDir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val txt =
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val o = graft.http.Json.parse(txt).asObj
-    def num(k: String): Long = o(k) match {
-      case graft.http.JNum(n) => n.toLong
-      case other => throw new IllegalStateException(s"pq index meta $k: $other")
-    }
-    Meta(num("version"), num("rows"))
-  }
-
   private def readCodebook(s: SparkSession, indexDir: String): Seq[(Int, Long, Seq[Long])] =
     s.read.parquet(codebookDir(indexDir)).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toSeq)).toSeq
@@ -232,126 +189,24 @@ object PqIndex {
       table: String,
       partCol: String,
       indexDir: String,
-      codebook: Option[Seq[(Int, Long, Seq[Long])]] = None): Long = {
-    val version = graft.core.TxnLog.currentVersion(s, table)
-    val q = IvfIndex.quantizeRows(s,
-      graft.batch.Upsert.readCommitted(s, table, partCol))
-    val cb = codebookDf(s, codebook.getOrElse(trainCodebook(s, q)))
-    encode(s, cb, q).write.mode("overwrite")
-      .partitionBy("bucket").parquet(codesDir(indexDir))
-    cb.coalesce(1).write.mode("overwrite").parquet(codebookDir(indexDir))
-    val n = s.read.parquet(codesDir(indexDir)).count()
-    writeMeta(s, indexDir, Meta(version, n))
-    n
-  }
-
-  /** Scheduled-maintenance entry ([[graft.Maintain]] `pq` mode): build
-    * the table-backed index when none exists at `indexDir`, refresh it
-    * from the change feed otherwise. */
-  def sync(
-      s: SparkSession, table: String, partCol: String,
-      indexDir: String): RefreshStats = {
-    val p = metaFile(indexDir)
-    if (p.getFileSystem(s.sessionState.newHadoopConf()).exists(p))
-      refresh(s, table, partCol, indexDir)
-    else {
-      buildFromTable(s, table, partCol, indexDir)
-      val m = readMeta(s, indexDir)
-      RefreshStats(rebuilt = true, 0L, 0L, 0L, m.version)
+      codebook: Option[Seq[(Int, Long, Seq[Long])]] = None): Long =
+    buildSnapshot(s, table, partCol, indexDir) { src =>
+      val q = IvfIndex.quantizeRows(s, src)
+      write(s, codebookDf(s, codebook.getOrElse(trainCodebook(s, q))), q, indexDir)
     }
-  }
 
-  /** What a refresh read and rewrote; `rebuilt = true` means drift or a
-    * suspected torn swap forced a full [[buildFromTable]] instead. */
-  final case class RefreshStats(
-      rebuilt: Boolean, changedRows: Long, bucketsTouched: Long,
-      fromVersion: Long, toVersion: Long)
+  protected def rebuild(
+      s: SparkSession, table: String, partCol: String, indexDir: String,
+      pinned: Boolean): Unit =
+    buildFromTable(s, table, partCol, indexDir,
+      if (pinned) scala.util.Try(readCodebook(s, indexDir)).toOption else None)
 
-  /** Catch the codes table up to the source table's tip by consuming the
-    * CHANGE FEED — never a corpus re-encode. Removed/updated vectors'
-    * codes leave their hash buckets, net-inserted vectors encode against
-    * the pinned codebook, and only the AFFECTED bucket partitions rewrite
-    * (staging + per-bucket swap). The codebook stays fixed, so refreshed
-    * state is IDENTICAL to a rebuild pinned to the same codebook (spec'd
-    * parity); accumulated drift past `maxStaleFraction` retrains via
-    * [[buildFromTable]] instead. Same torn-swap triage as
-    * [[IvfIndex.refresh]]: staging debris NEWER than the recorded meta
-    * version means a prior refresh may have died mid-swap with the staged
-    * copy a bucket's only surviving pre-image — recover by a pinned
-    * rebuild, never by sweeping. */
-  def refresh(
-      s: SparkSession,
-      table: String,
-      partCol: String,
-      indexDir: String,
-      maxStaleFraction: Double = 0.2): RefreshStats = {
-    import graft.batch.ChangeFeed
-    val meta = readMeta(s, indexDir)
-    val tip = graft.core.TxnLog.currentVersion(s, table)
-    val idxFs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    val debris = idxFs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
-      .filter(_.getPath.getName.startsWith(".refresh-"))
-    val suspectSwap = debris.exists { st =>
-      scala.util.Try(st.getPath.getName.stripPrefix(".refresh-v").toLong)
-        .toOption.forall(_ > meta.version)
-    }
-    if (suspectSwap) {
-      val pinned = scala.util.Try(readCodebook(s, indexDir)).toOption
-      buildFromTable(s, table, partCol, indexDir, pinned)
-      debris.foreach(st => idxFs.delete(st.getPath, true))
-      return RefreshStats(rebuilt = true, 0L, 0L, meta.version, tip)
-    }
-    debris.foreach(st => idxFs.delete(st.getPath, true))
-    if (tip <= meta.version)
-      return RefreshStats(rebuilt = false, 0L, 0L, meta.version, tip)
-    val changes = ChangeFeed.readChanges(s, table, partCol,
-      meta.version, Some(tip)).cache()
-    try {
-      val changedIds = changes.select("vec_id").distinct()
-      val changedCount = changedIds.count()
-      if (changedCount > maxStaleFraction * math.max(1L, meta.rows)) {
-        buildFromTable(s, table, partCol, indexDir) // retrain: drift too large
-        return RefreshStats(rebuilt = true, changedCount, 0L, meta.version, tip)
-      }
-      val cb = codebookDf(s, readCodebook(s, indexDir))
-      // net-new vectors: the newest change leg per vec_id, kept if insert
-      val newest = Window.partitionBy("vec_id")
-        .orderBy(col(ChangeFeed.CommitVersionCol).desc,
-          col(ChangeFeed.ChangeTypeCol).desc)
-      val netInserted = encode(s, cb, IvfIndex.quantizeRows(s,
-        changes.withColumn("_rn", row_number().over(newest))
-          .filter(col("_rn") === 1)
-          .filter(col(ChangeFeed.ChangeTypeCol) === "insert")))
-      // affected buckets: hash homes of every changed id (old and new codes
-      // share the bucket — vec_id is the key) — bounded by NumBuckets
-      val affected = changedIds
-        .select(pmod(col("vec_id"), lit(NumBuckets.toLong)).as("bucket"))
-        .distinct().collect().map(_.getLong(0)).sorted
-      if (affected.nonEmpty) {
-        val survivors = s.read.parquet(codesDir(indexDir))
-          .filter(col("bucket").isin(affected.map(Long.box).toIndexedSeq: _*))
-          .select(col("vec_id"), col("codes"),
-            col("bucket").cast("long").as("bucket"))
-          .join(changedIds, Seq("vec_id"), "left_anti")
-        val staging = s"$indexDir/.refresh-v$tip"
-        survivors.unionByName(netInserted)
-          .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        val fs = new org.apache.hadoop.fs.Path(codesDir(indexDir))
-          .getFileSystem(s.sessionState.newHadoopConf())
-        affected.foreach { b =>
-          val live = new org.apache.hadoop.fs.Path(s"${codesDir(indexDir)}/bucket=$b")
-          val staged = new org.apache.hadoop.fs.Path(s"$staging/bucket=$b")
-          fs.delete(live, true)
-          if (fs.exists(staged) && !fs.rename(staged, live))
-            throw new java.io.IOException(s"pq refresh: failed to install $staged")
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      }
-      writeMeta(s, indexDir, Meta(tip,
-        s.read.parquet(codesDir(indexDir)).count()))
-      RefreshStats(rebuilt = false, changedCount, affected.length.toLong,
-        meta.version, tip)
-    } finally changes.unpersist()
-  }
+  /** Net-inserted vectors encode against the pinned codebook; the touched
+    * buckets are the hash homes of every changed id (a vector's old and
+    * new codes share its bucket — `vec_id` is the key), bounded by
+    * [[NumBuckets]]. */
+  protected def delta(
+      s: SparkSession, indexDir: String, d: DerivedIndex.Delta): (DataFrame, DataFrame) =
+    (d.changedIds.select(pmod(col("vec_id"), lit(NumBuckets.toLong))),
+      encode(s, codebookDf(s, readCodebook(s, indexDir)), IvfIndex.quantizeRows(s, d.inserted)))
 }

@@ -262,29 +262,12 @@ object SimilarityQueries extends QueryModule {
         d => m.view.filterKeys(k => k != d && !k.startsWith(s"$d#")).toMap))
     }
 
-  /** Sorted (path, length, modTime) of the corpus root's TOP-LEVEL entries
-    * — changes whenever the corpus is rewritten. Deliberately ONE
-    * `listStatus` call, not a recursive walk: this runs before every memo
-    * lookup, and O(files) metadata RPCs per query on an object store would
-    * tax the hot path the memo exists to keep cheap. Sufficient because a
-    * parquet rewrite replaces files directly under the root (new names /
-    * lengths / mtimes), and adding or removing entries inside a nested
-    * subdirectory updates that subdirectory's own mtime. */
-  private[operators] def corpusFingerprint(s: SparkSession, d: String): String = {
-    val root = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(root)
-    val entries = if (st.isDirectory) fs.listStatus(root).toSeq else Seq(st)
-    entries.map(e => s"${e.getPath.getName}:${e.getLen}:${e.getModificationTime}")
-      .sorted.mkString("|")
-  }
-
   /** The memoized codebook rows for `d`, training if absent or if the
     * corpus fingerprint changed (package-visible for the retrain spec). */
   private[graft] def codebookRows(
       s: SparkSession, d: String,
       variant: String = "plain"): Seq[(Long, Seq[Long])] = {
-    val fp = corpusFingerprint(s, d)
+    val fp = CorpusMemo.fingerprint(s, d, "embeddings")
     val key = s"$d#$variant"
     codebooks.synchronized {
       val m = Option(codebooks.get(s)).getOrElse(Map.empty)

@@ -23,21 +23,9 @@ import graft.batch.{TypeWidening, Upsert}
   */
 object WidenQueries extends QueryModule {
 
-  // one widened table per (corpus fingerprint), the
-  // PackWriter.ensurePacked memo discipline: bench rounds past the
-  // first measure the mixed-width READ, not the build
-  private val built =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, (String, String)]]())
-
-  private def fingerprint(s: SparkSession, d: String): String = {
-    val root = new org.apache.hadoop.fs.Path(s"$d/orders.parquet")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(root)
-    val entries = if (st.isDirectory) fs.listStatus(root).toSeq else Seq(st)
-    entries.map(e => s"${e.getPath.getName}:${e.getLen}:${e.getModificationTime}")
-      .sorted.mkString("|")
-  }
+  // one widened table per orders state ([[CorpusMemo]]): bench rounds
+  // past the first measure the mixed-width READ, not the build
+  private val built = new CorpusMemo("orders", "graft-widen")
 
   /** Build (once per corpus state) the widened table: wave 1 seeds every
     * priority partition with INT `v`; the column widens to BIGINT (pure
@@ -47,40 +35,25 @@ object WidenQueries extends QueryModule {
     * mixed-width state actually holds, so the query provably exercises
     * the upcast-union legs every round. */
   private[graft] def ensureWidened(s: SparkSession, d: String): String =
-    built.synchronized {
-      val fp = fingerprint(s, d)
-      val m = Option(built.get(s)).getOrElse(Map.empty[String, (String, String)])
-      m.get(d) match {
-        case Some((oldFp, t)) if oldFp == fp => t
-        case stale =>
-          val root = java.nio.file.Files
-            .createTempDirectory("graft-widen").toString
-          val t = s"$root/orders_w"
-          val orders = graft.core.Tables.orders(s, d)
-            .select(col("o_orderpriority"), col("o_orderkey"),
-              col("o_custkey").cast(IntegerType).as("v"))
-          Upsert.mergeByKey(s, t,
-            orders.filter(col("o_orderkey") % 2 === 0),
-            "o_orderpriority", Seq("o_orderkey"))
-          TypeWidening.widen(s, t, "o_orderpriority", "v", LongType)
-          Upsert.mergeByKey(s, t,
-            orders.filter(col("o_orderkey") % 2 === 1 &&
-                (col("o_orderpriority").startsWith("1") ||
-                  col("o_orderpriority").startsWith("2")))
-              .withColumn("v", col("v").cast(LongType) + 3000000000L),
-            "o_orderpriority", Seq("o_orderkey"))
-          require(TypeWidening.narrowParts(s, t, "o_orderpriority").nonEmpty,
-            "widened oracle table must hold MIXED widths — the untouched " +
-              "partitions stay physically INT until widenmat")
-          stale.foreach { case (_, old) =>
-            val p = new org.apache.hadoop.fs.Path(old).getParent
-            scala.util.Try(
-              p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true))
-          }
-          built.put(s, m.updated(d, (fp, t)))
-          t
-      }
-    }
+    built(s, d) { root =>
+      val t = s"$root/orders_w"
+      val orders = graft.core.Tables.orders(s, d)
+        .select(col("o_orderpriority"), col("o_orderkey"),
+          col("o_custkey").cast(IntegerType).as("v"))
+      Upsert.mergeByKey(s, t,
+        orders.filter(col("o_orderkey") % 2 === 0),
+        "o_orderpriority", Seq("o_orderkey"))
+      TypeWidening.widen(s, t, "o_orderpriority", "v", LongType)
+      Upsert.mergeByKey(s, t,
+        orders.filter(col("o_orderkey") % 2 === 1 &&
+            (col("o_orderpriority").startsWith("1") ||
+              col("o_orderpriority").startsWith("2")))
+          .withColumn("v", col("v").cast(LongType) + 3000000000L),
+        "o_orderpriority", Seq("o_orderkey"))
+      require(TypeWidening.narrowParts(s, t, "o_orderpriority").nonEmpty,
+        "widened oracle table must hold MIXED widths — the untouched " +
+          "partitions stay physically INT until widenmat")
+    } + "/orders_w"
 
   val queries: Map[String, Q] = Map(
     "widen_mixed_agg" -> ((s: SparkSession, d: String) =>

@@ -79,7 +79,7 @@ class DedupIndexSpec extends SparkSpec {
     Upsert.deleteByKey(spark, t,
       docsDf(Seq(3L)).select("src", "doc_id"), "src", Seq("doc_id"))
     val st = DedupIndex.refresh(spark, t, "src", idx)
-    assert(!st.rebuilt && st.changedDocs == 4L, s"got $st")
+    assert(!st.rebuilt && st.changedRows == 4L, s"got $st")
     // content parity: the refreshed sidecar equals a from-scratch rebuild
     val idx2 = Files.createTempDirectory("dedupidx2-re").toString
     DedupIndex.buildFromTable(spark, t, "src", idx2)
@@ -94,8 +94,8 @@ class DedupIndexSpec extends SparkSpec {
     val changed = before.keySet.union(after.keySet).count { p =>
       before.get(p) != after.get(p)
     }
-    assert(changed <= st.prefixesTouched,
-      s"$changed prefix dirs changed, refresh reported ${st.prefixesTouched}")
+    assert(changed <= st.partitionsTouched,
+      s"$changed prefix dirs changed, refresh reported ${st.partitionsTouched}")
     assert(before.keySet.intersect(after.keySet).exists(p =>
         before(p) == after(p)),
       "at least one untouched prefix must remain byte-identical")
@@ -219,8 +219,9 @@ class DedupIndexSpec extends SparkSpec {
     val idx = Files.createTempDirectory("dedupidx4-idx").toString
     val s1 = DedupIndex.sync(spark, t, "src", idx)
     assert(s1.rebuilt, "first sync must build")
+    assert(s1.changedRows == 0L, s"a first build reads nothing from the feed: $s1")
     assert(new java.io.File(s"$idx/meta.json").isFile)
     val s2 = DedupIndex.sync(spark, t, "src", idx)
-    assert(!s2.rebuilt && s2.changedDocs == 0L, s"no-op sync at the tip: $s2")
+    assert(!s2.rebuilt && s2.changedRows == 0L, s"no-op sync at the tip: $s2")
   }
 }

@@ -115,8 +115,8 @@ class IvfIndexSpec extends SparkSpec {
     val after = cellFiles(idx1)
     val touched = (before.keySet ++ after.keySet)
       .count(k => before.get(k) != after.get(k))
-    assert(touched <= stats.cellsTouched,
-      s"file churn $touched must be bounded by cellsTouched ${stats.cellsTouched}")
+    assert(touched <= stats.partitionsTouched,
+      s"file churn $touched must be bounded by partitionsTouched ${stats.partitionsTouched}")
     assert(touched < before.size,
       s"refresh must not rewrite the whole index ($touched of ${before.size} cells)")
 

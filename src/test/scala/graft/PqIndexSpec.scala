@@ -107,8 +107,8 @@ class PqIndexSpec extends SparkSpec {
     val after = bucketFiles(idx1)
     val touched = (before.keySet ++ after.keySet)
       .count(k => before.get(k) != after.get(k))
-    assert(touched <= stats.bucketsTouched,
-      s"file churn $touched must be bounded by bucketsTouched ${stats.bucketsTouched}")
+    assert(touched <= stats.partitionsTouched,
+      s"file churn $touched must be bounded by partitionsTouched ${stats.partitionsTouched}")
     assert(touched < before.size,
       s"refresh must not rewrite the whole codes table ($touched of ${before.size})")
 
