@@ -89,27 +89,17 @@ object ChangeFeed {
       fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
     val all = TxnLog.commitsSince(spark, table, 0L)
-    val tip = all.lastOption.map(_.version).getOrElse(0L)
-    val to = toVersion.getOrElse(tip)
-    if (to > tip)
-      throw new IllegalStateException(
-        s"change feed: toVersion $to is beyond the current tip v$tip")
+    val to = toVersion.getOrElse(all.lastOption.map(_.version).getOrElse(0L))
+    // manifest-horizon check: a fromVersion below the retained range would
+    // silently skip the truncated commits (the filter below only sees
+    // survivors) — fail loudly instead of feeding a partial delta; a
+    // lagging consumer must re-bootstrap from a snapshot. fromVersion = 0
+    // means "from the first retained commit", i.e. the horizon itself.
+    Upsert.requireRetained(all, "change feed",
+      if (fromVersion > 0) fromVersion
+      else all.headOption.map(_.version - 1).getOrElse(0L), to)
     require(fromVersion <= to,
       s"change feed: fromVersion $fromVersion must be <= toVersion $to")
-    // manifest-horizon check: TxnLog.truncate drops the oldest commit
-    // files, and a fromVersion below the retained range would silently
-    // skip the truncated commits (the filter below only sees survivors).
-    // Mirror readAsOf's contract: fail loudly instead of feeding a partial
-    // delta — a lagging consumer must re-bootstrap from a snapshot.
-    // fromVersion = 0 stays valid by definition ("from the first retained
-    // commit"); any positive cursor must cover every truncated version.
-    val oldest = all.headOption.map(_.version).getOrElse(0L)
-    if (fromVersion > 0 && fromVersion < oldest - 1)
-      throw new IllegalStateException(
-        s"change feed: fromVersion $fromVersion predates the manifest " +
-          s"horizon (oldest retained commit is v$oldest after log " +
-          "truncation) — intervening commits are gone; re-bootstrap the " +
-          "consumer from a snapshot")
     val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // upsert-end commits rewrite partitions; dv-end commits delete rows

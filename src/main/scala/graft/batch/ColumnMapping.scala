@@ -111,41 +111,49 @@ object ColumnMapping {
     * churn. */
   def rename(spark: SparkSession, table: String, from: String, to: String): Unit = {
     requirePlain(to)
-    val m = mapping(spark, table)
     val df = spark.read.parquet(table)
     val physCols = df.columns.toSeq
-    val logicalCols = physCols.flatMap(p => logicalOf(m, p))
-    require(logicalCols.contains(from),
-      s"no column $from on $table (have: ${logicalCols.sorted.mkString(", ")})")
-    require(!logicalCols.contains(to), s"column $to already exists on $table")
-    val phys = physicalName(m, from)
-    refusePartitionColumn(df, from, phys, "rename")
-    refuseReferenced(spark, table, from, phys, "rename")
-    // `to` may equal the column's OWN physical name (renaming back);
-    // colliding with another column's physical or a dropped physical would
-    // make the logical→physical translation ambiguous or resurrecting
-    require(!physCols.contains(to) || to == phys,
-      s"$to collides with the physical name of another column of $table")
-    require(m.get(to).forall(_.nonEmpty),
-      s"$to is the physical name of a DROPPED column of $table")
-    val next = if (to == phys) m - phys else m + (phys -> to)
+    // validated against the map each attempt reads (a racing edit is
+    // re-checked), and once up front: a refused DDL declares no feature
+    def renamed(m: Map[String, String]): Map[String, String] = {
+      val logicalCols = physCols.flatMap(p => logicalOf(m, p))
+      require(logicalCols.contains(from),
+        s"no column $from on $table (have: ${logicalCols.sorted.mkString(", ")})")
+      require(!logicalCols.contains(to), s"column $to already exists on $table")
+      val phys = physicalName(m, from)
+      refusePartitionColumn(df, from, phys, "rename")
+      refuseReferenced(spark, table, from, phys, "rename")
+      // `to` may equal the column's OWN physical name (renaming back);
+      // colliding with another column's physical or a dropped physical would
+      // make the logical→physical translation ambiguous or resurrecting
+      require(!physCols.contains(to) || to == phys,
+        s"$to collides with the physical name of another column of $table")
+      require(m.get(to).forall(_.nonEmpty),
+        s"$to is the physical name of a DROPPED column of $table")
+      if (to == phys) m - phys else m + (phys -> to)
+    }
+    renamed(mapping(spark, table))
     TableFeatures.declare(spark, table, TableFeatures.ColumnMapping)
-    TableMeta.write(spark, table, FilePrefix, next)
+    TableMeta.update(spark, table, FilePrefix)(renamed)
   }
 
   /** Drop logical column `name` — metadata only, zero file churn. Old
     * files keep the bytes; every read path hides them. */
   def drop(spark: SparkSession, table: String, name: String): Unit = {
-    val m = mapping(spark, table)
     val df = spark.read.parquet(table)
-    val logicalCols = df.columns.toSeq.flatMap(p => logicalOf(m, p))
-    require(logicalCols.contains(name),
-      s"no column $name on $table (have: ${logicalCols.sorted.mkString(", ")})")
-    val phys = physicalName(m, name)
-    refusePartitionColumn(df, name, phys, "drop")
-    refuseReferenced(spark, table, name, phys, "drop")
+    // validated per attempt and up front, as in [[rename]]
+    def dropped(m: Map[String, String]): Map[String, String] = {
+      val logicalCols = df.columns.toSeq.flatMap(p => logicalOf(m, p))
+      require(logicalCols.contains(name),
+        s"no column $name on $table (have: ${logicalCols.sorted.mkString(", ")})")
+      val phys = physicalName(m, name)
+      refusePartitionColumn(df, name, phys, "drop")
+      refuseReferenced(spark, table, name, phys, "drop")
+      m + (phys -> "")
+    }
+    dropped(mapping(spark, table))
     TableFeatures.declare(spark, table, TableFeatures.ColumnMapping)
-    TableMeta.write(spark, table, FilePrefix, m + (phys -> ""))
+    TableMeta.update(spark, table, FilePrefix)(dropped)
   }
 
   private def requirePlain(name: String): Unit =

@@ -53,33 +53,31 @@ object Constraints {
         s"cannot add constraint $name CHECK ($exprSql): existing rows " +
           s"violate it (first: ${violating.head})")
     TableFeatures.declare(spark, table, TableFeatures.CheckConstraints)
-    write(spark, table, list(spark, table) + (name -> exprSql))
+    TableMeta.update(spark, table, FilePrefix)(_ + (name -> exprSql))
   }
 
   /** Remove a constraint; unknown names fail loudly (a typo'd drop that
     * silently "succeeds" leaves the caller believing enforcement ended). */
-  def drop(spark: SparkSession, table: String, name: String): Unit = {
-    val cur = list(spark, table)
-    require(cur.contains(name),
-      s"no constraint named $name on $table (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
-    write(spark, table, cur - name)
-  }
+  def drop(spark: SparkSession, table: String, name: String): Unit =
+    TableMeta.update(spark, table, FilePrefix) { cur =>
+      require(cur.contains(name),
+        s"no constraint named $name on $table (have: ${cur.keys.toSeq.sorted.mkString(", ")})")
+      cur - name
+    }
 
   /** The registered constraints, name → SQL expression. */
   def list(spark: SparkSession, table: String): Map[String, String] =
     TableMeta.read(spark, table, FilePrefix)
-
-  private def write(
-      spark: SparkSession, table: String, all: Map[String, String]): Unit =
-    TableMeta.write(spark, table, FilePrefix, all)
 }
 
 /** Versioned max-wins KB-scale metadata registries under
   * `<table>/_graft_meta/` (the [[graft.streaming.ChangeFeedStream]]
-  * cursor pattern): a writer creates `<prefix><N+1>.json` create-exclusive
-  * (racing DDL is loud), then best-effort sweeps older versions — no
-  * crash window ever leaves the registry empty, and a reader always
-  * finds the newest complete set. */
+  * cursor pattern): a writer creates `<prefix><N+1>.json` create-exclusive,
+  * then best-effort sweeps older versions — no crash window ever leaves
+  * the registry empty, and a reader always finds the newest complete set.
+  * Edits of the CURRENT set go through [[update]], which installs exactly
+  * the version after the one it read, so a racing edit is re-read and
+  * re-applied, never silently erased; a racing blind [[write]] is loud. */
 private[batch] object TableMeta {
 
   private def metaDir(table: String) = new Path(s"$table/_graft_meta")
@@ -121,13 +119,45 @@ private[batch] object TableMeta {
     (v, Json.parse(txt).asObj.map { case (k, x) => k -> x.str })
   }
 
+  /** Blind replace: `all` becomes the next version whatever the current
+    * set holds. A concurrent writer of the same version loses loudly. */
   def write(spark: SparkSession, table: String, prefix: String,
       all: Map[String, String]): Unit = {
+    val (v, _) = latest(spark, table, prefix)
+    if (!install(spark, table, prefix, v, all))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+        s"${metaDir(table)}/$prefix${v + 1}.json: a concurrent writer " +
+          "claimed this registry version first")
+  }
+
+  /** Read-modify-write: `f` maps the newest set, read at version v, to
+    * the next one, which installs as exactly v + 1 — never on top of a
+    * racer's v + 1, whose edit would then be silently lost. A lost race
+    * re-reads and re-applies `f`, so validation inside `f` re-checks
+    * against the racer's edit; fails loudly after 50 attempts. Returns
+    * whether a version was installed (false: `f` changed nothing). */
+  def update(spark: SparkSession, table: String, prefix: String)(
+      f: Map[String, String] => Map[String, String]): Boolean = {
+    var attempts = 0
+    while (attempts < 50) {
+      attempts += 1
+      val (v, cur) = latest(spark, table, prefix)
+      val next = f(cur)
+      if (next == cur) return false
+      if (install(spark, table, prefix, v, next)) return true
+    }
+    throw new IllegalStateException(
+      s"registry $prefix* on $table still contended after $attempts attempts")
+  }
+
+  /** Install `all` as version `v + 1`, exclusively; false if a concurrent
+    * writer installed that version first. */
+  private def install(spark: SparkSession, table: String, prefix: String,
+      v: Long, all: Map[String, String]): Boolean = {
     val dir = metaDir(table)
     val conf = spark.sessionState.newHadoopConf()
     val fs = dir.getFileSystem(conf)
     fs.mkdirs(dir)
-    val (v, _) = latest(spark, table, prefix)
     val next = new Path(dir, s"$prefix${v + 1}.json")
     // Full content lands in a hidden temp sibling, then RENAMES into the
     // versioned name: the rename is atomic AND exclusive (fails on an
@@ -135,7 +165,7 @@ private[batch] object TableMeta {
     // half-written registry file — a plain create-then-write tore in the
     // wild (an identity high-water-mark read racing a concurrent
     // allocator's write parsed "unexpected end of input") — and a
-    // concurrent writer of the same version still loses the race loudly.
+    // concurrent writer of the same version still loses the race.
     val tmp = new Path(dir,
       s".$prefix${v + 1}-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
     val out = fs.create(tmp, true)
@@ -155,8 +185,7 @@ private[batch] object TableMeta {
       }
     if (!renamed) {
       fs.delete(tmp, false)
-      throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-        s"$next: a concurrent writer claimed this registry version first")
+      return false
     }
     // older versions are debris once the new one exists; their removal is
     // best-effort (a crash here just leaves max-wins extras)
@@ -164,5 +193,6 @@ private[batch] object TableMeta {
       versionOf(prefix, st.getPath.getName).filter(_ <= v)
         .foreach(_ => fs.delete(st.getPath, false))
     }
+    true
   }
 }

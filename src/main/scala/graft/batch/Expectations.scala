@@ -59,18 +59,17 @@ object Expectations {
         .queryExecution.analyzed).isSuccess,
       s"expectation $name EXPECT ($exprSql) does not analyze against " +
         s"$table (columns: ${df.columns.sorted.mkString(", ")})")
-    TableMeta.write(spark, table, FilePrefix,
-      list(spark, table) + (name -> exprSql))
+    TableMeta.update(spark, table, FilePrefix)(_ + (name -> exprSql))
   }
 
   /** Remove an expectation; unknown names fail loudly. */
-  def drop(spark: SparkSession, table: String, name: String): Unit = {
-    val cur = list(spark, table)
-    require(cur.contains(name),
-      s"no expectation named $name on $table (have: " +
-        s"${cur.keys.toSeq.sorted.mkString(", ")})")
-    TableMeta.write(spark, table, FilePrefix, cur - name)
-  }
+  def drop(spark: SparkSession, table: String, name: String): Unit =
+    TableMeta.update(spark, table, FilePrefix) { cur =>
+      require(cur.contains(name),
+        s"no expectation named $name on $table (have: " +
+          s"${cur.keys.toSeq.sorted.mkString(", ")})")
+      cur - name
+    }
 
   /** The registered expectations, name → SQL expression. */
   def list(spark: SparkSession, table: String): Map[String, String] =

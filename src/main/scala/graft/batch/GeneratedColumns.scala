@@ -54,18 +54,17 @@ object GeneratedColumns {
         s"cannot register $column GENERATED ALWAYS AS ($exprSql): existing " +
           s"rows do not match the expression (first: ${mismatched.head})")
     TableFeatures.declare(spark, table, TableFeatures.GeneratedColumns)
-    TableMeta.write(spark, table, FilePrefix,
-      list(spark, table) + (column -> exprSql))
+    TableMeta.update(spark, table, FilePrefix)(_ + (column -> exprSql))
   }
 
   /** Unregister; unknown columns fail loudly. */
-  def drop(spark: SparkSession, table: String, column: String): Unit = {
-    val cur = list(spark, table)
-    require(cur.contains(column),
-      s"no generated column $column on $table (have: " +
-        s"${cur.keys.toSeq.sorted.mkString(", ")})")
-    TableMeta.write(spark, table, FilePrefix, cur - column)
-  }
+  def drop(spark: SparkSession, table: String, column: String): Unit =
+    TableMeta.update(spark, table, FilePrefix) { cur =>
+      require(cur.contains(column),
+        s"no generated column $column on $table (have: " +
+          s"${cur.keys.toSeq.sorted.mkString(", ")})")
+      cur - column
+    }
 
   /** The registered generation expressions, column → SQL. */
   def list(spark: SparkSession, table: String): Map[String, String] =

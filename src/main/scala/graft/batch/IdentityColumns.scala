@@ -125,9 +125,12 @@ object IdentityColumns {
       step: Long = 1L): Unit = {
     validateDeclaration(spark, table, column, step)
     TableFeatures.declare(spark, table, TableFeatures.Identity)
-    TableMeta.write(spark, table, FilePrefix,
-      list(spark, table).map { case (c, s) => c -> s"${s.start}:${s.step}" } +
-        (column -> s"$start:$step"))
+    TableMeta.update(spark, table, FilePrefix) { cur =>
+      // re-checked against a racing declaration of the same column
+      require(!cur.contains(column),
+        s"$column is already an identity column of $table")
+      cur + (column -> s"$start:$step")
+    }
   }
 
   /** The registration-time invariants, check-only (no writes): shared by
@@ -150,14 +153,13 @@ object IdentityColumns {
 
   /** Unregister; unknown columns fail loudly. Allocation state is kept —
     * re-adding the column resumes past the old high-water mark. */
-  def drop(spark: SparkSession, table: String, column: String): Unit = {
-    val cur = list(spark, table)
-    require(cur.contains(column),
-      s"no identity column $column on $table (have: " +
-        s"${cur.keys.toSeq.sorted.mkString(", ")})")
-    TableMeta.write(spark, table, FilePrefix,
-      (cur - column).map { case (c, s) => c -> s"${s.start}:${s.step}" })
-  }
+  def drop(spark: SparkSession, table: String, column: String): Unit =
+    TableMeta.update(spark, table, FilePrefix) { cur =>
+      require(cur.contains(column),
+        s"no identity column $column on $table (have: " +
+          s"${cur.keys.toSeq.sorted.mkString(", ")})")
+      cur - column
+    }
 
   /** The registered identity columns, column → spec. */
   def list(spark: SparkSession, table: String): Map[String, IdentitySpec] =

@@ -131,9 +131,7 @@ object LiquidClustering {
     val dvPairs = DeletionVectors.pairsAsOf(spark, table, Long.MaxValue, allCommits)
     val dvFiles = Upsert.dvTargetFiles(dvPairs)
 
-    def listAllDirs(): Seq[String] = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partColP="))
-      .map(_.getPath.getName).sorted.toSeq
+    def listAllDirs(): Seq[String] = Upsert.liveDirNames(fs, table, partColP)
 
     val lastV = state.get(VersionKey).map(_.toLong)
     // the log vouches for the gap ONLY if retained history reaches back to

@@ -105,7 +105,7 @@ object ShallowClone {
     // (the clone does not exist yet, so this one probe resolves the
     // source's LIVE registry — at create time that IS the pinned state
     // the copy below will carry)
-    Upsert.readAsOfPhysical(spark, src, pinned, partColP,
+    Upsert.snapshotPhysical(spark, src, partColP, Some(pinned),
       TypeWidening.of(spark, src, TableFeatures.features(spark, src)))
     fs.mkdirs(dstPath)
     // registries carry over verbatim, exactly like deep clone (the
@@ -180,7 +180,7 @@ object ShallowClone {
     require(partColP == m("srcPartCol"),
       s"shallow clone $table is partitioned by ${m("srcPartCol")}, not $partColP")
     val localized = localizedParts(spark, table, partColP)
-    val remote = Upsert.readAsOfPhysical(spark, src, pinned, partColP,
+    val remote = Upsert.snapshotPhysical(spark, src, partColP, Some(pinned),
         cloneWidenings(spark, table))
       .filter(!col(partColP).cast("string")
         .isin(localized.toSeq.sorted: _*))
@@ -192,8 +192,8 @@ object ShallowClone {
       // to the clone's own dirs too: a pre-pin source widening means
       // localized copies can mix widths exactly like the source's
       // partitions did at the pin
-      Upsert.readCommittedPhysical(spark, table, partColP,
-          widenings = cloneWidenings(spark, table))
+      Upsert.snapshotPhysical(spark, table, partColP, None,
+          cloneWidenings(spark, table))
         .unionByName(remote, allowMissingColumns = true)
   }
 
@@ -203,10 +203,8 @@ object ShallowClone {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Set.empty
-    fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partColP="))
-      .map(st => Upsert.unescape(st.getPath.getName, partColP))
-      .toSet
+    Upsert.liveDirNames(fs, table, partColP)
+      .map(Upsert.unescape(_, partColP)).toSet
   }
 
   /** Copy-on-write localization: install the pinned source slice of each
@@ -226,7 +224,7 @@ object ShallowClone {
     val (src, pinned) = (m("source"), m("sourceVersion").toLong)
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(table).getFileSystem(conf)
-    val remote = Upsert.readAsOfPhysical(spark, src, pinned, partColP,
+    val remote = Upsert.snapshotPhysical(spark, src, partColP, Some(pinned),
       cloneWidenings(spark, table))
     val already = localizedParts(spark, table, partColP)
     val want = parts.distinct.filterNot(already)
@@ -364,7 +362,7 @@ object ShallowClone {
     else
       // a widened mixed-width source needs its per-dir upcast legs even
       // for this scoped probe (schema inference runs at DataFrame build)
-      Upsert.readAsOfPhysical(spark, src, pinned, partColP,
+      Upsert.snapshotPhysical(spark, src, partColP, Some(pinned),
           cloneWidenings(spark, table))
         .filter(col(partColP).cast("string").isin(remote.toSeq.sorted: _*))
         .select(col(partColP).cast("string")).distinct()
@@ -386,7 +384,7 @@ object ShallowClone {
 
   private[batch] def registerRef(
       spark: SparkSession, src: String, dst: String, pinned: Long): Unit =
-    updateRefs(spark, src)(_ + (dst -> pinned.toString))
+    TableMeta.update(spark, src, RefsPrefix)(_ + (dst -> pinned.toString))
 
   /** Release `dst`'s pin on its source (called by the feature drop after
     * graduation). Best-effort against a vanished source: the pin dies
@@ -394,27 +392,8 @@ object ShallowClone {
   private[batch] def releaseRef(spark: SparkSession, dst: String): Unit = {
     val src = TableMeta.read(spark, dst, MetaPrefix).get("source")
     src.foreach { s =>
-      scala.util.Try(updateRefs(spark, s)(_ - dst)); ()
+      scala.util.Try(TableMeta.update(spark, s, RefsPrefix)(_ - dst)); ()
     }
-  }
-
-  private def updateRefs(spark: SparkSession, src: String)(
-      f: Map[String, String] => Map[String, String]): Unit = {
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      val cur = TableMeta.read(spark, src, RefsPrefix)
-      val next = f(cur)
-      if (next == cur) return
-      try {
-        TableMeta.write(spark, src, RefsPrefix, next)
-        return
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => // retry
-      }
-    }
-    throw new IllegalStateException(
-      s"clone-ref registry on $src still contended after $attempts attempts")
   }
 
   /** The LIVE pins on `src` (stale refs — clone dir gone, or no longer a
@@ -429,7 +408,7 @@ object ShallowClone {
       p.getFileSystem(conf).exists(p) && isShallow(spark, dst)
     }
     if (stale.nonEmpty)
-      scala.util.Try(updateRefs(spark, src)(_ -- stale.keys))
+      scala.util.Try(TableMeta.update(spark, src, RefsPrefix)(_ -- stale.keys))
     live.values.map(_.toLong).toSeq
   }
 

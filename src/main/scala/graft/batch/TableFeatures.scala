@@ -91,29 +91,16 @@ object TableFeatures {
   /** Declare several features in one registry read/write (the merge hot
     * path declares its base set per call; this keeps that one listing).
     * Declaration is NOT DDL: two concurrent merges both declaring the
-    * base set must both succeed, so a lost create-exclusive race re-reads
-    * and retries (monotone — features only accumulate, so the loser's
-    * re-read usually finds the winner already declared everything). */
+    * base set must both succeed — [[TableMeta.update]] re-reads and
+    * retries a lost race (monotone — features only accumulate, so the
+    * loser's re-read usually finds the winner already declared everything). */
   def declareAll(spark: SparkSession, table: String, feats: Seq[String]): Unit = {
     val want = feats.map { f =>
       f -> Supported.getOrElse(f, throw new IllegalArgumentException(
         s"cannot declare unknown feature $f (this build supports: " +
           s"${Supported.keys.toSeq.sorted.mkString(", ")})"))
     }.toMap
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      val cur = features(spark, table)
-      if (want.forall { case (k, v) => cur.get(k).contains(v) }) return
-      try {
-        TableMeta.write(spark, table, Prefix, cur ++ want)
-        return
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => // racer won
-      }
-    }
-    throw new IllegalStateException(
-      s"feature declaration on $table still contended after $attempts attempts")
+    TableMeta.update(spark, table, Prefix)(_ ++ want)
   }
 
   /** Drop `feature` from `table`'s declaration — Delta's `ALTER TABLE …
@@ -136,27 +123,17 @@ object TableFeatures {
         s"${Supported.keys.toSeq.sorted.mkString(", ")})")
     require(features(spark, table).contains(feature),
       s"$table does not declare feature $feature — nothing to drop")
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      val cur = features(spark, table)
-      if (!cur.contains(feature)) return // concurrent drop finished it
-      residue(spark, table, feature).foreach { r =>
+    val dropped = TableMeta.update(spark, table, Prefix) { cur =>
+      // a concurrent drop that finished it leaves nothing to do
+      if (cur.contains(feature)) residue(spark, table, feature).foreach { r =>
         throw new ResidueException(
           s"cannot drop feature $feature from $table: $r")
       }
-      try {
-        TableMeta.write(spark, table, Prefix, cur - feature)
-        // graduation releases the source-retention pin the clone held
-        if (feature == ShallowCloneFeature)
-          ShallowClone.releaseRef(spark, table)
-        return
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => // re-read
-      }
+      cur - feature
     }
-    throw new IllegalStateException(
-      s"feature drop on $table still contended after $attempts attempts")
+    // graduation releases the source-retention pin the clone held
+    if (dropped && feature == ShallowCloneFeature)
+      ShallowClone.releaseRef(spark, table)
   }
 
   /** Why `feature` cannot be dropped from `table` right now — None when

@@ -141,7 +141,7 @@ object TypeWidening {
         "changes (e.g. long->double) are refused, and cross-kind changes " +
         "need a rewrite")
     TableFeatures.declare(spark, table, TableFeatures.TypeWideningFeature)
-    // max-wins registry write with the declareAll retry discipline: two
+    // read-modify-write of the registry (TableMeta.update): two
     // racing widenings of DISJOINT columns must both land, and two racing
     // widenings of the SAME column re-validate against whatever the other
     // registered — the wider of two COMPARABLE types survives (partitions
@@ -149,14 +149,10 @@ object TypeWidening {
     // concurrent targets (int→bigint vs int→decimal(10,0): neither
     // upcasts to the other) refuse loudly instead of last-writer-wins
     // re-introducing the mixed-width conflict the registry exists to stop
-    var attempts = 0
-    while (attempts < 50) {
-      attempts += 1
-      val curReg = TableMeta.read(spark, table, Prefix)
-      val registered = curReg.get(colP).map(
-        org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType)
-      registered match {
-        case Some(t0) if upcastable(to, t0) => return // t0 is ≥ to: it wins
+    TableMeta.update(spark, table, Prefix) { curReg =>
+      curReg.get(colP).map(
+          org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType) match {
+        case Some(t0) if upcastable(to, t0) => curReg // t0 is ≥ to: it wins
         case Some(t0) if !upcastable(t0, to) =>
           throw new IllegalStateException(
             s"concurrent type widenings of $table.$column diverge: " +
@@ -165,17 +161,9 @@ object TypeWidening {
               "could not upcast to the other; pick the wider of the two " +
               "explicitly")
         case _ => // none registered, or `to` is strictly wider: write it
-      }
-      try {
-        TableMeta.write(spark, table, Prefix,
-          curReg + (colP -> to.catalogString))
-        return
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => // racer
+          curReg + (colP -> to.catalogString)
       }
     }
-    throw new IllegalStateException(
-      s"type-widening registry on $table still contended after $attempts attempts")
   }
 
   /** Upcast any present registered column that is still narrow — the
@@ -198,17 +186,13 @@ object TypeWidening {
     val root = new org.apache.hadoop.fs.Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root)
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith(s"$partColP="))
-      .map(_.getPath.getName).sorted.toSeq
-      .filter { dirName =>
-        val s = spark.read.parquet(s"$table/$dirName").schema
-        w.exists { case (c, t) =>
-          s.fieldNames.contains(c) &&
-            ignoreNull(s(c).dataType) != ignoreNull(t)
-        }
+    Upsert.liveDirNames(fs, table, partColP).filter { dirName =>
+      val s = spark.read.parquet(s"$table/$dirName").schema
+      w.exists { case (c, t) =>
+        s.fieldNames.contains(c) &&
+          ignoreNull(s(c).dataType) != ignoreNull(t)
       }
+    }
   }
 
   /** REORG-class rewrite: republish every still-narrow partition at the

@@ -956,143 +956,36 @@ object Upsert {
       spark: SparkSession,
       table: String,
       version: Long,
-      partCol: String): DataFrame = {
-    val feats = TableFeatures.checkReadOf(
-      TableFeatures.features(spark, table), table)
-    if (ShallowClone.isShallowIn(feats))
-      throw new IllegalStateException(
-        s"time travel on shallow clone $table is undefined before " +
-          "materialization — the clone's version axis begins at its own " +
-          "writes; read the live state (readCommitted/ShallowClone.read) " +
-          "or materialize first")
-    // time travel shows OLD versions under the CURRENT logical names,
-    // exactly Delta's column-mapping semantics — and under the CURRENT
-    // widened types (values exact; the whole timeline presents one
-    // stable schema)
-    val colMap = ColumnMapping.mapping(spark, table)
-    ColumnMapping.applyLogical(
-      readAsOfPhysical(spark, table, version,
-        ColumnMapping.physicalName(colMap, partCol),
-        TypeWidening.of(spark, table, feats)), colMap)
-  }
-
-  private[batch] def readAsOfPhysical(
-      spark: SparkSession,
-      table: String,
-      version: Long,
-      partCol: String,
-      widenings: Map[String, org.apache.spark.sql.types.DataType] =
-        Map.empty): DataFrame = {
-    val all = TxnLog.commitsSince(spark, table, 0L)
-    val tip = all.lastOption.map(_.version).getOrElse(0L)
-    if (version > tip)
-      throw new IllegalStateException(
-        s"time travel: version $version is beyond the current tip v$tip — " +
-          "nothing has committed it yet (mirroring Delta's VersionNotFound)")
-    // TxnLog.truncate removes commits below the retention floor; a version
-    // below it cannot be soundly reconstructed — commits in (version,
-    // floor) may be GONE, and a missing end-commit would make a rewritten
-    // partition silently resolve to live. Refuse rather than guess.
-    all.headOption.map(_.version).filter(version < _ - 1).foreach { floor =>
-      throw new IllegalStateException(
-        s"time travel: version $version predates the manifest horizon " +
-          s"(oldest retained commit is v$floor) — the snapshot is no longer " +
-          "reconstructible")
-    }
-    // Stability loop — the SAME discipline as readCommitted's, for the
-    // same TOCTOU: a partition can resolve LIVE as the pre-image of an
-    // unclosed begin (no retain landed yet), and the live dir's file
-    // LISTING is deferred to the action. If the writer's install lands in
-    // between, the scan silently reads the POST-image — at `version` the
-    // snapshot then shows a future commit's rows (caught in the wild by
-    // ChangeFeedSpec's feed-race hammer: readAsOf(tip-at-a-begin) served
-    // the in-flight merge's result). Re-resolve until no ambiguous
-    // resolution's generation has appeared and no new commit has touched
-    // a live-resolved partition; after a writer lands, re-resolution
-    // routes the partition through its retained generation (immutable).
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val maxAttempts = 80
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt < maxAttempts) {
-      attempt += 1
-      try {
-        val commits =
-          if (attempt == 1) all else TxnLog.commitsSince(spark, table, 0L)
-        val (df, liveResolved, ambiguous) =
-          resolveSnapshot(spark, table, version, partCol, commits,
-            pinLiveFiles = true, widenings = widenings)
-        val ambiguousStable = ambiguous.forall { case (gen, marker) =>
-          !fs.exists(new org.apache.hadoop.fs.Path(gen)) &&
-            !fs.exists(new org.apache.hadoop.fs.Path(marker))
-        }
-        val tipNow = commits.lastOption.map(_.version).getOrElse(0L)
-        val newTouches = TxnLog.commitsSince(spark, table, tipNow)
-          .exists(c => c.all || c.partitions.exists(liveResolved))
-        if (ambiguousStable && !newTouches) return df
-        Thread.sleep(math.min(25L * attempt, 400L))
-      } catch {
-        case scala.util.control.NonFatal(e) if attempt < maxAttempts =>
-          lastErr = e
-          Thread.sleep(math.min(25L * attempt, 400L))
-      }
-    }
-    throw new IllegalStateException(
-      s"readAsOf: $table did not yield a stable v$version snapshot in " +
-        s"$maxAttempts attempts (last error attached — a persistent " +
-        "failure here is a broken table, not contention)", lastErr)
-  }
+      partCol: String): DataFrame =
+    readLogical(spark, table, partCol, Some(version))
 
   /** Partition VALUES of the snapshot at `version`, resolved DRIVER-SIDE —
-    * the metadata half of [[readAsOfPhysical]] (manifest math plus cached
+    * the metadata half of [[snapshotPhysical]] (manifest math plus cached
     * generation listings), never a Spark job over the snapshot's files.
     * O(partitions) where the distributed `select(partCol).distinct()` it
     * replaces is O(files) task scheduling at 100 TB. Also returns whether
     * any deletion-vector commit ≤ `version` exists (driver-side manifest
     * scan): metadata cannot see ROW emptiness, so a caller that needs
     * "has surviving rows" must probe exactly when that flag is set.
-    * Same retry discipline as [[readAsOfPhysical]] against mid-install
-    * writers (resolution refuses loudly; a retry re-reads the manifest). */
+    * Same guard and retry policy as [[snapshotPhysical]] ([[stableSnapshot]]:
+    * resolution refuses loudly mid-install; a retry re-reads the manifest). */
   private[batch] def partValsAsOf(
       spark: SparkSession,
       table: String,
       version: Long,
       partCol: String): (Set[String], Boolean) = {
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (attempt < 10) {
-      attempt += 1
-      try {
-        val all = TxnLog.commitsSince(spark, table, 0L)
-        val tip = all.lastOption.map(_.version).getOrElse(0L)
-        if (version > tip)
-          throw new IllegalStateException(
-            s"partValsAsOf: version $version is beyond the current tip v$tip")
-        all.headOption.map(_.version).filter(version < _ - 1).foreach { floor =>
-          throw new IllegalStateException(
-            s"partValsAsOf: version $version predates the manifest horizon " +
-              s"(oldest retained commit is v$floor)")
-        }
-        val liveDirs = fs.listStatus(root)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-          .map(_.getPath.getName).sorted.toSeq
-        val r = resolveDirs(fs, table, version, partCol, all, liveDirs)
-        val vals = (r.liveVals ++ r.fromHistory.map(h => unescape(h._2, partCol))).toSet
-        val hasDv = all.exists(c =>
-          c.op == "dv-end" && c.ref.isDefined && c.version <= version)
-        return (vals, hasDv)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          lastErr = e
-          Thread.sleep(math.min(25L * attempt, 250L))
-      }
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    stableSnapshot(s"partValsAsOf v$version", table) {
+      val all = TxnLog.commitsSince(spark, table, 0L)
+      requireRetained(all, "partValsAsOf", version, version)
+      val r = resolveDirs(fs, table, version, partCol, all,
+        liveDirNames(fs, table, partCol))
+      val vals = (r.liveVals ++ r.fromHistory.map(h => unescape(h._2, partCol))).toSet
+      val hasDv = all.exists(c =>
+        c.op == "dv-end" && c.ref.isDefined && c.version <= version)
+      Some((vals, hasDv))
     }
-    throw new IllegalStateException(
-      s"partValsAsOf: $table did not yield a stable v$version partition " +
-        "listing in 10 attempts", lastErr)
   }
 
   /** DESCRIBE HISTORY analog (Delta `DESCRIBE HISTORY <table>`): the
@@ -1343,9 +1236,7 @@ object Upsert {
     // a single merged read) — and the copy then LANDS wide, consistent
     // with the widen registry the clone carries over below.
     val wid = TypeWidening.of(spark, src, TableFeatures.features(spark, src))
-    val snap = pinned
-      .map(v => readAsOfPhysical(spark, src, v, partColP, wid))
-      .getOrElse(readCommittedPhysical(spark, src, partColP, widenings = wid))
+    val snap = snapshotPhysical(spark, src, partColP, pinned, wid)
     // atomic install: a clone that dies mid-write (or loses a race with a
     // source writer's install — the documented loud-retryable failure)
     // leaves NO dst, so the existence refusal above never blocks a retry.
@@ -1467,44 +1358,120 @@ object Upsert {
     * race a LATER writer's install at execution time, which surfaces as a
     * loud (retryable) missing-file error, never a silently torn result.
     * The resolution itself re-probes the manifest and retries until stable
-    * (`maxAttempts` bounds the retries, 25 ms apart). */
+    * ([[stableSnapshot]], the policy every snapshot read shares). */
   def readCommitted(
       spark: SparkSession,
       table: String,
+      partCol: String): DataFrame =
+    readLogical(spark, table, partCol, None)
+
+  /** The logical face of [[readCommitted]] (`asOf = None`) and
+    * [[readAsOf]]: time travel shows OLD versions under the CURRENT
+    * logical names, exactly Delta's column-mapping semantics — and under
+    * the CURRENT widened types (values exact; the whole timeline presents
+    * one stable schema). */
+  private def readLogical(
+      spark: SparkSession,
+      table: String,
       partCol: String,
-      maxAttempts: Int = 80): DataFrame = {
+      asOf: Option[Long]): DataFrame = {
     // protocol gate: a reader-level feature this build does not know
     // means a read would return wrong data, not fail — refuse loudly
     // (one registry read shared with the shallow-clone dispatch)
     val feats = TableFeatures.checkReadOf(
       TableFeatures.features(spark, table), table)
     val colMap = ColumnMapping.mapping(spark, table)
-    // a shallow clone's committed state is localized ∪ pinned source —
-    // delegating keeps every readCommitted consumer (HTTP serving
-    // included) seeing the FULL clone
-    if (ShallowClone.isShallowIn(feats))
-      return ColumnMapping.applyLogical(
-        ShallowClone.readPhysical(spark, table,
-          ColumnMapping.physicalName(colMap, partCol)), colMap)
-    // type widenings (registry read only when the feature is declared —
-    // zero cost on ordinary tables) upcast below the partition union
-    ColumnMapping.applyLogical(
-      readCommittedPhysical(spark, table,
-        ColumnMapping.physicalName(colMap, partCol), maxAttempts,
-        TypeWidening.of(spark, table, feats)),
-      colMap)
+    val partColP = ColumnMapping.physicalName(colMap, partCol)
+    val physical =
+      if (!ShallowClone.isShallowIn(feats)) {
+        // type widenings (registry read only when the feature is declared
+        // — zero cost on ordinary tables) upcast below the partition union
+        snapshotPhysical(spark, table, partColP, asOf,
+          TypeWidening.of(spark, table, feats))
+      } else if (asOf.isEmpty)
+        // a shallow clone's committed state is localized ∪ pinned source —
+        // delegating keeps every readCommitted consumer (HTTP serving
+        // included) seeing the FULL clone
+        ShallowClone.readPhysical(spark, table, partColP)
+      else throw new IllegalStateException(
+        s"time travel on shallow clone $table is undefined before " +
+          "materialization — the clone's version axis begins at its own " +
+          "writes; read the live state (readCommitted/ShallowClone.read) " +
+          "or materialize first")
+    ColumnMapping.applyLogical(physical, colMap)
   }
 
-  private[batch] def readCommittedPhysical(
+  /** A refusal no retry can change (a version outside the retained range,
+    * a vacuumed generation, starved readers): [[stableSnapshot]] rethrows it. */
+  private[batch] final class SnapshotRefused(msg: String)
+    extends IllegalStateException(msg)
+
+  /** The one retry policy of every snapshot read: run `resolveOnce` (one
+    * manifest read and resolution, None when a writer landed mid-read)
+    * until it yields, up to 80 attempts. The back-off grows 25 ms per
+    * attempt (capped at 400 ms) — a tight loop against a busy writer burns
+    * the budget inside one merge's install window. Transient errors are
+    * retried, and the last one rides the final loud failure. */
+  private def stableSnapshot[T](what: String, table: String)(
+      resolveOnce: => Option[T]): T = {
+    val maxAttempts = 80
+    var attempt = 0
+    var lastErr: Throwable = null
+    while (attempt < maxAttempts) {
+      attempt += 1
+      try resolveOnce match {
+        case Some(r) => return r
+        case None => // resolved, but a writer landed mid-read: re-resolve
+      } catch {
+        case e: SnapshotRefused => throw e
+        case scala.util.control.NonFatal(e) => lastErr = e
+      }
+      if (attempt < maxAttempts) Thread.sleep(math.min(25L * attempt, 400L))
+    }
+    throw new IllegalStateException(
+      s"$what: $table did not yield a stable snapshot in $maxAttempts " +
+        s"attempts (last error: ${Option(lastErr).getOrElse("none")}) — a " +
+        "persistent failure here is a broken table, not contention", lastErr)
+  }
+
+  /** The retained-range guard of every versioned read: `to` beyond the tip
+    * must never silently read as "latest", and below the manifest horizon
+    * ([[TxnLog.truncate]]) a missing end would silently resolve a rewritten
+    * partition to live. */
+  private[batch] def requireRetained(
+      all: Seq[TxnLog.Commit], what: String, from: Long, to: Long): Unit = {
+    val tip = all.lastOption.map(_.version).getOrElse(0L)
+    if (to > tip)
+      throw new SnapshotRefused(
+        s"$what: version $to is beyond the current tip v$tip — nothing has " +
+          "committed it yet (mirroring Delta's VersionNotFound)")
+    all.headOption.map(_.version).filter(from < _ - 1).foreach { floor =>
+      throw new SnapshotRefused(
+        s"$what: version $from predates the manifest horizon (oldest " +
+          s"retained commit is v$floor) — the commits after it are gone, " +
+          "so its state is no longer reconstructible")
+    }
+  }
+
+  /** The physical snapshot at the tip (`asOf = None`: each attempt's tip)
+    * or as of a version, behind [[readLogical]], deep clone and the
+    * shallow-clone paths. A tip read honors an in-flight WHOLE-TABLE claim
+    * (compaction log swap) up to the mark's age: mid-swap listings can
+    * silently fall back to raw directory enumeration. Partition-level
+    * claims are NOT waited out — resolution reads through their retained
+    * pre-images. Back-to-back fresh claims (a tight maintenance loop) could
+    * starve a reader forever on per-mark patience alone, so a generous
+    * overall wall cap turns starvation into a loud error, not a silent hang. */
+  private[batch] def snapshotPhysical(
       spark: SparkSession,
       table: String,
       partCol: String,
-      maxAttempts: Int = 80,
+      asOf: Option[Long],
       widenings: Map[String, org.apache.spark.sql.types.DataType] =
         Map.empty): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // fast path — plain read with the PRE-EXISTING semantics (no
+    // tip fast path — plain read with the PRE-EXISTING semantics (no
     // mergeSchema: that would widen the schema to the union across files
     // and scan every footer) when the manifest cannot affect resolution:
     // no manifest at all, or no partition dirs AND no commit that ever
@@ -1512,105 +1479,62 @@ object Upsert {
     // partition is mid-install or crashed-between-renames has claims but
     // no partCol= dirs — that one must go through resolution, where the
     // manifest's mentions recover the committed state from history.
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, "_graft_txn")))
+    if (asOf.isEmpty && !fs.exists(new org.apache.hadoop.fs.Path(root, "_graft_txn")))
       return TypeWidening.applyTo(spark.read.parquet(table), widenings)
     // `identity` commits claim only the reserved synthetic
     // `_graft_identity:*` values (range allocation, [[IdentityColumns]]) —
     // never a data partition, so they must not push a dataless manifest
     // (identity declared before the first merge) into resolution, which
     // would loudly find no partitions at all
-    if (!fs.listStatus(root).exists(st =>
-          st.isDirectory && st.getPath.getName.startsWith(s"$partCol=")) &&
+    if (asOf.isEmpty && liveDirNames(fs, table, partCol).isEmpty &&
         !TxnLog.commitsSince(spark, table, 0L).exists(c =>
           c.all || (c.partitions.nonEmpty && c.op != "identity")))
       return TypeWidening.applyTo(spark.read.parquet(table), widenings)
-    // honor an in-flight WHOLE-TABLE claim (compaction log swap) up to the
-    // mark's age: mid-swap listings can silently fall back to raw directory
-    // enumeration. Partition-level claims are NOT waited out — snapshot
-    // resolution reads through their retained pre-images. Back-to-back
-    // fresh claims (a tight maintenance loop) could starve a reader
-    // forever on per-mark patience alone, so a generous overall wall cap
-    // turns starvation into a loud error rather than a silent hang.
     val inFlightPatienceMs = 5000L
     val waitCapMs = 120000L
     val waitStart = System.currentTimeMillis()
-    var attempt = 0
-    var lastErr: Throwable = null
-    while (true) {
-      val probe = TxnLog.readerState(spark, table,
-        staleLockMs = inFlightPatienceMs, allClaimsOnly = true)
-      if (probe._2) {
-        if (System.currentTimeMillis() - waitStart > waitCapMs)
-          throw new IllegalStateException(
-            s"readCommitted: $table has had whole-table claims in flight for " +
-              s"over $waitCapMs ms — maintenance is starving readers")
-        Thread.sleep(25)
-      } else {
-        attempt += 1
-        try {
-          val commits = TxnLog.commitsSince(spark, table, 0L)
-          val tip = commits.lastOption.map(_.version).getOrElse(0L)
-          val (df, liveResolved, ambiguous) =
-            resolveSnapshot(spark, table, tip, partCol, commits,
-              widenings = widenings)
-          // Post-resolution stability checks, cheapest first:
-          //  (a) ambiguous partitions (live dir read as the pre-image of an
-          //      unclosed begin): if the writer's retain rename landed after
-          //      our listing, a generation/marker NOW exists and the live
-          //      dir is (or is becoming) the new data — re-resolve;
-          //  (b) any NEW commit touching a live-resolved partition means a
-          //      writer claimed it mid-resolution; its retire can race our
-          //      listing — re-resolve. Commits touching history-resolved
-          //      partitions are harmless (their files are immutable).
-          val ambiguousStable = ambiguous.forall { case (gen, marker) =>
-            !fs.exists(new org.apache.hadoop.fs.Path(gen)) &&
-              !fs.exists(new org.apache.hadoop.fs.Path(marker))
-          }
-          val newTouches = TxnLog.commitsSince(spark, table, tip)
-            .exists(c => c.all || c.partitions.exists(liveResolved))
-          if (ambiguousStable && !newTouches) return df
-          // resolution SUCCEEDED but was unstable (a writer landed mid-read):
-          // back off with linearly growing sleeps before re-resolving — a
-          // tight retry loop against a busy writer burns the whole attempt
-          // budget inside one merge's install window and turns transient
-          // contention into the loud maxAttempts failure below
-          Thread.sleep(math.min(25L * attempt, 400L))
-        } catch {
-          case scala.util.control.NonFatal(e) if attempt < maxAttempts =>
-            lastErr = e
-            Thread.sleep(math.min(25L * attempt, 400L)) // mid-swap/mid-install instant — retry
+    stableSnapshot(asOf.fold("readCommitted")(v => s"readAsOf v$v"), table) {
+      if (asOf.isEmpty)
+        while (TxnLog.readerState(spark, table,
+            staleLockMs = inFlightPatienceMs, allClaimsOnly = true)._2) {
+          if (System.currentTimeMillis() - waitStart > waitCapMs)
+            throw new SnapshotRefused(
+              s"readCommitted: $table has had whole-table claims in flight " +
+                s"for over $waitCapMs ms — maintenance is starving readers")
+          Thread.sleep(25)
         }
-        if (attempt >= maxAttempts)
-          throw new IllegalStateException(
-            s"readCommitted: $table did not yield a stable snapshot in " +
-              s"$maxAttempts attempts (last error attached — a persistent " +
-              "failure here is a broken table, not contention)", lastErr)
-      }
+      val all = TxnLog.commitsSince(spark, table, 0L)
+      asOf.foreach(v => requireRetained(all, "time travel", v, v))
+      resolveSnapshot(spark, table,
+        asOf.getOrElse(all.lastOption.map(_.version).getOrElse(0L)),
+        partCol, all, pinLiveFiles = asOf.isDefined, widenings = widenings)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Shared resolution core of [[readAsOf]] / [[readCommitted]]: the state
-    * at `version` given one consistent read of the manifest. Returns
-    * (snapshot, live-resolved partition values, ambiguous live resolutions
-    * as (generation path, absent-marker path) — partitions held by an
-    * unclosed begin whose pre-image has not been retained yet, i.e. the
-    * live dir IS the pre-image unless the writer's retire lands). */
+    * at `version` given one consistent read of the manifest `all`, or None
+    * when unstable. A partition can resolve LIVE as the pre-image of an
+    * unclosed begin, and the live dir's file LISTING is deferred to the
+    * action: if the writer's install lands in between, the scan reads the
+    * POST-image (caught by ChangeFeedSpec's feed-race hammer). So, cheapest
+    * first: (a) ambiguous partitions — a generation/marker that NOW exists
+    * means the writer's retain landed after our listing; (b) any NEW commit
+    * touching a live-resolved partition — its retire can race our listing.
+    * Commits touching history-resolved partitions are harmless (immutable
+    * files); after the writer lands, re-resolution reads its generation. */
   private def resolveSnapshot(
       spark: SparkSession,
       table: String,
       version: Long,
       partCol: String,
       all: Seq[TxnLog.Commit],
-      pinLiveFiles: Boolean = false,
-      widenings: Map[String, org.apache.spark.sql.types.DataType] =
-        Map.empty): (DataFrame, Set[String], Seq[(String, String)]) = {
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val liveDirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
-      .map(_.getPath.getName).sorted.toSeq
-    val r = resolveDirs(fs, table, version, partCol, all, liveDirs)
+      pinLiveFiles: Boolean,
+      widenings: Map[String, org.apache.spark.sql.types.DataType])
+      : Option[DataFrame] = {
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val r = resolveDirs(fs, table, version, partCol, all,
+      liveDirNames(fs, table, partCol))
     val live = r.liveVals
     // deletion vectors in force at `version`: subtracted per leg (the
     // `_metadata` identity columns are per-scan, so the anti-join must sit
@@ -1682,8 +1606,22 @@ object Upsert {
         TypeWidening.applyTo(
           spark.read.parquet(table).filter(lit(false)), widenings)
       else parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    (df, r.liveResolved, r.ambiguous)
+    val ambiguousStable = r.ambiguous.forall { case (gen, marker) =>
+      !fs.exists(new org.apache.hadoop.fs.Path(gen)) &&
+        !fs.exists(new org.apache.hadoop.fs.Path(marker))
+    }
+    val tip = all.lastOption.map(_.version).getOrElse(0L)
+    val newTouches = TxnLog.commitsSince(spark, table, tip)
+      .exists(c => c.all || c.partitions.exists(r.liveResolved))
+    if (ambiguousStable && !newTouches) Some(df) else None
   }
+
+  /** The `partCol=` directory names directly under `table`, sorted. */
+  private[batch] def liveDirNames(
+      fs: org.apache.hadoop.fs.FileSystem, table: String, partCol: String): Seq[String] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(table))
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
+      .map(_.getPath.getName).sorted.toSeq
 
   /** Result of the METADATA half of snapshot resolution: partition values
     * reading from the live tree (`liveVals`, with `liveResolved` the subset
@@ -1753,7 +1691,7 @@ object Upsert {
       else if (genHas(begin, dirName))
         fromHistory += ((begin, dirName))
       else
-        throw new IllegalStateException(
+        throw new SnapshotRefused(
           s"time travel: generation v$begin of $dirName was vacuumed — " +
             s"the snapshot at version $version is no longer reconstructible")
     }
@@ -2184,7 +2122,7 @@ object Upsert {
         // mixed physical widths cannot share one mounted read: mount the
         // admitted files per partition dir (the publish unit — widths are
         // uniform inside one dir), upcast each leg, union by name —
-        // exactly readCommittedPhysical's discipline
+        // exactly snapshotPhysical's discipline
         val (candidates, _) =
           graft.core.BloomIndex.admission(spark, table, colP, value)
         widenedCandidateRead(spark, table, candidates, w,

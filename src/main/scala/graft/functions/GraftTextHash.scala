@@ -36,36 +36,42 @@ object GraftHashHelpers {
     * per (seed, chunk) — sig(k) = chunk (k%4) of seed (k/4), K=16 total.
     * Lexicographic min of fixed-width lowercase hex == unsigned numeric min
     * of the 4 digest bytes, so minima are tracked as unsigned ints and
-    * formatted once at the end. Empty input → 16 NULL sigs (the
-    * array_min-on-empty semantics of the interpreted form). */
+    * formatted once at the end. Null elements are skipped (their md5 is
+    * NULL, which the interpreted min ignores); empty or all-null input →
+    * 16 NULL sigs (the array_min-on-empty semantics of the interpreted
+    * form). */
   def minhashSigs(sh: ArrayData): ArrayData = {
     val n = sh.numElements()
-    if (n == 0) return new GenericArrayData(new Array[Any](16))
     val md = md5tl.get()
     // minima as unsigned ints (bits of digest bytes [4c, 4c+4) per seed)
     val mins = Array.fill(16)(0xFFFFFFFFL + 1L) // sentinel above any u32
+    var seen = false
     var i = 0
     while (i < n) {
-      val xBytes = sh.getUTF8String(i).getBytes
-      var sd = 0
-      while (sd < 4) {
-        md.reset()
-        md.update(('0' + sd).toByte)
-        md.update('|'.toByte)
-        md.update(xBytes)
-        val dig = md.digest()
-        var c = 0
-        while (c < 4) {
-          val v = ((dig(4 * c) & 0xFFL) << 24) | ((dig(4 * c + 1) & 0xFFL) << 16) |
-            ((dig(4 * c + 2) & 0xFFL) << 8) | (dig(4 * c + 3) & 0xFFL)
-          val k = sd * 4 + c
-          if (v < mins(k)) mins(k) = v
-          c += 1
+      if (!sh.isNullAt(i)) {
+        seen = true
+        val xBytes = sh.getUTF8String(i).getBytes
+        var sd = 0
+        while (sd < 4) {
+          md.reset()
+          md.update(('0' + sd).toByte)
+          md.update('|'.toByte)
+          md.update(xBytes)
+          val dig = md.digest()
+          var c = 0
+          while (c < 4) {
+            val v = ((dig(4 * c) & 0xFFL) << 24) | ((dig(4 * c + 1) & 0xFFL) << 16) |
+              ((dig(4 * c + 2) & 0xFFL) << 8) | (dig(4 * c + 3) & 0xFFL)
+            val k = sd * 4 + c
+            if (v < mins(k)) mins(k) = v
+            c += 1
+          }
+          sd += 1
         }
-        sd += 1
       }
       i += 1
     }
+    if (!seen) return new GenericArrayData(new Array[Any](16))
     val out = new Array[Any](16)
     var k = 0
     while (k < 16) {
@@ -223,7 +229,7 @@ case class Ngrams3(child: Expression) extends UnaryExpression {
 }
 
 /** `graft_ngrams(array<string>, k) -> array<string>`: all stride-1 word
-  * k-grams, space-joined, for a FOLDABLE positive k (see
+  * k-grams, space-joined, for a FOLDABLE k >= 1, checked at analysis (see
   * [[GraftHashHelpers.ngramsK]]) — the generalization every stride-1
   * shingle site (2-gram repetition, 8-gram decontamination, L-token
   * exact-substring windows) shares. */
@@ -231,8 +237,14 @@ case class NgramsK(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(StringType, _), org.apache.spark.sql.types.IntegerType) =>
-      if (right.foldable) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure("graft_ngrams requires a literal k")
+      if (!right.foldable)
+        TypeCheckResult.TypeCheckFailure("graft_ngrams requires a literal k")
+      else right.eval() match {
+        // k = 0 would yield n + 1 empty grams, k < 0 a negative array size
+        case k: Int if k < 1 =>
+          TypeCheckResult.TypeCheckFailure(s"graft_ngrams requires k >= 1, got $k")
+        case _ => TypeCheckResult.TypeCheckSuccess
+      }
     case (l, r) => TypeCheckResult.TypeCheckFailure(
       s"graft_ngrams requires (array<string>, int) input, got (${l.sql}, ${r.sql})")
   }

@@ -76,34 +76,36 @@ case class QuantizedDot(left: Expression, right: Expression)
   * via SQL/expr. */
 object GraftFunctions {
 
-  /** (name, doc, builder) for every engine expression — single source of
-    * truth shared by [[register]] and [[GraftExtensions]]. */
-  private[functions] val all: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("graft_dot",
+  /** (name, expression class, doc, builder) for every engine expression —
+    * single source of truth shared by [[register]] and [[GraftExtensions]].
+    * The class names the function's own expression in its ExpressionInfo. */
+  private[functions] val all
+      : Seq[(String, Class[_ <: Expression], String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[QuantizedDot],
       "graft_dot(a, b) - exact integer dot product of two bigint arrays.",
       { exprs: Seq[Expression] =>
         require(exprs.length == 2, "graft_dot takes exactly 2 arguments")
         QuantizedDot(exprs.head, exprs(1))
       }),
-    ("graft_minhash",
+    ("graft_minhash", classOf[MinhashSigs],
       "graft_minhash(sh) - 16 MinHash signatures of a shingle set.",
       { exprs: Seq[Expression] =>
         require(exprs.length == 1, "graft_minhash takes exactly 1 argument")
         MinhashSigs(exprs.head)
       }),
-    ("graft_winnow",
+    ("graft_winnow", classOf[WinnowFps],
       "graft_winnow(s) - winnowing fingerprint set of a normalized string.",
       { exprs: Seq[Expression] =>
         require(exprs.length == 1, "graft_winnow takes exactly 1 argument")
         WinnowFps(exprs.head)
       }),
-    ("graft_ngrams3",
+    ("graft_ngrams3", classOf[Ngrams3],
       "graft_ngrams3(toks) - all space-joined word 3-grams of a token array.",
       { exprs: Seq[Expression] =>
         require(exprs.length == 1, "graft_ngrams3 takes exactly 1 argument")
         Ngrams3(exprs.head)
       }),
-    ("graft_ngrams",
+    ("graft_ngrams", classOf[NgramsK],
       "graft_ngrams(toks, k) - all space-joined stride-1 word k-grams.",
       { exprs: Seq[Expression] =>
         require(exprs.length == 2, "graft_ngrams takes exactly 2 arguments")
@@ -112,11 +114,11 @@ object GraftFunctions {
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    all.foreach { case (name, doc, builder) =>
+    all.foreach { case (name, cls, doc, builder) =>
       val ident = FunctionIdentifier(name)
       if (!registry.functionExists(ident)) {
         registry.registerFunction(ident,
-          new ExpressionInfo(classOf[QuantizedDot].getName, null, name, doc, ""),
+          new ExpressionInfo(cls.getName, null, name, doc, ""),
           builder)
       }
     }
@@ -131,10 +133,10 @@ object GraftFunctions {
   * ([[graft.plans.IntervalBinJoinRule]]). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, doc, builder) =>
+    GraftFunctions.all.foreach { case (name, cls, doc, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
-        new ExpressionInfo(classOf[QuantizedDot].getName, null, name, doc, ""),
+        new ExpressionInfo(cls.getName, null, name, doc, ""),
         builder))
     }
     ext.injectOptimizerRule(_ => graft.plans.IntervalBinJoinRule)

@@ -90,7 +90,7 @@ object StreamingIngest {
     * to a concurrent reader). `mergeSchema` is on so a table whose
     * producer widened the schema (see [[start]]) reads as the union of
     * generations instead of a footer-dependent subset. */
-  def readTable(spark: SparkSession, tablePath: String, maxAttempts: Int = 80): DataFrame = {
+  def readTable(spark: SparkSession, tablePath: String): DataFrame = {
     val logDir = s"$tablePath/_spark_metadata"
     // how long to honor an unclosed swap mark before treating its owner as
     // crashed: the mark brackets only the milliseconds-long log publish
@@ -112,6 +112,7 @@ object StreamingIngest {
     // never into a mid-swap read
     val waitCapMs = 120000L
     val waitStart = System.currentTimeMillis()
+    val maxAttempts = 80
     var attempt = 0
     while (true) {
       // probe BEFORE any repair: while a swap is in flight the "missing"

@@ -351,10 +351,14 @@ class ChangeFeedSpec extends SparkSpec {
       d.setLastModified(System.currentTimeMillis() - 10L * 24 * 3600 * 1000)
     }
     assert(Upsert.vacuumHistory(spark, table, minAgeMs = 1000L) > 0)
+    val t0 = System.nanoTime()
     val e = intercept[IllegalStateException] {
       ChangeFeed.readChanges(spark, table, "day", v0).count()
     }
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
+    val refusedMs = (System.nanoTime() - t0) / 1000000
+    assert(refusedMs < 10000, s"a vacuumed generation cannot come back: " +
+      s"refusing it must not retry (took $refusedMs ms)")
     // and a beyond-tip range is refused up front
     intercept[IllegalStateException] {
       ChangeFeed.readChanges(spark, table, "day", 0L,

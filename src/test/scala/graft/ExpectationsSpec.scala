@@ -137,6 +137,26 @@ class ExpectationsSpec extends SparkSpec {
       "a replayed micro-batch must be absorbed by the txn marker")
   }
 
+  test("concurrent drops of distinct expectations all take effect") {
+    val t = tmp("exp-race")
+    Upsert.mergeByKey(spark, t, rows(("d1", 1L, 5L, 1.0)), "day", Seq("k"))
+    val names = (0 until 8).map(i => s"rule$i")
+    names.foreach(n => Expectations.add(spark, t, n, "qty >= 0"))
+    Expectations.add(spark, t, "kept", "amt < 100.0")
+    // each drop reads the registry, then installs its edit: a racer's
+    // drop landing in between must be re-read, never resurrected
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val fs = names.map(n => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = { start.await(); Expectations.drop(spark, t, n) }
+      }))
+      start.countDown()
+      fs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(Expectations.list(spark, t).keySet == Set("kept"))
+  }
+
   test("refusals: bad name, unknown drop, rule that cannot analyze") {
     val t = tmp("exprefuse")
     Upsert.mergeByKey(spark, t, rows(("d1", 1L, 1L, 1.0)), "day", Seq("k"))

@@ -104,4 +104,43 @@ class GraftTextHashSpec extends SparkSpec {
            ELSE array() END"""))
     assert(df.filter(not(col("native") <=> col("legacy"))).count() == 0)
   }
+
+  test("graft_ngrams refuses k < 1 at analysis time") {
+    val df = withToks(texts)
+    Seq(0, -1).foreach { k =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(expr(s"graft_ngrams(toks, $k)")))
+      assert(e.getMessage.contains("k >= 1"), e.getMessage)
+    }
+    // k = 1 is the smallest valid window: one gram per token
+    assert(df.select(expr("size(graft_ngrams(toks, 1)) = size(toks)").as("ok"))
+      .filter(not(col("ok"))).count() == 0)
+  }
+
+  test("graft_minhash skips null elements; all-null input is 16 NULL sigs") {
+    val row = withToks(Seq("x")).select(
+      expr("graft_minhash(array('a', NULL, 'b'))").as("withNull"),
+      expr("graft_minhash(array('a', 'b'))").as("plain"),
+      expr("graft_minhash(array(CAST(NULL AS STRING), NULL))").as("allNull"),
+      expr("graft_minhash(CAST(array() AS array<string>))").as("empty"))
+      .head()
+    assert(row.getSeq[String](0) == row.getSeq[String](1))
+    assert(row.getSeq[String](2) == row.getSeq[String](3))
+    assert(row.getSeq[String](3).size == 16 && row.getSeq[String](3).forall(_ == null))
+  }
+
+  test("each graft_* function is registered under its own expression class") {
+    graft.functions.GraftFunctions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    Seq(
+      "graft_dot" -> classOf[graft.functions.QuantizedDot],
+      "graft_minhash" -> classOf[graft.functions.MinhashSigs],
+      "graft_winnow" -> classOf[graft.functions.WinnowFps],
+      "graft_ngrams3" -> classOf[graft.functions.Ngrams3],
+      "graft_ngrams" -> classOf[graft.functions.NgramsK]).foreach { case (f, c) =>
+      val info = registry.lookupFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f))
+      assert(info.map(_.getClassName).contains(c.getName), s"$f: $info")
+    }
+  }
 }

@@ -203,6 +203,33 @@ class TimeTravelSpec extends SparkSpec {
     assert(got == Set(("2026-01-01", "k1", 1.0), ("2026-01-02", "k2", 2.0)))
   }
 
+  test("partValsAsOf refuses beyond-tip and below-horizon versions at once") {
+    import spark.implicits._
+    val table = tmp("tt-partvals")
+    Seq(("2026-01-01", "k1", 1.0)).toDF("day", "k", "v")
+      .write.partitionBy("day").mode("overwrite").parquet(table)
+    val v0 = TxnLog.currentVersion(spark, table)
+    (1 to 3).foreach { i =>
+      Upsert.mergeByKey(spark, table,
+        Seq((s"2026-01-0${i + 1}", "k1", i.toDouble)).toDF("day", "k", "v"),
+        "day", Seq("k"))
+    }
+    val tip = TxnLog.currentVersion(spark, table)
+    assert(graft.batch.UpsertTestHook.partValsAsOf(spark, table, tip, "day")._1 ==
+      Set("2026-01-01", "2026-01-02", "2026-01-03", "2026-01-04"))
+    def refusedAtOnce(v: Long, msg: String): Unit = {
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalStateException](
+        graft.batch.UpsertTestHook.partValsAsOf(spark, table, v, "day"))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(ms < 2000, s"v$v: a permanent refusal must not retry (took $ms ms)")
+    }
+    refusedAtOnce(tip + 5, "beyond the current tip")
+    assert(TxnLog.truncate(spark, table, keep = 1) > 0)
+    refusedAtOnce(v0, "manifest horizon")
+  }
+
   test("a version beyond the current tip is refused, not silently read as latest") {
     import spark.implicits._
     val table = tmp("tt-future")
@@ -302,8 +329,12 @@ class TimeTravelSpec extends SparkSpec {
       Seq(("2026-01-01", "k1", 2.0)).toDF("day", "k", "v"), "day", Seq("k"))
     // retention horizon 0: every retained generation is reclaimable
     assert(Upsert.vacuumHistory(spark, table, minAgeMs = 0) >= 1)
+    val t0 = System.nanoTime()
     val e = intercept[IllegalStateException](stateAsOf(table, v0))
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
+    val refusedMs = (System.nanoTime() - t0) / 1000000
+    assert(refusedMs < 10000, s"a vacuumed generation cannot come back: " +
+      s"refusing it must not retry (took $refusedMs ms)")
     // the LATEST state needs no history and still reads fine
     assert(stateAsOf(table, TxnLog.currentVersion(spark, table)) == state(table))
     // a fresh horizon keeps young generations: new merge, immediate as-of works

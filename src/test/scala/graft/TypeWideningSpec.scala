@@ -116,6 +116,35 @@ class TypeWideningSpec extends SparkSpec {
     assert(r.select("v").as[Long].collect().toSeq == Seq(11L))
   }
 
+  test("concurrent widenings of disjoint columns all land in the registry") {
+    import spark.implicits._
+    val t = tmp("widen-race") + "/t"
+    val cols = (0 until 8).map(i => s"c$i")
+    Upsert.mergeByKey(spark, t,
+      Seq(("a", 1L)).toDF("day", "k")
+        .select(col("day") +: col("k") +: cols.map(c => lit(1).as(c)): _*),
+      "day", Seq("k"))
+    // every thread reads the registry, then installs its edit; a racer's
+    // edit landing in between must be re-read, never overwritten
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(cols.size)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val fs = cols.map(c => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = {
+          start.await()
+          TypeWidening.widen(spark, t, "day", c, LongType)
+        }
+      }))
+      start.countDown()
+      fs.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    val w = TypeWidening.widenings(spark, t)
+    assert(cols.filterNot(c => w.get(c).contains(LongType)).isEmpty,
+      s"lost widenings: registry holds ${w.keys.toSeq.sorted}")
+    assert(Upsert.readCommitted(spark, t, "day").schema.filter(f =>
+      cols.contains(f.name)).forall(_.dataType == LongType))
+  }
+
   test("float→double and decimal precision-up widen; long→double never") {
     assert(TypeWidening.isAllowed(FloatType, DoubleType))
     assert(TypeWidening.isAllowed(DecimalType(10, 2), DecimalType(14, 4)))
