@@ -5,8 +5,10 @@ import java.util.concurrent.Executors
 
 import scala.concurrent.{ExecutionContext, Future}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.operators.Analytics
 
@@ -20,9 +22,15 @@ import graft.operators.Analytics
   *     row count comes from `observe()` metrics on that same write, not a
   *     second `count()` job (ref re-scans 3×: BatchJob.scala:65-76);
   *   - aggregations read the (small, pruned) snapshot, not the full source;
-  *   - retrieval is stable-key `row_number` pagination executed on
-  *     executors, never `toJSON.collect()` on the driver
-  *     (ref: BatchRoutes.scala:149,221 collects the full table);
+  *   - every published output (the raw snapshot and each
+  *     `aggregated/<analysis>` dir) carries its schema as `_schema.json`,
+  *     written inside the temp dir before the atomic swap, and is read
+  *     back with that schema — no schema-inference job on any read of a
+  *     dir this service wrote itself (dirs written before the file existed
+  *     fall back to inference);
+  *   - retrieval is a distributed top-k page (`TakeOrderedAndProject`):
+  *     one job of one stage, never `toJSON.collect()` of the whole table
+  *     on the driver (ref: BatchRoutes.scala:149,221 collects the full table);
   *   - user-supplied filter columns are validated against the schema up
   *     front → clean FAILED, not a mid-job analysis exception.
   *
@@ -98,7 +106,12 @@ final class BatchService(
       // a reader of a batch being RE-run sees complete-old or complete-new,
       // never a half-written directory (the Delta-ACID substitute).
       val obs = org.apache.spark.sql.Observation(s"batch_metrics_$batchId")
-      graft.core.AtomicWrite.publish(spark, rawPath) { tmp =>
+      // the snapshot's read schema: partitionBy moves `category` last, and
+      // pinning it keeps its source type (inference would re-type values
+      // that look numeric)
+      val rawSchema = StructType(
+        filtered.schema.filterNot(_.name == "category") :+ filtered.schema("category"))
+      publishPinned(rawPath, rawSchema) { tmp =>
         // Snapshot layout: range-clustered on transaction_id (the serving
         // key) so each file covers a disjoint key slice and the keyset
         // pagination's pushed GreaterThan(transaction_id) skips whole row
@@ -125,9 +138,9 @@ final class BatchService(
       val rowCount = obs.get("rows").asInstanceOf[Long]
 
       // aggregations read the pruned snapshot, not the source
-      val snapshot = spark.read.parquet(rawPath)
+      val snapshot = readPinned(rawPath)
       Analytics.runAnalysis(snapshot, req.analysisType).foreach { case (name, df) =>
-        graft.core.AtomicWrite.publish(spark, s"$aggPath/$name") { tmp =>
+        publishPinned(s"$aggPath/$name", df.schema) { tmp =>
           df.write.mode("overwrite").parquet(tmp)
         }
       }
@@ -163,7 +176,7 @@ final class BatchService(
       maxPageSize: Int = 10000): Either[String, DataFrame] =
     withCompleted(batchId) { r =>
       val eff = math.min(limit, maxPageSize)
-      Right(spark.read.parquet(r.rawPath.get)
+      Right(readPinned(r.rawPath.get)
         .orderBy(col("transaction_id"))
         .offset(offset).limit(eff))
     }
@@ -180,7 +193,7 @@ final class BatchService(
       maxPageSize: Int = 10000): Either[String, DataFrame] =
     withCompleted(batchId) { r =>
       val eff = math.min(limit, maxPageSize)
-      val base = spark.read.parquet(r.rawPath.get)
+      val base = readPinned(r.rawPath.get)
       val page = afterKey.fold(base)(k => base.filter(col("transaction_id") > k))
       Right(page.orderBy(col("transaction_id")).limit(eff))
     }
@@ -208,8 +221,36 @@ final class BatchService(
       if (!dir.isDirectory)
         Left(s"no analysis '$analysis' in batch $batchId; available: " +
           Option(new java.io.File(r.aggregatedPath.get).list()).map(_.sorted.mkString(", ")).getOrElse(""))
-      else Right(spark.read.parquet(dir.toString))
+      else Right(readPinned(dir.toString))
     }
+
+  /** Atomically publish the output `write` produces at `target`, with
+    * `schema` pinned inside the tree as `_schema.json` (its
+    * `StructType.json`) before the swap; the `_` prefix keeps the file out
+    * of Spark's file listing. */
+  private def publishPinned(target: String, schema: StructType)(
+      write: String => Unit): Unit =
+    graft.core.AtomicWrite.publish(spark, target) { tmp =>
+      write(tmp)
+      val f = new Path(tmp, ChangeFeed.SchemaFile)
+      val out = f.getFileSystem(spark.sessionState.newHadoopConf()).create(f, true)
+      try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+
+  /** Read a published output with its pinned schema: no inference job.
+    * Outputs published before the schema file existed are inferred. */
+  private def readPinned(dir: String): DataFrame = {
+    val f = new Path(dir, ChangeFeed.SchemaFile)
+    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(f)) spark.read.parquet(dir)
+    else {
+      val in = fs.open(f)
+      val json = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
+      spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dir)
+    }
+  }
 
   private def withCompleted(batchId: String)(
       f: BatchJobRecord => Either[String, DataFrame]): Either[String, DataFrame] =

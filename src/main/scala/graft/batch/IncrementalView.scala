@@ -152,15 +152,18 @@ object IncrementalView {
       minCols.map(minCol) ++ maxCols.map(maxCol))
     require(!groupCols.exists(reserved.contains),
       s"group columns collide with materialized names $reserved")
-    require(TableMeta.read(spark, view, Prefix).isEmpty,
-      s"$view already has a view registration")
-    TableMeta.write(spark, view, Prefix, Map(
-      "src" -> src, "srcPartCol" -> srcPartCol,
-      "groupCols" -> groupCols.mkString(","),
-      "sumCols" -> sumCols.mkString(","),
-      "minCols" -> minCols.mkString(","),
-      "maxCols" -> maxCols.mkString(","),
-      "viewPartCol" -> viewPartCol))
+    // the existence check runs inside the exclusive install: of racing
+    // creates exactly one installs, and every other one re-reads and refuses
+    TableMeta.update(spark, view, Prefix) { cur =>
+      require(cur.isEmpty, s"$view already has a view registration")
+      Map(
+        "src" -> src, "srcPartCol" -> srcPartCol,
+        "groupCols" -> groupCols.mkString(","),
+        "sumCols" -> sumCols.mkString(","),
+        "minCols" -> minCols.mkString(","),
+        "maxCols" -> maxCols.mkString(","),
+        "viewPartCol" -> viewPartCol)
+    }
   }
 
   /** The registered definition, if any. */

@@ -937,7 +937,7 @@ object Upsert {
     val all = TxnLog.commitsSince(spark, table, 0L)
     require(all.nonEmpty, s"time travel: $table has no commits")
     val at = all.filter(_.ts <= tsMillis).lastOption.getOrElse(
-      throw new IllegalStateException(
+      throw new SnapshotRefused(
         s"time travel: timestamp $tsMillis predates the oldest retained " +
           s"commit (v${all.head.version} at ${all.head.ts}) — the snapshot " +
           "is no longer reconstructible"))
@@ -1393,7 +1393,7 @@ object Upsert {
         // delegating keeps every readCommitted consumer (HTTP serving
         // included) seeing the FULL clone
         ShallowClone.readPhysical(spark, table, partColP)
-      else throw new IllegalStateException(
+      else throw new SnapshotRefused(
         s"time travel on shallow clone $table is undefined before " +
           "materialization — the clone's version axis begins at its own " +
           "writes; read the live state (readCommitted/ShallowClone.read) " +
@@ -1402,8 +1402,14 @@ object Upsert {
   }
 
   /** A refusal no retry can change (a version outside the retained range,
-    * a vacuumed generation, starved readers): [[stableSnapshot]] rethrows it. */
-  private[batch] final class SnapshotRefused(msg: String)
+    * a vacuumed generation): [[stableSnapshot]] rethrows it. */
+  private[graft] final class SnapshotRefused(msg: String)
+    extends IllegalStateException(msg)
+
+  /** Readers waited out whole-table claims past the cap: [[stableSnapshot]]
+    * rethrows it, but unlike [[SnapshotRefused]] it is transient for the
+    * caller — once maintenance ends, the same read succeeds. */
+  private[batch] final class ReadersStarved(msg: String)
     extends IllegalStateException(msg)
 
   /** The one retry policy of every snapshot read: run `resolveOnce` (one
@@ -1423,7 +1429,7 @@ object Upsert {
         case Some(r) => return r
         case None => // resolved, but a writer landed mid-read: re-resolve
       } catch {
-        case e: SnapshotRefused => throw e
+        case e @ (_: SnapshotRefused | _: ReadersStarved) => throw e
         case scala.util.control.NonFatal(e) => lastErr = e
       }
       if (attempt < maxAttempts) Thread.sleep(math.min(25L * attempt, 400L))
@@ -1498,7 +1504,7 @@ object Upsert {
         while (TxnLog.readerState(spark, table,
             staleLockMs = inFlightPatienceMs, allClaimsOnly = true)._2) {
           if (System.currentTimeMillis() - waitStart > waitCapMs)
-            throw new SnapshotRefused(
+            throw new ReadersStarved(
               s"readCommitted: $table has had whole-table claims in flight " +
                 s"for over $waitCapMs ms — maintenance is starving readers")
           Thread.sleep(25)

@@ -65,6 +65,11 @@ object BloomIndex {
   private def indexDir(table: String, column: String) =
     s"$table/_graft_bloom/$column"
 
+  /** The sidecar as written, `(file, filter)`: read with its fixed schema,
+    * never inferred (inference is a Spark job per read). */
+  private def readSidecar(spark: SparkSession, table: String, column: String): DataFrame =
+    spark.read.schema("file STRING, filter BINARY").parquet(indexDir(table, column))
+
   /** `input_file_name()` ⇄ Hadoop-listing normalization: both sides key
     * the sidecar by the scheme-stripped URI path. */
   private def normKey(p: String): String = new java.net.URI(p).getPath
@@ -242,7 +247,7 @@ object BloomIndex {
     // KEYS only on the driver — the kept filters' bytes stay on executors
     // and flow old-sidecar → new-sidecar via a broadcast semi-join
     import spark.implicits._
-    val oldKeys = spark.read.parquet(idx.toString)
+    val oldKeys = readSidecar(spark, table, column)
       .select("file").as[String].collect().toSet
     val current = listDataFiles(fs, root)
     val currentKeys = current.map(normKey).toSet
@@ -251,7 +256,7 @@ object BloomIndex {
     val dropped = oldKeys.size - keptCount
     if (newFiles.isEmpty && dropped == 0)
       return RefreshStats(0L, 0L, current.size.toLong)
-    val kept = spark.read.parquet(idx.toString).join(
+    val kept = readSidecar(spark, table, column).join(
       broadcast(currentKeys.toSeq.toDF("file")), Seq("file"), "left_semi")
     writeSidecar(spark, table, column,
       kept.unionByName(filterEntries(spark, table, newFiles, column, fpp)))
@@ -341,7 +346,7 @@ object BloomIndex {
     // not GC .tmp- siblings that may belong to a LIVE in-flight rebuild
     AtomicWrite.recoverSwap(spark, indexDir(table, column), gcTmp = false)
     import spark.implicits._
-    val sidecar = spark.read.parquet(indexDir(table, column))
+    val sidecar = readSidecar(spark, table, column)
     // admission runs ON EXECUTORS: each task deserializes and key-tests the
     // filters it read and ships back only the ADMITTING file keys, so
     // driver state is O(admitted + files) path strings — at 100 TB /

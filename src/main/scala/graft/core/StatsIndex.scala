@@ -295,7 +295,9 @@ object StatsIndex {
 
   private[core] def readSidecar(
       spark: SparkSession, table: String, column: String): Seq[Entry] =
-    spark.read.parquet(indexDir(table, column)).collect().toSeq.map { r =>
+    // read with the written schema, never inferred (a Spark job per read)
+    spark.read.schema(org.apache.spark.sql.Encoders.product[Entry].schema)
+      .parquet(indexDir(table, column)).collect().toSeq.map { r =>
       def optL(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
       def optD(i: Int) = if (r.isNullAt(i)) None else Some(r.getDouble(i))
       def optS(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))

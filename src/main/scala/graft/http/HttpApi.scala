@@ -7,7 +7,7 @@ import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.batch.{BatchRegistry, BatchRequest, BatchService, BatchStatus}
@@ -33,12 +33,18 @@ import graft.streaming.QueryLifecycle
   * Physical divergence from the reference, on purpose: data pages execute
   * `BatchService.readData` (distributed TakeOrderedAndProject of ONE page)
   * and only that page is collected — the reference materializes the whole
-  * snapshot on the driver per request (`toJSON.collect()`,
-  * BatchRoutes.scala:149,221), which dies at 100 TB. `rowCount` comes from
-  * the job record (captured by `observe()` at write time), never a
-  * re-count. Aggregated pages go through the same distributed page shape
+  * snapshot on the driver per request (BatchRoutes.scala:149,221), which
+  * dies at 100 TB. `rowCount` comes from the job record (captured by
+  * `observe()` at write time), never a re-count. Aggregated pages go
+  * through the same distributed page shape
   * (`BatchService.readAggregatedPage`) — per-customer aggregates are NOT
   * bounded at 100 TB, so they are never fully collected either.
+  *
+  * Every served page is one Spark job of one stage: `BatchService` reads
+  * its outputs with their pinned schemas (no inference job), and the JSON
+  * is rendered inside the plan ([[HttpApi.jsonRows]]), so the page's
+  * top-k projects the JSON text itself and collects as per-task top-k
+  * merged on the driver, with no shuffle.
   */
 final class HttpApi(
     spark: SparkSession,
@@ -168,7 +174,7 @@ final class HttpApi(
             case after @ Some(_) =>
               val page = service.readDataAfter(id, after, limit, maxPageSize)
                 .fold(m => throw new IllegalStateException(m), identity)
-              val rows = page.toJSON.collect().toVector.map(Json.parse)
+              val rows = HttpApi.jsonRows(page).map(Json.parse)
               val nextAfter = rows.lastOption.map(_.asObj("transaction_id").str)
               reply(ex, 200, JObj(Vector[(String, JVal)](
                 "batchId" -> JStr(id),
@@ -179,7 +185,7 @@ final class HttpApi(
             case None =>
               val page = service.readData(id, offset, limit, maxPageSize)
                 .fold(m => throw new IllegalStateException(m), identity)
-              val rows = page.toJSON.collect().toVector.map(Json.parse)
+              val rows = HttpApi.jsonRows(page).map(Json.parse)
               val hasMore = rec.rowCount
                 .map(t => offset + limit < t).getOrElse(rows.length == limit)
               reply(ex, 200, JObj(Vector[(String, JVal)](
@@ -204,7 +210,7 @@ final class HttpApi(
           service.readAggregatedPage(id, analysis, offset, limit, maxPageSize) match {
             case Left(msg) => reply(ex, 404, err("ANALYSIS_NOT_FOUND", msg))
             case Right(df) =>
-              val rows = presentationRounded(df).toJSON.collect().toVector.map(Json.parse)
+              val rows = HttpApi.jsonRows(presentationRounded(df)).map(Json.parse)
               reply(ex, 200, JObj.of(
                 "batchId" -> JStr(id),
                 "analysisType" -> JStr(analysis),
@@ -557,13 +563,12 @@ final class HttpApi(
             Right((df,
               version.getOrElse(graft.core.TxnLog.currentVersion(spark, table))))
           } catch {
-            // refused versions (beyond tip, below the retention horizon,
-            // no commits) are CLIENT errors, not 500s
-            case e: IllegalArgumentException => Left(e.getMessage)
-            case e: IllegalStateException    => Left(e.getMessage)
+            case e @ (_: IllegalArgumentException | _: IllegalStateException) => Left(e)
           }
         resolved match {
-          case Left(msg) => reply(ex, 400, err("INVALID_VERSION", msg))
+          case Left(e) =>
+            val (status, code) = HttpApi.versionFailure(e)
+            reply(ex, status, err(code, e.getMessage))
           case Right((df, version)) =>
             TableShape(df, q) match {
               case Left(msg) => reply(ex, 400, err("INVALID_REQUEST", msg))
@@ -912,7 +917,7 @@ final class HttpApi(
       case Some(other)   => other.render
       case None          => "" // column projected away — refused above
     }
-    // a column's cursor VALUE, None on NULL (toJSON omits null fields)
+    // a column's cursor VALUE, None on NULL (the JSON omits null fields)
     def cv(row: JVal, c: String): Option[String] = row.asObj.get(c)
       .collect { case JStr(s) => s; case j if j != JNull => j.render }
     after match {
@@ -938,7 +943,7 @@ final class HttpApi(
                   (col(ob) === aTyped && gt(col(tb), tTyped))
                 val page = df.filter(seek)
                   .orderBy(dir(col(ob)), dir(col(tb))).limit(limit)
-                val rows = page.toJSON.collect().toVector.map(Json.parse)
+                val rows = HttpApi.jsonRows(page).map(Json.parse)
                 // a NULL tiebreak can slip past the ob > A arm but no
                 // composite seek can ever resume past it — refuse loudly
                 // (the run-too-wide 400 precedent), never emit a cursor
@@ -971,7 +976,7 @@ final class HttpApi(
                 // strict > seek would silently skip the run's remainder
                 val seek = gt(col(ob), aTyped)
                 val page = df.filter(seek).orderBy(dir(col(ob))).limit(limit + 1)
-                val fetched = page.toJSON.collect().toVector.map(Json.parse)
+                val fetched = HttpApi.jsonRows(page).map(Json.parse)
                 val (rows, more) =
                   if (fetched.length <= limit) (fetched, false)
                   else {
@@ -1017,7 +1022,7 @@ final class HttpApi(
         // names the fix. Offset clients see identical rows.
         val page = df.orderBy(ordCols.map(c => dir(col(c))): _*)
           .offset(offset).limit(limit + 1)
-        val fetched = page.toJSON.collect().toVector.map(Json.parse)
+        val fetched = HttpApi.jsonRows(page).map(Json.parse)
         val rows = fetched.take(limit)
         val more = fetched.length > limit
         val cursorFields: Vector[(String, JVal)] = orderBy match {
@@ -1202,5 +1207,33 @@ final class HttpApi(
     ex.sendResponseHeaders(status, bytes.length.toLong)
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
+  }
+}
+
+object HttpApi {
+  import org.apache.spark.sql.functions.{col, struct, to_json}
+
+  /** The rows of `df`, one JSON object per row, byte for byte what the
+    * `Dataset` JSON rendering produces (HttpSpec pins it): the same
+    * generator and options, with the session time zone. The JSON is the
+    * frame's final projection, `to_json(struct(*))`; the star expands to
+    * the output attributes, so dotted and duplicate column names render as
+    * they do there. Catalyst folds that projection into a page's
+    * `TakeOrderedAndProject`, which collects as one job of one stage
+    * (per-task top-k, merged on the driver). A `MapPartitions` on top of
+    * the top-k instead forces a second stage that shuffles every task's
+    * top-k into one partition. */
+  private[graft] def jsonRows(df: DataFrame): Vector[String] =
+    df.select(to_json(struct(col("*")))).collect().toVector.map(_.getString(0))
+
+  /** Status and error code for a `/table/data` version that failed to
+    * resolve. A refused version (beyond the tip, below the retention
+    * horizon, vacuumed, no commits) is the client's: 400. Any other
+    * `IllegalStateException` (no stable snapshot under contention, readers
+    * starved by maintenance) is transient: 503, and a retry can succeed. */
+  private[graft] def versionFailure(e: Throwable): (Int, String) = e match {
+    case _: graft.batch.Upsert.SnapshotRefused | _: IllegalArgumentException =>
+      (400, "INVALID_VERSION")
+    case _ => (503, "SNAPSHOT_UNAVAILABLE")
   }
 }

@@ -183,6 +183,20 @@ class BatchSpec extends SparkSpec {
     assert(svc.readData("nope", 0, 10).isLeft)
   }
 
+  test("pinned read schemas equal what inference reads from the published dirs") {
+    val (svc, _) = newService()
+    val Right(id) = svc.submit(sourcePath,
+      BatchRequest("2026-01-01", "2026-01-10", "full_report"))
+    awaitCompleted(svc, id)
+    val rec = svc.status(id).get
+    assert(svc.readData(id, 0, 1).toOption.get.schema ==
+      spark.read.parquet(rec.rawPath.get).schema)
+    new java.io.File(rec.aggregatedPath.get).list().foreach { a =>
+      assert(svc.readAggregated(id, a).toOption.get.schema ==
+        spark.read.parquet(s"${rec.aggregatedPath.get}/$a").schema, a)
+    }
+  }
+
   test("snapshot layout: files are range-clustered on the serving key") {
     val (svc, _) = newService()
     val Right(id) = svc.submit(sourcePath,

@@ -120,6 +120,115 @@ class HttpSpec extends SparkSpec {
     } finally api.stop()
   }
 
+  test("jsonRows renders every row byte for byte as Dataset.toJSON does") {
+    val frame = spark.sql("""
+      SELECT * FROM VALUES
+        (1, 'héllo ✓ "q" \\ 日本', TIMESTAMP'2026-01-02 03:04:05.123456',
+         DATE'2026-01-02', 12.3400BD, 1.0E-7D, array(1, NULL, 3),
+         map('k', 1.5D), named_struct('a', 1, 'b', 'x'), 'dot'),
+        (2, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL),
+        (3, '', TIMESTAMP'1969-12-31 23:59:59', DATE'1900-01-01', -0.0001BD,
+         double('NaN'), array(4), map('z', double('Infinity')),
+         named_struct('a', CAST(NULL AS INT), 'b', CAST(NULL AS STRING)), '')
+        AS t(id, text, ts, d, dec, dbl, arr, m, s, `a.b`)""")
+      .withColumn("ts_ntz", col("ts").cast("timestamp_ntz"))
+    // a duplicate column name too: both keys render, in output order
+    val dup = frame.select(col("*"), (col("id") * 10).as("id"))
+    for (df <- Seq(frame, dup.orderBy(frame("id")).offset(1).limit(2))) {
+      val want = df.toJSON.collect().toVector
+      assert(HttpApi.jsonRows(df) == want)
+    }
+    assert(HttpApi.jsonRows(frame).exists(_.contains("\"a.b\":\"dot\"")))
+  }
+
+  test("a served batch page is one Spark job of one stage, " +
+      "with or without the pinned schema file") {
+    val reg = new BatchRegistry(None)
+    val svc = new BatchService(spark, reg, Files.createTempDirectory("httpjobs").toString)
+    val api = new HttpApi(spark, svc, reg, sourcePath).start()
+    def getRaw(path: String): String = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${api.port}$path")).GET().build(),
+      HttpResponse.BodyHandlers.ofString()).body()
+    try {
+      val (_, b) = post(api.port, "/batch/run",
+        """{"startDate":"2026-02-01","endDate":"2026-02-09","analysisType":"customer_segmentation"}""")
+      val id = b.asObj("batchId").str
+      await(get(api.port, s"/batch/status/$id")._2.asObj("status").str == "COMPLETED")
+      val pages = Seq(s"/batch/data/$id?limit=20&offset=40",
+        s"/batch/data/$id?limit=20&after=t050",
+        s"/batch/data/$id/aggregated?limit=4&offset=2")
+      val served = pages.map { p =>
+        var body = ""
+        val (jobs, stages) = jobsAndStages { body = getRaw(p) }
+        assert(jobs == 1 && stages == 1, s"$p ran $jobs jobs, $stages stages")
+        body
+      }
+      assert(served.forall(_.contains("\"returned\":")), served.mkString("\n"))
+      // outputs published before the schema file existed read by inference
+      // and serve the same bytes
+      val rec = reg.get(id).get
+      Seq(rec.rawPath.get, s"${rec.aggregatedPath.get}/customer_segmentation")
+        .foreach(d => assert(Files.deleteIfExists(java.nio.file.Paths.get(d, "_schema.json"))))
+      assert(pages.map(getRaw) == served)
+    } finally api.stop()
+  }
+
+  test("/table/data: a refused version is a 400, a transient resolution failure a 503") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("httpvfail").toString + "/t"
+    graft.batch.Upsert.mergeByKey(spark, t,
+      Seq(("2026-05-01", 1L, 1.0)).toDF("day", "k", "v"), "day", Seq("k"))
+    val api = new HttpApi(spark, new BatchService(spark, new BatchRegistry(None),
+      Files.createTempDirectory("httpvfailb").toString), new BatchRegistry(None), sourcePath).start()
+    try {
+      val enc = java.net.URLEncoder.encode(t, "UTF-8")
+      for (q <- Seq("asOf=999", "asOfTs=1")) {
+        val (c, b) = get(api.port, s"/table/data?table=$enc&partCol=day&$q")
+        assert(c == 400 && b.asObj("error").str == "INVALID_VERSION", s"$q: $c $b")
+      }
+    } finally api.stop()
+    assert(HttpApi.versionFailure(new graft.batch.Upsert.SnapshotRefused("vacuumed")) ==
+      (400, "INVALID_VERSION"))
+    assert(HttpApi.versionFailure(new IllegalArgumentException("no commits")) ==
+      (400, "INVALID_VERSION"))
+    assert(HttpApi.versionFailure(new IllegalStateException(
+      "did not yield a stable snapshot in 80 attempts")) == (503, "SNAPSHOT_UNAVAILABLE"))
+  }
+
+  /** Spark jobs and stages started by `body`, streaming jobs excepted. A
+    * fence job runs after `body`; the listener bus delivers in order, so
+    * once the fence has ended every event of `body` has been counted. */
+  private def jobsAndStages(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    val fence = "jobs-and-stages-fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fenceJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    def group(props: java.util.Properties) =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+    def counted(props: java.util.Properties) = !group(props).contains(fence) &&
+      Option(props).forall(_.getProperty("sql.streaming.queryId") == null)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (group(j.properties).contains(fence)) fenceJob.set(j.jobId)
+        else if (counted(j.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        if (counted(s.properties)) stages.incrementAndGet()
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (j.jobId == fenceJob.get) fenced.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(fence, fence)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "fence job never ended")
+    } finally sc.removeSparkListener(listener)
+    (jobs.get(), stages.get())
+  }
+
   test("health reports healthy with uptime") {
     val api = newApi()
     try {

@@ -395,4 +395,32 @@ class IncrementalViewSpec extends SparkSpec {
     }
     assert(e5.getMessage.contains("NEGATIVE"), e5.getMessage)
   }
+
+  test("racing creates of one view: exactly one registers, every other refuses") {
+    val view = tmp("ivrace")
+    // eight distinct definitions, so a silently-winning later create would
+    // show as a registration that is not the one create that succeeded
+    val srcs = (0 until 8).map(i => s"/src-$i")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(srcs.size)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val outcomes =
+      try {
+        val fs = srcs.map(src => pool.submit(new java.util.concurrent.Callable[Option[String]] {
+          def call(): Option[String] = {
+            start.await()
+            try {
+              IncrementalView.register(spark, view, src, "day",
+                Seq("day", "cat"), Seq("qty"), "day")
+              None
+            } catch { case e: IllegalArgumentException => Some(e.getMessage) }
+          }
+        }))
+        start.countDown()
+        fs.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdownNow()
+    val winners = srcs.zip(outcomes).collect { case (src, None) => src }
+    assert(winners.size == 1, s"exactly one create may succeed: $outcomes")
+    assert(outcomes.flatten.forall(_.contains("already has a view registration")), outcomes)
+    assert(IncrementalView.spec(spark, view).map(_.src) == winners.headOption)
+  }
 }
