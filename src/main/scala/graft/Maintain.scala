@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.batch.BatchRegistry
-import graft.core.GraftConfig
+import graft.core.{GraftConfig, SparkSessionFactory}
 import graft.streaming.SinkCompaction
 
 /** Scheduled-maintenance ops — the operational form of the reference's
@@ -348,7 +348,7 @@ object Maintain {
     val cfg = GraftConfig.load()
     val table = args.headOption.getOrElse(cfg.stream.tableDir)
     val mode = args.drop(1).headOption.getOrElse("stream")
-    val spark = SparkSession.builder()
+    val spark = SparkSessionFactory.builder()
       .master(sys.env.getOrElse("GRAFT_SPARK_MASTER", cfg.spark.master))
       .appName(s"${cfg.appName}-maintenance")
       .config("spark.sql.shuffle.partitions", cfg.spark.shufflePartitions)

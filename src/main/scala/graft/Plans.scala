@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.SparkSessionFactory
+
 /** Dev-only plan probe: prints the formatted physical plan of named queries
   * (all of them if no names given) so plan hygiene — pushed filters, pruned
   * read schemas, broadcast vs shuffle joins, single-shuffle windows — can be
@@ -9,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
+    val spark = SparkSessionFactory.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.sql.session.timeZone", "UTC")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.batch.Upsert
+import graft.core.SparkSessionFactory
 
 /** Micro-benchmarks of the storage layer — the write-path costs the query
   * bench can't see: MERGE throughput, small-file compaction, and committed
@@ -318,7 +319,7 @@ object StorageBench {
     * per run — for quiet-host regression checks without paying for the
     * full query bench around it. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    val spark = SparkSessionFactory.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")

@@ -122,12 +122,27 @@ private[batch] object TableMeta {
   /** Blind replace: `all` becomes the next version whatever the current
     * set holds. A concurrent writer of the same version loses loudly. */
   def write(spark: SparkSession, table: String, prefix: String,
-      all: Map[String, String]): Unit = {
+      all: Map[String, String]): Unit = serialized(spark, table, prefix) {
     val (v, _) = latest(spark, table, prefix)
     if (!install(spark, table, prefix, v, all))
       throw new org.apache.hadoop.fs.FileAlreadyExistsException(
         s"${metaDir(table)}/$prefix${v + 1}.json: a concurrent writer " +
           "claimed this registry version first")
+  }
+
+  private val monitors = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** Edits of one registry run one at a time in this JVM. The exclusive
+    * install alone cannot order them: the sweep frees superseded version
+    * names, so a writer that read v while racers installed v + 1 and
+    * v + 2 (sweeping v + 1) would claim the freed v + 1 and be shadowed by
+    * v + 2 — a silently lost update. Across processes the exclusive
+    * install stays the guard; that race then needs two foreign installs
+    * inside one writer's read-to-install window. */
+  private def serialized[A](spark: SparkSession, table: String, prefix: String)(body: => A): A = {
+    val dir = metaDir(table)
+    val key = dir.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(dir) + "/" + prefix
+    monitors.computeIfAbsent(key, _ => new Object).synchronized(body)
   }
 
   /** Read-modify-write: `f` maps the newest set, read at version v, to
@@ -137,17 +152,18 @@ private[batch] object TableMeta {
     * against the racer's edit; fails loudly after 50 attempts. Returns
     * whether a version was installed (false: `f` changed nothing). */
   def update(spark: SparkSession, table: String, prefix: String)(
-      f: Map[String, String] => Map[String, String]): Boolean = {
+      f: Map[String, String] => Map[String, String]): Boolean = serialized(spark, table, prefix) {
     var attempts = 0
-    while (attempts < 50) {
+    var installed: Option[Boolean] = None
+    while (installed.isEmpty && attempts < 50) {
       attempts += 1
       val (v, cur) = latest(spark, table, prefix)
       val next = f(cur)
-      if (next == cur) return false
-      if (install(spark, table, prefix, v, next)) return true
+      if (next == cur) installed = Some(false)
+      else if (install(spark, table, prefix, v, next)) installed = Some(true)
     }
-    throw new IllegalStateException(
-      s"registry $prefix* on $table still contended after $attempts attempts")
+    installed.getOrElse(throw new IllegalStateException(
+      s"registry $prefix* on $table still contended after $attempts attempts"))
   }
 
   /** Install `all` as version `v + 1`, exclusively; false if a concurrent
@@ -159,9 +175,9 @@ private[batch] object TableMeta {
     val fs = dir.getFileSystem(conf)
     fs.mkdirs(dir)
     val next = new Path(dir, s"$prefix${v + 1}.json")
-    // Full content lands in a hidden temp sibling, then RENAMES into the
-    // versioned name: the rename is atomic AND exclusive (fails on an
-    // existing name), so a concurrent reader can never observe a
+    // Full content lands in a hidden temp sibling, then installs under the
+    // versioned name by one atomic AND exclusive step (a link or rename
+    // that fails on an existing name), so a concurrent reader can never observe a
     // half-written registry file — a plain create-then-write tore in the
     // wild (an identity high-water-mark read racing a concurrent
     // allocator's write parsed "unexpected end of input") — and a
@@ -174,15 +190,33 @@ private[batch] object TableMeta {
         .render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val renamed =
-      try {
-        org.apache.hadoop.fs.FileContext.getFileContext(next.toUri, conf)
-          .rename(tmp, next) // no OVERWRITE flag: exclusive install
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          fs.rename(tmp, next) // FileSystem.rename: false when dest exists
-      }
+      if (fs.getScheme == "file") {
+        // locally, FileContext's no-OVERWRITE rename checks the destination
+        // and then rename(2)s over whatever landed in between; link(2)
+        // refuses an existing name atomically (TxnLog.createExclusive keys
+        // its O_EXCL create on the same scheme)
+        val src = java.nio.file.Paths.get(tmp.toUri.getPath)
+        val dst = java.nio.file.Paths.get(next.toUri.getPath)
+        try {
+          java.nio.file.Files.createLink(dst, src)
+          // the checksum sibling follows, as the rename would have moved it
+          val crc = src.resolveSibling(s".${src.getFileName}.crc")
+          if (java.nio.file.Files.exists(crc))
+            java.nio.file.Files.move(crc, dst.resolveSibling(s".${dst.getFileName}.crc"),
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          java.nio.file.Files.delete(src)
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else
+        try {
+          org.apache.hadoop.fs.FileContext.getFileContext(next.toUri, conf)
+            .rename(tmp, next) // no OVERWRITE flag: exclusive install
+          true
+        } catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            fs.rename(tmp, next) // FileSystem.rename: false when dest exists
+        }
     if (!renamed) {
       fs.delete(tmp, false)
       return false

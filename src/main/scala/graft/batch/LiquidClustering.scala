@@ -82,12 +82,14 @@ object LiquidClustering {
   def setClusterBy(spark: SparkSession, table: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "CLUSTER BY needs at least one column")
     require(cols.distinct.size == cols.size, s"duplicate cluster key in $cols")
-    val state = TableMeta.read(spark, table, Prefix)
-    if (state.get(ColsKey).contains(cols.mkString(","))) return // idempotent
+    val spec = cols.mkString(",")
+    if (TableMeta.read(spark, table, Prefix).get(ColsKey).contains(spec)) return // idempotent
     // a spec change invalidates every recorded fingerprint — keep ONLY the
     // spec so the next pass re-evaluates from scratch
     TableFeatures.declare(spark, table, TableFeatures.Clustering)
-    TableMeta.write(spark, table, Prefix, Map(ColsKey -> cols.mkString(",")))
+    TableMeta.update(spark, table, Prefix) { cur =>
+      if (cur.get(ColsKey).contains(spec)) cur else Map(ColsKey -> spec)
+    }
   }
 
   /** The registered cluster keys, if any. */
@@ -101,8 +103,9 @@ object LiquidClustering {
     * [[setClusterBy]] starts from scratch. Idempotent. This is the verb
     * that clears [[TableFeatures.residue]] for the clustering feature. */
   def clusterByNone(spark: SparkSession, table: String): Unit =
-    if (clusterSpec(spark, table).isDefined)
-      TableMeta.write(spark, table, Prefix, Map.empty)
+    TableMeta.update(spark, table, Prefix) { cur =>
+      if (cur.contains(ColsKey)) Map.empty else cur
+    }
 
   /** One incremental clustering pass. Returns what it did; see class doc
     * for the cost shape. `targetBytes` sizes output files exactly like
@@ -258,12 +261,15 @@ object LiquidClustering {
         .takeWhile(c => ours(c.version) || c.ref.exists(ours))
         .lastOption.map(_.version).getOrElse(vNow))
     // carry forward records for partitions that were NOT candidates (still
-    // clustered, untouched since) and fold in this pass's results
-    val carried = state.view.filterKeys(k =>
-      !k.startsWith("_") && !candidates.contains(k)).toMap
-    TableMeta.write(spark, table, Prefix,
-      carried ++ newState ++ Map(ColsKey -> cols.mkString(",")) ++
-        vNext.map(v => VersionKey -> v.toString))
+    // clustered, untouched since) and fold in this pass's results — unless
+    // the spec changed mid-pass: then this pass's fingerprints describe a
+    // stale layout, and the new spec (or its removal) stands as set
+    val spec = cols.mkString(",")
+    TableMeta.update(spark, table, Prefix) { cur =>
+      if (!cur.get(ColsKey).contains(spec)) cur
+      else cur.view.filterKeys(k => !k.startsWith("_") && !candidates.contains(k)).toMap ++
+        newState ++ Map(ColsKey -> spec) ++ vNext.map(v => VersionKey -> v.toString)
+    }
     Report(mode, candidates.size, skipped, tight.result(), rewrote, busySkipped)
   }
 }

@@ -6,7 +6,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -35,9 +37,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * (file, filter bytes), so it ships with the table like Delta's index
   * files.
   *
-  * Lookup shape: the sidecar is key-tested ON EXECUTORS (each task
-  * deserializes the filters it read and returns only admitting file
-  * keys — the driver never holds non-admitting filter bytes), then the
+  * Lookup shape: the sidecar is key-tested ON EXECUTORS in one pass (each
+  * task deserializes the filters it read and returns (file key, admits)
+  * pairs — the driver never holds filter bytes), then the
   * lookup reads ONLY the admitted files — with
   * `basePath` set to the table root so Hive partition-dir columns
   * (`event_date=…`) survive exactly as a full-table scan would produce
@@ -112,11 +114,16 @@ object BloomIndex {
     * instead of shipping one filter per (task, file). Driver state is
     * O(files) path strings only (the footer-size map and the fold-key
     * collect), never O(files × filterBytes). The read pins `basePath` so a
-    * filter on a PARTITION column still sees its values, and merges
-    * schemas so files predating a widening evolution fold as all-null
-    * (→ empty filter, skippable).
+    * filter on a PARTITION column still sees its values. When every footer
+    * records the column with one Spark type and exact null counts, the
+    * read pins that one-column schema and the footer counts of 0 name the
+    * empty-filter files: the pass is the footer job plus the sidecar
+    * write. Otherwise (a type-widened table, a partition-column index,
+    * files predating the column) it merges schemas, so files predating a
+    * widening evolution fold as all-null (→ empty filter, skippable), and
+    * probes the fold's keys for the empty files.
     *
-    * The table is read ONCE even though two actions run over `folded`
+    * The table is read ONCE even when two actions run over `folded`
     * (the empty-file key probe, then the sidecar write): both actions
     * share the same RDD object, so its reduceByKey shuffle dependency is
     * planned once — the second action reuses the registered map outputs
@@ -135,8 +142,15 @@ object BloomIndex {
     import spark.implicits._
     if (files.isEmpty)
       return spark.emptyDataset[(String, Array[Byte])].toDF("file", "filter")
-    val sizes = footerCounts(spark, files, column)
+    val footers = footerCounts(spark, files, column)
+    val sizes = footers.map { case (k, (n, _)) => k -> n }
     val sizesB = spark.sparkContext.broadcast(sizes)
+    // every footer records the column with one Spark type and exact null
+    // counts: read with that pinned one-column schema (no inference job)
+    val pinned = footers.values.map(_._2).toSeq.distinct match {
+      case Seq(Some(dt)) => Some(dt)
+      case _ => None
+    }
     // one mergeSchema mount when the footers agree; a TYPE-WIDENED table
     // mixes physical widths across partition dirs (an int and a bigint
     // footer refuse to merge), so fall back to per-dir legs projected to
@@ -144,8 +158,11 @@ object BloomIndex {
     // projection is width-agnostic (every allowed integral widening keeps
     // the rendered form), and each file is still read exactly once
     def projected(fs: Seq[String]): Option[DataFrame] = {
-      val d = spark.read.option("basePath", table)
-        .option("mergeSchema", "true").parquet(fs: _*)
+      val r = spark.read.option("basePath", table)
+      val d = pinned match {
+        case Some(dt) => r.schema(StructType(Seq(StructField(column, dt)))).parquet(fs: _*)
+        case None => r.option("mergeSchema", "true").parquet(fs: _*)
+      }
       if (!d.columns.contains(column)) None
       else Some(d.select(input_file_name().as("_f"),
         col(column).cast("string").as("_v")))
@@ -186,11 +203,17 @@ object BloomIndex {
           out.toByteArray
         }
       }
-    // only KEYS come back; files with no non-null values get an EMPTY
-    // filter (a non-null lookup value cannot live there, so they are
-    // skippable, not unknown) — tiny driver-built rows, typically few
-    val foldedKeys = folded.keys.collect().toSet
-    val empties = files.map(normKey).filterNot(foldedKeys).map { k =>
+    // files with no non-null values get an EMPTY filter (a non-null lookup
+    // value cannot live there, so they are skippable, not unknown) — tiny
+    // driver-built rows, typically few. With pinned footers their exact
+    // counts of 0 name them; otherwise only the fold's KEYS come back
+    val emptyKeys: Seq[String] =
+      if (pinned.isDefined) files.map(normKey).filter(k => sizes.get(k).contains(0L))
+      else {
+        val foldedKeys = folded.keys.collect().toSet
+        files.map(normKey).filterNot(foldedKeys)
+      }
+    val empties = emptyKeys.map { k =>
       val bf = BloomFilter.create(math.max(64L, sizes.getOrElse(k, 64L)), fpp)
       val out = new java.io.ByteArrayOutputStream()
       bf.writeTo(out)
@@ -276,14 +299,17 @@ object BloomIndex {
   /** Per-file expected insertion counts from parquet footers only: row
     * count minus the column's null count when every row group carries
     * null stats, plain row count otherwise (over-sizing is safe; an
-    * under-sized filter would raise the effective fpp). Footer reads are
+    * under-sized filter would raise the effective fpp). Beside each count
+    * rides the column's Spark type from the footer's Spark row metadata,
+    * present only when that metadata names the column AND every row group
+    * carries its null count — so a typed count is exact. Footer reads are
     * distributed over executors — O(files) KB-scale metadata reads, no
     * row-group IO — and the result is O(files) driver state, keyed by the
     * same normalized path the fold pass uses. */
   private[core] def footerCounts(
       spark: SparkSession,
       files: Seq[String],
-      column: String): Map[String, Long] = {
+      column: String): Map[String, (Long, Option[DataType])] = {
     if (files.isEmpty) return Map.empty
     val confB = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
@@ -306,7 +332,14 @@ object BloomIndex {
               case _ => statsOk = false
             }
           }
-          normKey(full) -> (if (statsOk) math.max(0L, rows - nulls) else rows)
+          val sparkType = Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+            .get(ParquetReadSupport.SPARK_METADATA_KEY))
+            .flatMap(json => DataType.fromJson(json) match {
+              case st: StructType => st.find(_.name == column).map(_.dataType)
+              case _ => None
+            })
+          normKey(full) -> (if (statsOk) math.max(0L, rows - nulls) else rows,
+            sparkType.filter(_ => statsOk))
         } finally reader.close()
       }
       .collect().toMap
@@ -345,24 +378,17 @@ object BloomIndex {
     // read-path repair of a builder crashed between its swap renames; must
     // not GC .tmp- siblings that may belong to a LIVE in-flight rebuild
     AtomicWrite.recoverSwap(spark, indexDir(table, column), gcTmp = false)
-    import spark.implicits._
-    val sidecar = readSidecar(spark, table, column)
-    // admission runs ON EXECUTORS: each task deserializes and key-tests the
-    // filters it read and ships back only the ADMITTING file keys, so
-    // driver state is O(admitted + files) path strings — at 100 TB /
-    // millions of files the driver never materializes the
-    // O(files × filterBytes) sidecar it would have choked on
-    val admittedKeys = sidecar.select("file", "filter").rdd.mapPartitions { it =>
-      it.flatMap { r =>
-        val bf = BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-        if (bf.mightContainString(value)) Iterator.single(r.getString(0))
-        else Iterator.empty
-      }
-    }.collect().toSet
-    // key column only — parquet column pruning keeps filter bytes out of
-    // this read entirely
-    val knownKeys = sidecar.select("file").as[String].collect().toSet
+    // ONE pass ON EXECUTORS: each task deserializes and key-tests the
+    // filters it read and ships back (file, admits) — driver state is
+    // O(files) path strings; at 100 TB / millions of files the driver never
+    // materializes the O(files × filterBytes) sidecar it would choke on
+    val tested = readSidecar(spark, table, column).rdd.map { r =>
+      val bf = BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+      (r.getString(0), bf.mightContainString(value))
+    }.collect()
+    val knownKeys = tested.map(_._1).toSet
+    val admittedKeys = tested.collect { case (k, true) => k }.toSet
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val dataFiles = listDataFiles(fs, root)
@@ -378,8 +404,8 @@ object BloomIndex {
     * partition dirs; `_graft_*` sidecars and `_spark_metadata` excluded)
     * as FULL scheme-qualified path strings — safe to hand to
     * `spark.read.parquet` on any filesystem. Normalize with [[normKey]]
-    * only when joining against sidecar keys. */
-  private def listDataFiles(
+    * only when joining against sidecar keys. Shared with [[StatsIndex]]. */
+  private[core] def listDataFiles(
       fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[String] = {
     val out = Seq.newBuilder[String]
     def walk(p: Path): Unit =

@@ -9,8 +9,29 @@ import org.apache.spark.sql.SparkSession
   * (skew-join split, shuffle coalescing). Shuffle partitions default to the
   * core count locally — on a real cluster set this to ~2-3× total executor
   * cores, or leave AQE's coalescing to trim it from a higher ceiling.
+  *
+  * Local storage: every session graft builds starts from [[builder]],
+  * which routes `file:` URIs to [[LocalFs]] through two Hadoop keys —
+  * `fs.file.impl` (the `FileSystem` API: Spark's reads and writes, the
+  * TxnLog) and `fs.AbstractFileSystem.file.impl` (the `FileContext` API:
+  * atomic renames, Spark's streaming checkpoints). Without libhadoop the
+  * stock local filesystem forks a `chmod` for every file and directory it
+  * creates and a `readlink` for every `FileContext` rename; [[LocalFs]]
+  * does both in-process. What lands on disk stays byte-for-byte the same:
+  * the same mode bits, the same `.crc` checksum files, the same atomic
+  * rename, and the scheme stays `file` (TxnLog's `O_EXCL` create keys on
+  * it). Hadoop caches `FileSystem` instances JVM-wide by scheme, ignoring
+  * the conf, so the keys take effect only when this session's conf is the
+  * first to create a `file:` instance in the JVM — build the session
+  * before touching Hadoop's local filesystem.
   */
 object SparkSessionFactory {
+
+  /** `SparkSession.builder()` with the local-storage keys set; every
+    * graft entry point builds its session from here. */
+  def builder(): SparkSession.Builder = SparkSession.builder()
+    .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Fs].getName)
 
   def create(
       master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
@@ -19,7 +40,7 @@ object SparkSessionFactory {
       fairSchedulerXml: Option[String] = None,
       checkpointRoot: Option[String] = None): SparkSession = {
     val cores = Runtime.getRuntime.availableProcessors()
-    val b = SparkSession.builder()
+    val b = builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.session.timeZone", "UTC")

@@ -118,7 +118,7 @@ object StatsIndex {
         s"for $column (supported: integral, date, timestamp, float/double, string)"))
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries = footerEntries(spark, listDataFiles(fs, root), column, typ)
+    val entries = footerEntries(spark, BloomIndex.listDataFiles(fs, root), column, typ)
     writeSidecar(spark, table, column, entries)
     entries.size.toLong
   }
@@ -270,7 +270,7 @@ object StatsIndex {
     val typ = old.headOption.map(_.typ).orElse(hinted).getOrElse(
       typeTag(spark.read.parquet(table).schema(column).dataType).getOrElse(
         sys.error(s"stats index: unsupported type for $column")))
-    val current = listDataFiles(fs, root)
+    val current = BloomIndex.listDataFiles(fs, root)
     val currentKeys = current.map(normKey).toSet
     val oldByKey = old.map(e => e.file -> e).toMap
     val newFiles = current.filterNot(f => oldByKey.contains(normKey(f)))
@@ -464,7 +464,7 @@ object StatsIndex {
     }
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataFiles = listDataFiles(fs, root)
+    val dataFiles = BloomIndex.listDataFiles(fs, root)
     // a file is scheduled only when EVERY probe's sidecar admits it (a
     // file unknown to a sidecar is admitted by that probe — conservative)
     dataFiles.sorted.partition { f =>
@@ -553,23 +553,4 @@ object StatsIndex {
       column: String,
       value: Any): (DataFrame, Seq[String], Seq[String]) =
     rangeScan(spark, table, column, Some(value), Some(value))
-
-  /** All `*.parquet` data files under the table root — full
-    * scheme-qualified paths (see [[BloomIndex]] for the normalization
-    * contract this pairs with). */
-  private def listDataFiles(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    def walk(p: Path): Unit =
-      fs.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          if (!name.startsWith("_") && !name.startsWith(".")) walk(st.getPath)
-        } else if (name.endsWith(".parquet")) {
-          out += st.getPath.toString
-        }
-      }
-    walk(root)
-    out.result()
-  }
 }

@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -123,6 +128,39 @@ class LiquidClusteringSpec extends SparkSpec {
     val r2 = LiquidClustering.optimize(spark, t, "day")
     assert(r2.mode == "full", s"truncated history must not be vouched for: $r2")
     assert(r2.skippedUnchanged >= 1, s"unchanged d2 skips by fingerprint: $r2")
+  }
+
+  test("a CLUSTER BY set while a pass runs stands: the pass drops its records, keeps the new spec") {
+    val t = tmp()
+    def churn(): Unit = Upsert.mergeByKey(spark, t,
+      Seq("d1", "d2", "d3", "d4").zipWithIndex
+        .map { case (d, i) => scrambled(d, i * 1000, 150) }.reduce(_ unionByName _),
+      "day", Seq("k"))
+    churn()
+    LiquidClustering.setClusterBy(spark, t, Seq("k"))
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Seq(Seq("v"), Seq("k", "v"), Seq("k")).foreach { next =>
+      churn()
+      // the spec changes once the pass is under way: at its first Spark job
+      val jobStarted = new CountDownLatch(1)
+      val probe = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobStarted.countDown()
+      }
+      spark.sparkContext.addSparkListener(probe)
+      val pass =
+        try {
+          val running = Future(LiquidClustering.optimize(spark, t, "day"))
+          assert(jobStarted.await(60, TimeUnit.SECONDS), "the pass ran no job")
+          LiquidClustering.setClusterBy(spark, t, next)
+          Await.result(running, 120.seconds)
+        } finally spark.sparkContext.removeSparkListener(probe)
+      assert(pass.rewritten.nonEmpty, s"the racing pass rewrote nothing: $pass")
+      assert(LiquidClustering.clusterSpec(spark, t).contains(next),
+        s"the spec set mid-pass was lost: ${LiquidClustering.clusterSpec(spark, t)}")
+      // no version floor or fingerprint survived from the racing pass
+      val after = LiquidClustering.optimize(spark, t, "day")
+      assert(after.mode == "full" && after.skippedUnchanged == 0, s"$after")
+    }
   }
 
   test("a busy partition is skipped, not fatal — and is re-examined next pass") {

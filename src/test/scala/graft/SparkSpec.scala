@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.SparkSessionFactory
+
 /** Shared local SparkSession for specs. Small shuffle-partition count keeps
   * tiny-fixture tests fast; production entry points size partitions from
   * input (see Bench/Verify). */
@@ -15,7 +17,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = SparkSessionFactory.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
