@@ -50,7 +50,7 @@ object StorageBench {
         .withColumn("k", concat(lit("new"), col("k")))
         .limit(partitions * rowsPerPartition / 4))
     val tMerge = time {
-      Upsert.mergeByKey(spark, table, updates, "day", Seq("k"), parallelism = 4)
+      Upsert.mergeByKey(spark, table, updates, "day", Seq("k"))
     }
 
     // COMPACT: the merge above left ≥2 file sets per partition; force a
@@ -126,7 +126,7 @@ object StorageBench {
     }
     val tMergeIndexed = time {
       Upsert.mergeByKey(spark, table, frame(0.25, rowsPerPartition / 2),
-        "day", Seq("k"), parallelism = 4)
+        "day", Seq("k"))
     }
 
     // RESTORE: roll back an incident touching 2 of `partitions` days —

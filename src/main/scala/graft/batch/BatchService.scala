@@ -81,9 +81,10 @@ final class BatchService(
 
       // Committed-snapshot read (the Delta behavior the reference gets on
       // every read): during a concurrent multi-partition mergeByKey the job
-      // sees the full pre-merge state or a prefix of its commits, never
-      // partition A post-merge and partition B pre-merge. Tables without a
-      // TxnLog manifest read plainly (zero overhead).
+      // sees the full pre-merge or the full post-merge state (one merge is
+      // one commit), never partition A post-merge and partition B
+      // pre-merge. Tables without a TxnLog manifest read plainly (zero
+      // overhead).
       val source = Upsert.readCommitted(spark, sourcePath, partCol)
       val cols = source.columns.toSet
       val badFilters = req.filters.keys.filterNot(cols.contains)

@@ -155,7 +155,7 @@ object DeletionVectors {
       val partDir = s"$table/$dirName"
       // restore the committed state before computing positions: a crashed
       // writer's uncommitted files must not donate row positions
-      Upsert.repairCrashed(spark, table, dirName, p, claim.version)
+      Upsert.repairCrashedWriter(spark, table, dirName, p, claim.version)
       val fs = new org.apache.hadoop.fs.Path(table)
         .getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(new org.apache.hadoop.fs.Path(partDir))) {

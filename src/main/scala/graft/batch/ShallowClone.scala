@@ -1,6 +1,6 @@
 package graft.batch
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -222,48 +222,11 @@ object ShallowClone {
     val partColP = ColumnMapping.physicalName(colMap, partCol)
     val m = meta(spark, table)
     val (src, pinned) = (m("source"), m("sourceVersion").toLong)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(table).getFileSystem(conf)
+    val fs = new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
     val remote = Upsert.snapshotPhysical(spark, src, partColP, Some(pinned),
       cloneWidenings(spark, table))
     val already = localizedParts(spark, table, partColP)
     val want = parts.distinct.filterNot(already)
-    // exclusive dir install: the rename refuses an existing dest, so a
-    // racing localizer (or a partition merged since the existence check)
-    // loses harmlessly — both staged the same pinned bytes
-    def install(tmp: Path, live: Path): Boolean =
-      try {
-        org.apache.hadoop.fs.FileContext.getFileContext(live.toUri, conf)
-          .rename(tmp, live) // no OVERWRITE
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // FileSystem.rename moves tmp INSIDE an existing live dir
-          // instead of refusing; detect the nested move and UNDO it.
-          // The name that could get nested is made dot-prefixed FIRST:
-          // in the bulk path tmp is named `partCol=value`, and a crash
-          // between the nested move and its undo would otherwise leave a
-          // non-dot dir that reads back as duplicate rows inside the
-          // live partition — a dot-prefixed leftover is invisible to
-          // readers, so the crash window surfaces nothing
-          val src =
-            if (tmp.getName.startsWith(".")) Some(tmp)
-            else {
-              val dotted = new Path(tmp.getParent, s".install-${tmp.getName}")
-              if (fs.rename(tmp, dotted)) Some(dotted) else None
-            }
-          src match {
-            case None => false
-            case Some(st) =>
-              if (!fs.rename(st, live)) false
-              else {
-                val nested = new Path(live, st.getName)
-                if (fs.exists(nested)) { fs.delete(nested, true); false }
-                else true
-              }
-          }
-      }
     want match {
       case Seq() => Seq.empty
       case Seq(p) =>
@@ -277,7 +240,7 @@ object ShallowClone {
             java.util.UUID.randomUUID.toString.take(8))
           try {
             slice.write.parquet(tmp.toString)
-            if (install(tmp, live)) Seq(p) else Seq.empty
+            if (install(fs, tmp, live)) Seq(p) else Seq.empty
           } finally { scala.util.Try(fs.delete(tmp, true)); () }
         }
       case many =>
@@ -297,11 +260,38 @@ object ShallowClone {
               st.isDirectory && st.getPath.getName.startsWith(s"$partColP="))
           staged.flatMap { st =>
             val live = new Path(s"$table/${st.getPath.getName}")
-            if (install(st.getPath, live))
+            if (install(fs, st.getPath, live))
               Some(Upsert.unescape(st.getPath.getName, partColP))
             else None
           }.toSeq.sorted
         } finally { scala.util.Try(fs.delete(stage, true)); () }
+    }
+  }
+
+  /** Exclusive dir install of a staged `tmp` at `live`: false, with
+    * `live` untouched, when `live` already exists — a racing localizer (or
+    * a partition merged since the existence check) loses harmlessly, both
+    * staged the same pinned bytes. `FileSystem.rename` moves a dir INSIDE
+    * an existing destination instead of refusing, so the install detects
+    * that nested move and UNDOES it. The name that could get nested is
+    * made dot-prefixed FIRST: in the bulk path `tmp` is named
+    * `partCol=value`, and a crash between the nested move and its undo
+    * would otherwise leave a non-dot dir that reads back as duplicate rows
+    * inside the live partition — a dot-prefixed leftover is invisible to
+    * readers, so the crash window surfaces nothing. */
+  private[batch] def install(fs: FileSystem, tmp: Path, live: Path): Boolean = {
+    val src =
+      if (tmp.getName.startsWith(".")) Some(tmp)
+      else {
+        val dotted = new Path(tmp.getParent, s".install-${tmp.getName}")
+        if (fs.rename(tmp, dotted)) Some(dotted) else None
+      }
+    src.exists { st =>
+      fs.rename(st, live) && {
+        val nested = new Path(live, st.getName)
+        if (fs.exists(nested)) { fs.delete(nested, true); false }
+        else true
+      }
     }
   }
 
@@ -317,7 +307,6 @@ object ShallowClone {
       updates: DataFrame,
       partCol: String,
       keyCols: Seq[String],
-      parallelism: Int = 4,
       deleteWhen: Option[String] = None): Seq[String] = {
     require(isShallow(spark, table),
       s"$table is not a shallow clone — use Upsert.mergeByKey")
@@ -328,7 +317,7 @@ object ShallowClone {
       .collect().map(_.getString(0)).toSeq
     localize(spark, table, partCol, touched)
     Upsert.mergeByKeyAt(spark, table, updates, partCol, keyCols,
-      parallelism, deleteWhen, keepSuppliedIdentity = false,
+      deleteWhen, keepSuppliedIdentity = false,
       snapshotAt = None, viaShallowPath = true)
   }
 

@@ -1,10 +1,5 @@
 package graft.batch
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,13 +27,14 @@ import graft.core.{AtomicWrite, TxnLog}
   * snapshot reader never observes installed data whose pre-image is not yet
   * findable in history.
   *
-  * Concurrent WRITERS are serialized per partition by the table's
-  * [[graft.core.TxnLog]] manifest (the Delta optimistic-concurrency analog):
-  * each partition merge claims its partition on top of the snapshot version
-  * read before any table data, so two merges touching the same partition
+  * Concurrent WRITERS are serialized by the table's [[graft.core.TxnLog]]
+  * manifest (the Delta optimistic-concurrency analog): each merge claims
+  * ALL its touched partitions in one record on top of the snapshot
+  * version read before any table data, so two merges sharing a partition
   * fail loudly with [[graft.core.TxnLog.ConcurrentWriteException]] instead
   * of silently last-winning; merges of disjoint partitions proceed
-  * unimpeded.
+  * unimpeded. One merge is one claim and one end, so it commits all its
+  * partitions at once, as one Delta MERGE is one commit.
   */
 object Upsert {
 
@@ -74,24 +70,21 @@ object Upsert {
     *                 row is a delete, `updates` needs only `partCol` +
     *                 `keyCols` (no coverage requirement — nothing is
     *                 unioned into the survivors); see [[deleteByKey]].
-    * @param parallelism max partitions merging at once. Each partition
-    *                 merge is one distributed job; running a bounded number
-    *                 of them concurrently keeps a many-partition backfill
-    *                 from serializing on job latency while capping the peak
-    *                 footprint at `parallelism` partition rewrites.
-    *                 Atomicity stays per-partition either way.
     * @return the touched partition values, for observability
     *
     * Scale notes: the only driver-side materializations are the DISTINCT
-    * set of touched partition values (bounded by the partition count of the
-    * delta, not by rows) and one commit record per partition. Failure
-    * semantics under parallelism: every partition merge is atomic; on any
-    * failure the remaining in-flight merges finish, unstarted ones are
-    * skipped, and the first error propagates — completed partitions stay
-    * published (re-running the same merge is idempotent per key). A
-    * partition whose merge fails AFTER its publish is rolled back to its
-    * pre-image before the claim aborts, so a failed merge never leaves its
-    * uncommitted data visible.
+    * (partition, has upsert rows) pairs of the delta (bounded by its
+    * partition count, not by rows) and two commit records. Every touched
+    * partition's rewrite is staged by ONE Spark write; the rest is renames
+    * on the driver.
+    *
+    * Atomicity: the merge is all-or-nothing across its partitions, as one
+    * Delta MERGE is one commit. Readers resolve every touched partition
+    * through its pre-image until the single end record lands. A failure
+    * anywhere after the claim rolls every already-installed partition back
+    * to its pre-image, then aborts the claim, so a failed merge leaves no
+    * data visible. The price: one conflicting partition fails the whole
+    * merge (retry it as a whole; the merge is idempotent per key).
     */
   def mergeByKey(
       spark: SparkSession,
@@ -99,31 +92,28 @@ object Upsert {
       updatesIn: DataFrame,
       partCol: String,
       keyCols: Seq[String],
-      parallelism: Int = 4,
       deleteWhen: Option[String] = None,
       keepSuppliedIdentity: Boolean = false): Seq[String] =
-    mergeByKeyAt(spark, table, updatesIn, partCol, keyCols, parallelism,
+    mergeByKeyAt(spark, table, updatesIn, partCol, keyCols,
       deleteWhen, keepSuppliedIdentity, snapshotAt = None)
 
   /** [[mergeByKey]] with the OCC snapshot PINNED by the caller: the
-    * partition claims begin on `snapshotAt`, so any commit landing after
-    * it on a touched partition fails the merge loudly. This is how a verb
-    * whose delta is DERIVED FROM A READ of the table ([[replaceWhere]]'s
+    * claim begins on `snapshotAt`, so any commit landing after it on a
+    * touched partition fails the merge loudly. This is how a verb whose
+    * delta is DERIVED FROM A READ of the table ([[replaceWhere]]'s
     * matching-row scan) closes its read-compute-write race — the read and
-    * the claims share one version. */
+    * the claim share one version. */
   private[batch] def mergeByKeyAt(
       spark: SparkSession,
       table: String,
       updatesIn: DataFrame,
       partCol: String,
       keyCols: Seq[String],
-      parallelism: Int,
       deleteWhen: Option[String],
       keepSuppliedIdentity: Boolean,
       snapshotAt: Option[Long],
       viaShallowPath: Boolean = false): Seq[String] = {
     require(keyCols.nonEmpty, "mergeByKey needs at least one key column")
-    require(parallelism >= 1, "parallelism must be >= 1")
     // protocol gate: refuse tables carrying features this build does not
     // know, then declare what THIS merge introduces — every managed
     // table's commits carry in-commit timestamps, and the change feed
@@ -141,7 +131,7 @@ object Upsert {
           "materialize the clone first")
     TableFeatures.declareAll(spark, table,
       TableFeatures.InCommitTimestamps +:
-        (if (changeFeedEnabled(spark)) Seq(TableFeatures.ChangeDataFeed)
+        (if (changeFeedOn(spark)) Seq(TableFeatures.ChangeDataFeed)
          else Seq.empty))
     // declared type widenings let the per-partition type-conflict check
     // resolve by casting BOTH sides to the registered type (one registry
@@ -208,7 +198,7 @@ object Upsert {
     }
     // OCC snapshot BEFORE any table read — including the identity
     // assignment's existing-id read below: a concurrent merge committing
-    // after this version fails our partition claims loudly, so the ids we
+    // after this version fails our claim loudly, so the ids we
     // read here can never silently go stale. (The allocation commits the
     // assignment itself makes land after the snapshot but claim only the
     // reserved synthetic `_graft_identity:*` values — disjoint from every
@@ -233,19 +223,18 @@ object Upsert {
 
     // Deletion pairs in force at the snapshot, resolved ONCE for the whole
     // merge (a full-manifest read + sidecar listing per PARTITION measurably
-    // taxed the merge micro-bench). Safe to share: each partition's claim
-    // begin fails loudly on ANY post-snapshot commit touching it — dv-ends
-    // included — so for every partition that proceeds these are exactly the
-    // pairs in force under its claim; other partitions' pairs are inert in
-    // the anti-join (file basenames are unique per partition publish).
+    // taxed the merge micro-bench). Safe to share: the claim's begin fails
+    // loudly on ANY post-snapshot commit touching a touched partition —
+    // dv-ends included — so these are exactly the pairs in force under the
+    // claim; other partitions' pairs are inert in the anti-join (file
+    // basenames are unique per partition publish).
     val dvPairs = DeletionVectors.pairsAsOf(spark, table, Long.MaxValue,
       TxnLog.commitsSince(spark, table, 0L))
 
     // One materialization of the updates plan, populated by the FIRST
-    // action (the validation probe): validation, the distinct partition
-    // collect, and the per-partition delta/anti-join below would otherwise
-    // each re-execute a possibly-expensive upstream computation
-    // (2 + 2×partitions replays on a backfill).
+    // action (the validation probe): validation, the touched-partition
+    // probe, and the staged split below would otherwise each re-execute a
+    // possibly-expensive upstream computation.
     updates.persist()
     try {
       // all sanity probes ride one tiny job: ambiguous matches, null
@@ -320,32 +309,18 @@ object Upsert {
       val keyColsP = keyCols.map(ColumnMapping.physicalName(colMap, _))
       val dataCols = updatesP.columns
         .filterNot(_ == partColP).filterNot(deleteWhen.contains).toSeq
-      val touched = updatesP.select(col(partColP).cast("string")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-
-      // A merge with NO upsert rows anywhere relaxes schema discipline:
-      // deletes need only the key columns, and surviving rows keep the
-      // table's own (full) schema — there is no union to align.
-      val deletesOnly = deleteWhen.exists(m =>
-        updates.filter(!col(m)).limit(1).isEmpty)
-
-      // Bounded-parallel partition merges: Spark schedules concurrent jobs
-      // fine from multiple submitter threads; the pool only bounds how many
-      // partition rewrites are in flight.
-      val pool = Executors.newFixedThreadPool(math.min(parallelism, math.max(1, touched.size)))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val merges = touched.map { p =>
-          Future(mergeOnePartition(spark, table, updatesP, partColP, keyColsP, dataCols, p,
-            snapshot, deleteWhen, deletesOnly, dvPairs,
-            colMap.collect { case (ph, "") => ph }.toSet, widenings))
-        }
-        // surface the FIRST failure but let in-flight merges complete first
-        // (each is atomic; cancelling a distributed write mid-flight buys
-        // nothing and loses the completed partitions' observability)
-        val results = merges.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-        results.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
-      } finally pool.shutdown()
+      // ONE probe names the touched partitions and which of them carry
+      // upsert rows
+      val probe = updatesP
+        .select(col(partColP).cast("string"),
+          deleteWhen.fold(lit(true))(m => !col(m)))
+        .distinct().collect().map(r => (r.getString(0), r.getBoolean(1)))
+      val touched = probe.map(_._1).distinct.sorted.toSeq
+      if (touched.nonEmpty)
+        mergeUnderClaim(spark, table, updatesP, partColP, keyColsP, dataCols,
+          touched, probe.collect { case (p, true) => p }.toSet, snapshot,
+          deleteWhen, dvPairs, colMap.collect { case (ph, "") => ph }.toSet,
+          widenings)
       refreshIndexSidecars(spark, table)
       autoCompactIfDue(spark, table, partColP, touched)
       touched
@@ -436,8 +411,8 @@ object Upsert {
     * (Delta's `DELETE FROM t WHERE key IN (...)` / takedown-workflow shape,
     * ref SparkManager.scala:36-37's Delta write path). `keys` needs ONLY
     * `partCol` + `keyCols`; matched rows are removed, unmatched keys are
-    * no-ops, untouched partitions are untouched bytes, and each partition
-    * rewrite is atomic + retained for time travel exactly like an upsert
+    * no-ops, untouched partitions are untouched bytes, and the rewrite is
+    * atomic across its partitions + retained for time travel exactly like an upsert
     * (the pre-delete version still returns the deleted rows until
     * [[vacuumHistory]] ages it out — GDPR erasure completes at vacuum, as
     * in Delta). Returns the touched partition values. */
@@ -446,12 +421,11 @@ object Upsert {
       table: String,
       keys: DataFrame,
       partCol: String,
-      keyCols: Seq[String],
-      parallelism: Int = 4): Seq[String] = {
+      keyCols: Seq[String]): Seq[String] = {
     val marker = "_graft_delete"
     require(!keys.columns.contains(marker), s"keys must not contain $marker")
     mergeByKey(spark, table, keys.withColumn(marker, lit(true)),
-      partCol, keyCols, parallelism, deleteWhen = Some(marker))
+      partCol, keyCols, deleteWhen = Some(marker))
   }
 
   /** INSERT OVERWRITE a predicate-selected slice — Delta's `replaceWhere`
@@ -470,8 +444,8 @@ object Upsert {
     * delete-then-insert of the same key.
     *
     * Read-compute-write race, closed: the matching keys are read at a
-    * snapshot pinned BEFORE the scan, and the merge's partition claims
-    * begin on that SAME version ([[mergeByKeyAt]]) — a concurrent commit
+    * snapshot pinned BEFORE the scan, and the merge's claim begins on that
+    * SAME version ([[mergeByKeyAt]]) — a concurrent commit
     * landing on any touched partition after the pin fails the whole verb
     * loudly ([[graft.core.TxnLog.ConcurrentWriteException]]), never
     * silently resurrects rows the scan missed. Partitions this replace
@@ -480,8 +454,8 @@ object Upsert {
     *
     * Scale shape: ONE filtered scan of the table finds the replaced keys
     * (predicate and key-column projection pushed to parquet; a predicate
-    * on `partCol` prunes partitions), then the ordinary per-partition
-    * merge machinery — everything else (CDF, constraints, expectations,
+    * on `partCol` prunes partitions), then the ordinary merge
+    * machinery — everything else (CDF, constraints, expectations,
     * generated/identity/row-tracking, retain-first publish, time travel)
     * is inherited, not reimplemented. An empty `rows` is the pure
     * predicate DELETE.
@@ -493,8 +467,7 @@ object Upsert {
       rows: DataFrame,
       partCol: String,
       keyCols: Seq[String],
-      predicateSql: String,
-      parallelism: Int = 4): Seq[String] = {
+      predicateSql: String): Seq[String] = {
     require(keyCols.nonEmpty, "replaceWhere needs the table's key columns")
     val marker = "_graft_replace_delete"
     require(!rows.columns.contains(marker), s"rows must not contain $marker")
@@ -520,49 +493,21 @@ object Upsert {
           .withColumn(marker, lit(true))
         upserts.unionByName(delKeys, allowMissingColumns = true)
       }
-    mergeByKeyAt(spark, table, updates, partCol, keyCols, parallelism,
+    mergeByKeyAt(spark, table, updates, partCol, keyCols,
       deleteWhen = Some(marker), keepSuppliedIdentity = false,
       snapshotAt = Some(v0))
   }
 
-  /** Merge one partition under a two-phase TxnLog claim:
-    * begin (the loud-failure point for concurrent same-partition writers,
-    * checked against `snapshot`) → read existing + publish merged → end.
-    * The begin precedes the partition's file-listing resolution, so a
-    * successful claim guarantees no concurrent writer republishes this
-    * partition between our read and our install. Any failure between the
-    * claim and its end rolls an already-installed publish back to its
-    * pre-image and ABORTS the claim — the partition neither stays locked
-    * for the staleness horizon nor keeps the failed write's data. */
-  private def mergeOnePartition(
-      spark: SparkSession,
-      table: String,
-      updates: DataFrame,
-      partCol: String,
-      keyCols: Seq[String],
-      dataCols: Seq[String],
-      p: String,
-      snapshot: Long,
-      deleteWhen: Option[String],
-      deletesOnly: Boolean,
-      dvPairs: Option[DataFrame],
-      droppedCols: Set[String],
-      widenings: Map[String, org.apache.spark.sql.types.DataType]): Unit = {
-    val claim = TxnLog.begin(spark, table, "upsert", Set(p), snapshot)
-    try mergeUnderClaim(spark, table, updates, partCol, keyCols, dataCols, p, claim,
-      deleteWhen, deletesOnly, dvPairs, droppedCols, widenings)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        // rollback BEFORE the abort record: once the abort releases the
-        // claim, snapshot reads resolve the partition to the live dir — if
-        // our failed publish already installed, that live data must be the
-        // restored pre-image by then. Never mask the original cause.
-        scala.util.Try(rollbackFailedPublish(spark, table, partCol, p, claim))
-        scala.util.Try(TxnLog.abort(spark, table, claim))
-        throw e
-    }
-  }
-
+  /** The merge under ONE TxnLog claim over every touched partition: begin
+    * (the loud-failure point for concurrent writers, checked against
+    * `snapshot`, and before any file listing, so nobody republishes a
+    * touched partition between our read and our install) → crash repair
+    * and survivors' read per partition → ONE staged write of every tagged
+    * split → per partition, change-record install and retain-first publish
+    * (renames only) → ONE end naming the partitions that published. Any
+    * failure before the end rolls every installed partition back to its
+    * pre-image, then aborts the claim once, so no partition stays locked
+    * or keeps the failed write's data. */
   private def mergeUnderClaim(
       spark: SparkSession,
       table: String,
@@ -570,175 +515,187 @@ object Upsert {
       partCol: String,
       keyCols: Seq[String],
       dataCols: Seq[String],
-      p: String,
-      claim: TxnLog.Commit,
+      touched: Seq[String],
+      upsertParts: Set[String],
+      snapshot: Long,
       deleteWhen: Option[String],
-      deletesOnly: Boolean,
       dvPairs: Option[DataFrame],
       droppedCols: Set[String],
-      widenings: Map[String, org.apache.spark.sql.types.DataType] =
-        Map.empty): Unit = {
-    // Spark's partitionBy ESCAPES special chars in directory names
-    // (':' -> %3A etc.); building the path from the raw value would miss
-    // the existing dir, treat the partition as new, and publish a
-    // duplicate sibling that readers merge into old-AND-new rows.
-    val dirName = s"$partCol=${escape(p)}"
-    val partDir = s"$table/$dirName"
-    // a PRIOR writer that crashed mid-publish left either the live dir
-    // missing (died between retain and install) or uncommitted data live
-    // (died after install, before its end) — we hold the claim, so restore
-    // the committed pre-image before reading (the repair half of
-    // retain-first; crashed writes stay invisible to what we merge on)
-    repairCrashedWriter(spark, table, dirName, p, claim.version)
-    val rawDelta = updates.filter(col(partCol).cast("string") === p)
-    // every delta key leaves the old partition; upsert rows come back,
-    // delete-marked rows do not — exactly Delta's WHEN MATCHED THEN
-    // UPDATE / DELETE / WHEN NOT MATCHED THEN INSERT on a per-partition
-    // rewrite. A delete-marked key with no match is a no-op, as in Delta.
-    // Declared widenings cast the UPDATES side to exactly the registered
-    // type too (the old side casts in existingPartition): if only one
-    // side were cast, the union's own coercion could land the partition
-    // WIDER than declared (int table + long updates under a
-    // decimal(19,0) widening → decimal(20,0)), leaving it permanently
-    // "narrow" to every registry comparison.
-    val deltaKeys = rawDelta.select(keyCols.map(col): _*)
-    val upserts = TypeWidening.applyTo(
-      deleteWhen.fold(rawDelta)(m => rawDelta.filter(!col(m)))
-        .select(dataCols.map(col): _*),
-      widenings)
-    // deletes-only merges skip the column-coverage discipline: survivors
-    // keep the table's own schema, nothing is unioned in. The read is the
-    // EFFECTIVE state — deletion vectors subtracted (`dvPairs`, resolved
-    // once at the merge snapshot) — so a DV-deleted row neither survives
-    // the rewrite (the merge MATERIALIZES pending deletes, like Delta's
-    // OPTIMIZE over DV'd files) nor re-enters the change feed as a
-    // matched row.
-    val existing = existingPartition(spark, partDir,
-      dataCols, p, requireCoverage = !deletesOnly, dv = dvPairs,
-      droppedCols = droppedCols,
-      updatesSchema = Some(updates.schema), keyCols = keyCols,
-      widenings = widenings)
-    if (existing.isEmpty && (deletesOnly ||
-        (deleteWhen.isDefined && upserts.limit(1).isEmpty))) {
+      widenings: Map[String, org.apache.spark.sql.types.DataType]): Unit = {
+    val claim = TxnLog.begin(spark, table, "upsert", touched.toSet, snapshot)
+    val fs = fsFor(spark, table)
+    val stagedCdf = changeFeedOn(spark)
+    // a merge with NO upsert rows anywhere relaxes schema discipline:
+    // deletes need only the key columns, survivors keep each partition's
+    // own (full) columns, and there is no union to align
+    val deletesOnly = deleteWhen.isDefined && upsertParts.isEmpty
+    val changesRoot = s"$table/${ChangeFeed.ChangesDir}/v${claim.version}"
+    val stageRoot = s"$changesRoot/.stage"
+    try {
+      // Spark's partitionBy ESCAPES special chars in directory names
+      // (':' -> %3A etc.); building the path from the raw value would miss
+      // the existing dir, treat the partition as new, and publish a
+      // duplicate sibling that readers merge into old-AND-new rows.
+      def dirName(p: String) = s"$partCol=${escape(p)}"
+      // a PRIOR writer that crashed mid-publish left either the live dir
+      // missing (died between retain and install) or uncommitted data live
+      // (died after install, before its end) — we hold the claim, so restore
+      // the committed pre-image before reading (the repair half of
+      // retain-first; crashed writes stay invisible to what we merge on).
+      // The read is the EFFECTIVE state — deletion vectors subtracted
+      // (`dvPairs`, resolved once at the merge snapshot) — so a DV-deleted
+      // row neither survives the rewrite (the merge MATERIALIZES pending
+      // deletes, like Delta's OPTIMIZE over DV'd files) nor re-enters the
+      // change feed as a matched row.
+      val olds = touched.flatMap { p =>
+        repairCrashedWriter(spark, table, dirName(p), p, claim.version)
+        existingPartition(spark, s"$table/${dirName(p)}", dataCols, p,
+          requireCoverage = !deletesOnly, dv = dvPairs,
+          droppedCols = droppedCols, updatesSchema = Some(updates.schema),
+          keyCols = keyCols, widenings = widenings).map(p -> _)
+      }.toMap
       // deleting keys from a partition that does not exist is a no-op
       // (Delta: an unmatched WHEN MATCHED THEN DELETE touches nothing);
-      // crucially it must not commit an END — an end with no retained
+      // crucially the end must not name it — an end with no retained
       // pre-image/marker would poison later snapshot resolution — and an
-      // empty-partition publish would leave dir debris. Abort the claim.
-      TxnLog.abort(spark, table, claim)
-      return
-    }
-    // Persisted change feed, Delta-style (`_change_data` files written by
-    // the SAME job that rewrites the data): the tagged split below routes
-    // every row of the ONE partition scan to its destination —
-    //   data/  = survivors (no delta key matches)      -> published
-    //   pre/   = matched pre-images (leave the table)  -> feed delete-side
-    //   post/  = upsert rows (enter the table)         -> published
-    //   cpost/ = the SAME upsert rows, written twice   -> feed insert-side
-    // The published partition is data/ + post/ MOVED into the publish tmp
-    // (renames), and the commit's change record is pre/ + cpost/ RENAMED
-    // under `c_<p>/{pre,post}` — the merge pays ZERO extra jobs and ZERO
-    // extra scans for the feed, only the O(delta) duplicate write of
-    // cpost. [[ChangeFeed]] nets insert/delete pairs per commit at READ
-    // time (its input is O(changed rows)), so the exposed feed still
-    // cancels identical-row rewrites exactly like the snapshot diff.
-    // The earlier shapes measurably lost on the merge micro-bench: a
-    // per-partition netting job paid a second partition scan (2x read
-    // amplification), and a bulk netting job still paid its own
-    // multi-stage shuffle+write per merge.
-    // The new rows ride the UPDATES side of the join, so duplicate-key
-    // pre-images (legal in external tables) replace down to ONE row
-    // exactly like the anti-join form.
-    val stagedCdf = changeFeedEnabled(spark)
-    val stageDir =
-      s"$table/${ChangeFeed.ChangesDir}/v${claim.version}/.stage_${escape(p)}"
-    val stageFs = fsFor(spark, table)
-    try {
-      if (stagedCdf) {
-        require(!(DestCol +: MarkCol +: Nil).exists(c =>
-          upserts.columns.contains(c) ||
-            existing.exists(_.columns.contains(c))),
-          s"reserved column name in table/updates: $DestCol/$MarkCol")
-        val posted = upserts.withColumn(DestCol, lit("post"))
-          .unionByName(upserts.withColumn(DestCol, lit("cpost")))
-        val tagged = existing match {
-          case Some(old) =>
-            val oldTagged = old
-              .join(deltaKeys.withColumn(MarkCol, lit(1L)), keyCols, "left_outer")
+      // empty-partition publish would leave dir debris
+      val legs = touched.filter(p => olds.contains(p) || upsertParts(p))
+      require(!Seq(DestCol, MarkCol, StageCol).exists(c =>
+          updates.columns.contains(c) || olds.values.exists(_.columns.contains(c))),
+        s"reserved column name in table/updates: $DestCol/$MarkCol/$StageCol")
+      // Persisted change feed, Delta-style (`_change_data` files written by
+      // the SAME job that rewrites the data): the tagged split below routes
+      // every row of the touched partitions' scan, under one
+      // `_graft_part=<p>` staging dir per partition (the string value,
+      // whatever the partition type), to its destination —
+      //   data/  = survivors (no delta key matches)      -> published
+      //   pre/   = matched pre-images (leave the table)  -> feed delete-side
+      //   post/  = upsert rows (enter the table)         -> published
+      //   cpost/ = the SAME upsert rows, written twice   -> feed insert-side
+      // Publishing MOVES data/ + post/ and installing the change record
+      // RENAMES pre/ + cpost/ under `c_<p>/{pre,post}`: the feed costs zero
+      // extra jobs, only the O(delta) duplicate write of cpost (with the
+      // feed off, pre/ and cpost/ stay empty). [[ChangeFeed]] nets
+      // insert/delete pairs at READ time, so identical-row rewrites cancel
+      // exactly like the snapshot diff. The new rows ride the UPDATES side
+      // of the join, so duplicate-key pre-images (legal in external tables)
+      // replace down to ONE row. Declared widenings cast the UPDATES side to
+      // exactly the registered type too (the old side casts in
+      // existingPartition): the union's own coercion could otherwise land a
+      // partition WIDER than declared (int table + long updates under a
+      // decimal(19,0) widening → decimal(20,0)).
+      val partStr = col(partCol).cast("string")
+      val deltaKeys = updates.select(partStr.as(StageCol) +: keyCols.map(col): _*)
+        .withColumn(MarkCol, lit(1L))
+      val upserts = TypeWidening.applyTo(
+        deleteWhen.fold(updates)(m => updates.filter(!col(m)))
+          .select(partStr.as(StageCol) +: dataCols.map(col): _*),
+        widenings)
+      def tagged(old: Option[DataFrame], ups: DataFrame): DataFrame = {
+        val posted = ups.withColumn(DestCol, lit("post"))
+        val postedAll =
+          if (stagedCdf) posted.unionByName(ups.withColumn(DestCol, lit("cpost")))
+          else posted
+        old match {
+          case Some(o) =>
+            val oldTagged = o
+              .join(deltaKeys, StageCol +: keyCols, "left_outer")
               .withColumn(DestCol,
                 when(col(MarkCol).isNotNull, lit("pre")).otherwise(lit("data")))
               .drop(MarkCol)
-            if (deletesOnly) oldTagged else oldTagged.unionByName(posted)
-          case None => posted // brand-new partition: pure insert
-        }
-        tagged.write.partitionBy(DestCol).mode("overwrite").parquet(stageDir)
-        // install the commit's change record: renames into `c_<p>/` BEFORE
-        // the publish/END, so a committed END always has its change files
-        // (a crash sooner leaves only never-read orphans). The c_ dir is
-        // created even when a side is empty — its presence tells the feed
-        // "persisted commit, possibly empty delta" (no diff fallback).
-        val cDir = new org.apache.hadoop.fs.Path(
-          s"$table/${ChangeFeed.ChangesDir}/v${claim.version}/c_${escape(p)}")
-        stageFs.delete(cDir, true)
-        stageFs.mkdirs(cDir)
-        // the record's exact write-time schema (side files + the partition
-        // column's type) rides along as metadata, so a feed read NEVER has
-        // to run a schema-inference or mergeSchema job — at scale, one
-        // schema job per probed commit would dominate an incremental
-        // consumer's drain loop
-        val sideSchema = org.apache.spark.sql.types.StructType(
-          tagged.schema.filterNot(_.name == DestCol))
-        val schemaJson =
-          s"""{"side":${sideSchema.json},"part":${
-            updates.schema(partCol).dataType.json}}"""
-        val schemaOut = stageFs.create(
-          new org.apache.hadoop.fs.Path(cDir, ChangeFeed.SchemaFile), true)
-        try schemaOut.write(schemaJson.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally schemaOut.close()
-        Seq("pre" -> "pre", "cpost" -> "post").foreach { case (src, dst) =>
-          val from = new org.apache.hadoop.fs.Path(s"$stageDir/$DestCol=$src")
-          if (stageFs.exists(from) &&
-              !stageFs.rename(from, new org.apache.hadoop.fs.Path(cDir, dst)))
-            throw new java.io.IOException(
-              s"merge: failed to install change files $from -> $cDir/$dst")
+            val kept =
+              if (stagedCdf) oldTagged else oldTagged.filter(col(DestCol) === "data")
+            if (deletesOnly) kept else kept.unionByName(postedAll)
+          case None => postedAll // brand-new partition: pure insert
         }
       }
-      // Time travel: the replaced generation is retained under the claim's
-      // version (underscore prefix — invisible to plain readers). A
-      // brand-new partition retains an ABSENT marker instead, so
-      // [[readAsOf]] can tell "did not exist at that version" from
-      // "generation vacuumed" (the latter must fail loudly, never silently
-      // drop a partition).
+      def oldOf(p: String) = olds.get(p).map(_.withColumn(StageCol, lit(p)))
+      // partitions whose tagged split has the same schema stage in one
+      // write (the usual case: all of them); a partition with its own
+      // columns or types (deletes-only on mixed widths, a widened sibling,
+      // a brand-new partition) gets its own, so no file changes schema
+      val schemaOf = legs.map(p => p -> tagged(oldOf(p), upserts).schema).toMap
+      val groups = legs.map(schemaOf).distinct
+        .map(sch => legs.filter(schemaOf(_) == sch))
+      val stagedAt = groups.zipWithIndex.flatMap { case (ps, i) =>
+        val dir = s"$stageRoot/$i"
+        tagged(ps.flatMap(oldOf).reduceOption(_ unionByName _),
+          upserts.filter(col(StageCol).isin(ps: _*)))
+          .write.partitionBy(StageCol, DestCol).mode("overwrite").parquet(dir)
+        ps.map(p => p -> s"$dir/${org.apache.spark.sql.catalyst.catalog
+          .ExternalCatalogUtils.getPartitionPathString(StageCol, p)}")
+      }.toMap
       val historyRoot = s"$table/$HistoryDir/v${claim.version}"
-      if (existing.isEmpty) {
-        val marker =
-          new org.apache.hadoop.fs.Path(s"$historyRoot/$dirName$AbsentSuffix")
-        stageFs.mkdirs(marker.getParent)
-        val out = stageFs.create(marker, true)
-        try out.write(Array.empty[Byte]) finally out.close()
-      }
-      // retainFirst: the pre-image lands in history BEFORE the install, so
-      // a snapshot read can never observe installed data whose pre-image is
-      // not yet retained (the ms-wide race the after-install retention had)
-      AtomicWrite.publish(spark, partDir,
-        retainOldTo = if (existing.isDefined) Some(s"$historyRoot/$dirName") else None,
-        retainFirst = true) { tmp =>
+      legs.zipWithIndex.foreach { case (p, i) =>
+        val staged = stagedAt(p)
         if (stagedCdf) {
-          // the rewrite already ran in the tagged split: the new partition
+          // install the commit's change record: renames into `c_<p>/` BEFORE
+          // the publish/END, so a committed END always has its change files
+          // (a crash sooner leaves only never-read orphans). The c_ dir is
+          // created even when a side is empty — its presence tells the feed
+          // "persisted commit, possibly empty delta" (no diff fallback).
+          val cDir = new org.apache.hadoop.fs.Path(s"$changesRoot/c_${escape(p)}")
+          fs.delete(cDir, true)
+          fs.mkdirs(cDir)
+          // the record's exact write-time schema (side files + the partition
+          // column's type) rides along as metadata, so a feed read NEVER has
+          // to run a schema-inference or mergeSchema job — at scale, one
+          // schema job per probed commit would dominate an incremental
+          // consumer's drain loop
+          val sideSchema = org.apache.spark.sql.types.StructType(
+            schemaOf(p).filterNot(f => f.name == DestCol || f.name == StageCol))
+          val schemaJson =
+            s"""{"side":${sideSchema.json},"part":${
+              updates.schema(partCol).dataType.json}}"""
+          val schemaOut = fs.create(
+            new org.apache.hadoop.fs.Path(cDir, ChangeFeed.SchemaFile), true)
+          try schemaOut.write(schemaJson.getBytes(
+            java.nio.charset.StandardCharsets.UTF_8))
+          finally schemaOut.close()
+          Seq("pre" -> "pre", "cpost" -> "post").foreach { case (src, dst) =>
+            val from = new org.apache.hadoop.fs.Path(s"$staged/$DestCol=$src")
+            if (fs.exists(from) &&
+                !fs.rename(from, new org.apache.hadoop.fs.Path(cDir, dst)))
+              throw new java.io.IOException(
+                s"merge: failed to install change files $from -> $cDir/$dst")
+          }
+        }
+        // Time travel: the replaced generation is retained under the claim's
+        // version (underscore prefix — invisible to plain readers). A
+        // brand-new partition retains an ABSENT marker instead, so
+        // [[readAsOf]] can tell "did not exist at that version" from
+        // "generation vacuumed" (the latter must fail loudly, never silently
+        // drop a partition).
+        if (!olds.contains(p)) {
+          val marker = new org.apache.hadoop.fs.Path(
+            s"$historyRoot/${dirName(p)}$AbsentSuffix")
+          fs.mkdirs(marker.getParent)
+          val out = fs.create(marker, true)
+          try out.write(Array.empty[Byte]) finally out.close()
+        }
+        // retainFirst: the pre-image lands in history BEFORE the install, so
+        // a snapshot read can never observe installed data whose pre-image is
+        // not yet retained (the ms-wide race the after-install retention had)
+        AtomicWrite.publish(spark, s"$table/${dirName(p)}",
+          retainOldTo =
+            if (olds.contains(p)) Some(s"$historyRoot/${dirName(p)}") else None,
+          retainFirst = true) { tmp =>
+          // the rewrite already ran in the staged split: the new partition
           // is data/ + post/ MOVED into the publish tmp (renames on the
-          // table's filesystem, no second job). Prefixes keep the two dirs'
-          // part-file names from colliding (one job wrote both).
+          // table's filesystem, no second job). One job wrote every side of
+          // every partition, and a task names its file alike in each dir:
+          // the side and the partition's index prefix keep basenames unique
+          // across the table, which deletion vectors key on.
           val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-          stageFs.mkdirs(tmpPath)
+          fs.mkdirs(tmpPath)
           var moved = 0
           Seq("data", "post").foreach { side =>
-            val d = new org.apache.hadoop.fs.Path(s"$stageDir/$DestCol=$side")
-            if (stageFs.exists(d))
-              stageFs.listStatus(d).map(_.getPath)
+            val d = new org.apache.hadoop.fs.Path(s"$staged/$DestCol=$side")
+            if (fs.exists(d))
+              fs.listStatus(d).map(_.getPath)
                 .filter(_.getName.endsWith(".parquet")).foreach { f =>
-                  if (!stageFs.rename(f,
-                      new org.apache.hadoop.fs.Path(tmpPath, s"${side}_${f.getName}")))
+                  if (!fs.rename(f,
+                      new org.apache.hadoop.fs.Path(tmpPath, s"${side}_${i}_${f.getName}")))
                     throw new java.io.IOException(
                       s"merge publish: failed to move staged $f into $tmp")
                   moved += 1
@@ -748,28 +705,48 @@ object Upsert {
           // write so the partition dir stays readable (what a direct write
           // of the empty plan would have produced)
           if (moved == 0)
-            (if (deletesOnly) existing.get.limit(0) else upserts.limit(0))
+            (if (deletesOnly) olds(p) else upserts.drop(StageCol)).limit(0)
               .write.mode("overwrite").parquet(tmp)
-        } else {
-          val merged = existing match {
-            case Some(old) =>
-              val survivors = old.join(deltaKeys, keyCols, "left_anti")
-              if (deletesOnly) survivors else survivors.unionByName(upserts)
-            case None => upserts
-          }
-          merged.write.parquet(tmp)
         }
       }
-      TxnLog.end(spark, table, claim)
+      // one end names exactly the partitions that published; a merge whose
+      // every partition was a no-op releases its claim instead
+      if (legs.isEmpty) TxnLog.abort(spark, table, claim)
+      else TxnLog.end(spark, table, claim.copy(partitions = legs.toSet))
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        // rollback BEFORE the abort record: once the abort releases the
+        // claim, snapshot reads resolve the partitions to their live dirs —
+        // any failed publish that already installed must be the restored
+        // pre-image by then. A failed rollback or abort rides the original
+        // cause as a suppressed error, never replaces or hides it.
+        touched.foreach { p =>
+          try rollbackFailedPublish(spark, table, partCol, p, claim)
+          catch { case scala.util.control.NonFatal(r) => e.addSuppressed(r) }
+        }
+        try TxnLog.abort(spark, table, claim)
+        catch { case scala.util.control.NonFatal(a) => e.addSuppressed(a) }
+        throw e
     } finally {
-      if (stagedCdf) { scala.util.Try(stageFs.delete(
-        new org.apache.hadoop.fs.Path(stageDir), true)); () }
+      // staging debris only: with the feed off the version dir holds
+      // nothing else, and the table keeps no change-files root at all
+      scala.util.Try {
+        if (stagedCdf) fs.delete(new org.apache.hadoop.fs.Path(stageRoot), true)
+        else {
+          val v = new org.apache.hadoop.fs.Path(changesRoot)
+          fs.delete(v, true)
+          deleteIfEmpty(fs, v.getParent)
+        }
+      }
+      ()
     }
   }
 
-  /** Reserved output-routing columns of the staged change-feed merge. */
+  /** Reserved routing columns of the staged merge split: the destination
+    * side, the matched-key mark, and the partition value's string form. */
   private val DestCol = "_graft_dest"
   private val MarkCol = "_graft_matched"
+  private val StageCol = "_graft_part"
 
   private def fsFor(
       spark: SparkSession, table: String): org.apache.hadoop.fs.FileSystem =
@@ -782,7 +759,7 @@ object Upsert {
     * (Delta's `delta.enableChangeDataFeed`, default-on here because the
     * write amplification is one extra scan of the touched partition while
     * the saving is the feed's whole-table diff). */
-  private def changeFeedEnabled(spark: SparkSession): Boolean =
+  private[batch] def changeFeedOn(spark: SparkSession): Boolean =
     spark.conf.get("graft.changeFeed.enabled", "true").toBoolean
   private val AbsentSuffix = ".ABSENT"
   /** Claim ops whose publish retains a pre-image under the claim's version
@@ -791,27 +768,21 @@ object Upsert {
 
   private def escape(value: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(value)
-  // shared with DeletionVectors (same package-internal machinery: dv claims
-  // repair crashed writers, escape partition values, and honor the change
-  // feed toggle exactly as merges do)
+  // the package's other partition-dir writers escape values as merges do
   private[batch] def escapeValue(value: String): String = escape(value)
-  private[batch] def changeFeedOn(spark: SparkSession): Boolean =
-    changeFeedEnabled(spark)
-  private[batch] def repairCrashed(
-      spark: SparkSession, table: String, dirName: String,
-      p: String, ourClaim: Long): Unit =
-    repairCrashedWriter(spark, table, dirName, p, ourClaim)
   private[batch] def unescape(dirName: String, partCol: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(dirName.stripPrefix(s"$partCol="))
 
-  /** Undo an already-installed publish of a FAILED merge: if this claim
-    * retained a pre-image (or an ABSENT marker for a brand-new partition),
-    * the install happened — put the pre-image back (or remove the new
-    * partition) so the abort leaves the live tree at its committed state.
-    * Skipped if any commit after the claim touches the partition (a
-    * usurper past the staleness horizon owns it now — clobbering its data
-    * would be worse; its own retained pre-image keeps snapshots sound). */
+  /** Undo an already-installed publish of a FAILED merge, for partition
+    * `p` of the claim: if the claim retained its pre-image (or an ABSENT
+    * marker for a brand-new partition), the install happened — put the
+    * pre-image back (or remove the new partition) so the abort leaves the
+    * live tree at its committed state. Only `p`'s entries leave the
+    * claim's generation; the root goes once it is empty. Skipped if any
+    * commit after the claim touches the partition (a usurper past the
+    * staleness horizon owns it now — clobbering its data would be worse;
+    * its own retained pre-image keeps snapshots sound). */
   private[graft] def rollbackFailedPublish(
       spark: SparkSession, table: String, partCol: String,
       p: String, claim: TxnLog.Commit): Unit = {
@@ -839,15 +810,21 @@ object Upsert {
       if (!fs.rename(gen, live))
         throw new java.io.IOException(
           s"rollback: failed to restore pre-image $gen -> $live")
-      fs.delete(genRoot, true) // consumed; drop the marker-less debris
     } else if (fs.exists(marker)) {
       // brand-new partition: restoring "did not exist" = removing our data
       if (fs.exists(live)) fs.delete(live, true)
-      fs.delete(genRoot, true)
+      fs.delete(marker, false)
     }
     // no gen and no marker: the publish never started installing — the live
     // dir (if any) is the untouched pre-image; nothing to do
+    deleteIfEmpty(fs, genRoot)
   }
+
+  /** Drop a generation root whose last entry was consumed (only its claim
+    * holder ever writes into it, so an empty root stays empty). */
+  private def deleteIfEmpty(
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path): Unit =
+    if (fs.exists(dir) && fs.listStatus(dir).isEmpty) fs.delete(dir, false)
 
   /** Repair half of retain-first publishing, run under our own claim (the
     * claim serializes writers, so no concurrent race). A crashed writer —
@@ -860,8 +837,11 @@ object Upsert {
     * retained them): restore it over the live dir, or — when the chain
     * began with an ABSENT marker — restore non-existence. Begins closed by
     * a LATER end are excluded: that end committed the partition (e.g. a
-    * usurper past the staleness horizon), and the live dir is its data. */
-  private def repairCrashedWriter(
+    * usurper past the staleness horizon), and the live dir is its data.
+    * Only `dirName`'s entries leave the crashed generations: a crashed
+    * claim over several partitions keeps the others' pre-images for their
+    * own repair. */
+  private[batch] def repairCrashedWriter(
       spark: SparkSession, table: String, dirName: String,
       p: String, ourClaim: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(table)
@@ -889,8 +869,11 @@ object Upsert {
           throw new java.io.IOException(
             s"restore: failed to move crashed writer's pre-image ${gen(c.version)} -> $live")
         // the chain's other retains are uncommitted intermediates — debris
-        crashed.foreach(cc => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$table/$HistoryDir/v${cc.version}"), true))
+        crashed.foreach { cc =>
+          fs.delete(gen(cc.version), true)
+          fs.delete(marker(cc.version), false)
+          deleteIfEmpty(fs, gen(cc.version).getParent)
+        }
       }
   }
 
@@ -1287,11 +1270,9 @@ object Upsert {
     *
     * Only partitions a commit has touched SINCE `version` are rewritten —
     * an O(tail) manifest probe, not a table diff — so restoring a recent
-    * version costs O(churn since v), not O(table). Atomicity is
-    * per-partition, as for every merge on this engine (Delta's RESTORE is
-    * one commit; ours is a bounded-parallel sequence of partition
-    * commits — a failure mid-restore leaves some partitions restored,
-    * re-running completes it idempotently).
+    * version costs O(churn since v), not O(table). The restore is one
+    * merge, so it is one commit, as Delta's RESTORE is: it lands on every
+    * rewritten partition at once, or a failure leaves none restored.
     *
     * Refused when the schema changed since `version` (a restore across a
     * widening would silently null-fill) and when `version` predates the
@@ -1302,8 +1283,7 @@ object Upsert {
       table: String,
       version: Long,
       partCol: String,
-      keyCols: Seq[String],
-      parallelism: Int = 4): Seq[String] = {
+      keyCols: Seq[String]): Seq[String] = {
     require(keyCols.nonEmpty, "restoreTo needs the table's key columns")
     val marker = "_graft_restore_delete"
     val all = TxnLog.commitsSince(spark, table, 0L)
@@ -1337,7 +1317,7 @@ object Upsert {
           .withColumn(marker, lit(true)))
     // identity values (row-tracking ids included) restore VERBATIM: the
     // as-of snapshot's ids are committed history, unique by construction
-    mergeByKey(spark, table, updates, partCol, keyCols, parallelism,
+    mergeByKey(spark, table, updates, partCol, keyCols,
       deleteWhen = Some(marker), keepSuppliedIdentity = true)
   }
 
@@ -1345,10 +1325,11 @@ object Upsert {
     * snapshot isolation for the default read path (the behavior the
     * reference gets from Delta on every read, ref SparkManager.scala:36-37).
     * A plain `spark.read.parquet` during a multi-partition [[mergeByKey]]
-    * can see partition A post-merge and partition B pre-merge (atomicity is
-    * per-partition); this read resolves every partition through the TxnLog:
-    * the result is always the full pre-merge state or a prefix of the
-    * merge's end-commits — never a torn mix.
+    * can see partition A post-merge and partition B pre-merge (each
+    * partition installs by its own rename); this read resolves every
+    * partition through the TxnLog: until the merge's one end commit lands,
+    * every touched partition reads as its pre-image, so the result is the
+    * full pre-merge or the full post-merge state — never a torn mix.
     *
     * Tables without a TxnLog manifest (or without `partCol=` directories)
     * read plainly — zero overhead until the first claimed write exists.
@@ -1919,8 +1900,12 @@ object Upsert {
       claim.version // begin version: end records carry it as their ref
     } catch {
       case scala.util.control.NonFatal(e) =>
-        scala.util.Try(rollbackFailedPublish(spark, table, partCol, value, claim))
-        scala.util.Try(TxnLog.abort(spark, table, claim))
+        // same failure path as a merge: a failed rollback or abort rides
+        // the original cause as a suppressed error
+        try rollbackFailedPublish(spark, table, partCol, value, claim)
+        catch { case scala.util.control.NonFatal(r) => e.addSuppressed(r) }
+        try TxnLog.abort(spark, table, claim)
+        catch { case scala.util.control.NonFatal(a) => e.addSuppressed(a) }
         throw e
     }
   }

@@ -284,8 +284,9 @@ object TxnLog {
     * only). Best-effort by contract: callers emit it from failure paths
     * and must not mask the original error if the abort itself fails.
     * Callers whose failure may POSTDATE their data publish must roll the
-    * publish back before aborting (see `Upsert.mergeOnePartition`) — an
-    * abort alone does not undo installed data. */
+    * publish back before aborting (see `Upsert.mergeUnderClaim`, which
+    * rolls back every installed partition of its claim, then aborts once)
+    * — an abort alone does not undo installed data. */
   def abort(spark: SparkSession, table: String, begun: Commit): Commit =
     commit(spark, table, begun.op.stripSuffix("-begin") + "-abort",
       begun.partitions, begun.version, ref = Some(begun.version), all = begun.all)

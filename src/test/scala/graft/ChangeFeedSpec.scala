@@ -21,7 +21,8 @@ class ChangeFeedSpec extends SparkSpec {
     df.select("day", "k", "v").as[(String, String, Double)].collect().toSet
   }
 
-  /** Seed + three merges (update, insert, cross-partition mix, delete).
+  /** Seed + four merges (update, insert, cross-partition mix, delete,
+    * update of a merge-created partition).
     * Returns (table, v0, seed-state). */
   private def history(): (String, Long, Set[(String, String, Double)]) = {
     import spark.implicits._
@@ -44,6 +45,10 @@ class ChangeFeedSpec extends SparkSpec {
     Upsert.deleteByKey(spark, table,
       Seq(("2026-01-01", "k2"), ("2026-01-01", "k9")).toDF("day", "k"),
       "day", Seq("k"))
+    // M4: update k5 in the partition M2 created (M2 commits its two
+    // partitions as one end, so this keeps four data commits)
+    Upsert.mergeByKey(spark, table,
+      Seq(("2026-01-03", "k5", 55.0)).toDF("day", "k", "v"), "day", Seq("k"))
     (table, v0, s0)
   }
 

@@ -24,10 +24,12 @@ class ResolutionCostSpec extends SparkSpec {
     val days = (1 to nParts).map(i => f"2026-03-$i%02d")
     days.map(d => (d, "a", 1.0)).toDF("day", "k", "v")
       .write.partitionBy("day").mode("overwrite").parquet(table)
-    // one merge per partition → one retained generation per partition
-    Upsert.mergeByKey(spark, table,
-      days.map(d => (d, "a", 2.0)).toDF("day", "k", "v"), "day", Seq("k"),
-      parallelism = 1)
+    // one single-partition merge per partition → one retained generation
+    // per partition
+    days.foreach { d =>
+      Upsert.mergeByKey(spark, table,
+        Seq((d, "a", 2.0)).toDF("day", "k", "v"), "day", Seq("k"))
+    }
     table
   }
 

@@ -343,6 +343,36 @@ class ShallowCloneSpec extends SparkSpec {
     }
   }
 
+  test("a localizer's install onto an existing non-empty live dir refuses " +
+      "and leaves the live files as they were") {
+    import spark.implicits._
+    val t = tmp("scinst")
+    val live = s"$t/day=d1"
+    Seq((1L, 10.0)).toDF("k", "v").write.parquet(live)
+    def snapshot(dir: String): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val before = snapshot(live)
+    // the bulk path stages `partCol=value` dirs (a name readers would
+    // see if it got nested), the single path a dot-prefixed one
+    Seq(s"$t/.localize-bulk-x/day=d1", s"$t/.localize-day=d1-x").foreach { staged =>
+      Seq((2L, 20.0)).toDF("k", "v").write.parquet(staged)
+      assert(!ShallowCloneTestHook.install(spark, staged, live), staged)
+      assert(snapshot(live) == before, s"live files changed by $staged")
+    }
+    // onto a free name the same install succeeds
+    val fresh = s"$t/day=d2"
+    Seq((3L, 30.0)).toDF("k", "v").write.parquet(s"$t/.localize-day=d2-x")
+    assert(ShallowCloneTestHook.install(spark, s"$t/.localize-day=d2-x", fresh))
+    assert(spark.read.parquet(fresh).count() == 1L)
+  }
+
   test("Maintain drives the lifecycle: shallow → materialize, one JSON line each") {
     val src = tmp("scmm"); seed(src)
     val dst = tmp("scmmd")

@@ -244,7 +244,7 @@ class UpsertSpec extends SparkSpec {
       ("2026-01-01", "k1", 10.0, "keepme"), ("2026-01-01", "k2", 2.0, "x")))
   }
 
-  test("readCommitted during an 8-partition backfill: full pre-merge or a prefix of commits, never torn") {
+  test("readCommitted during an 8-partition backfill: full pre-merge or full post-merge, never torn") {
     import spark.implicits._
     val table = tmp("upsert-snapshot")
     val days = (1 to 8).map(i => f"2026-03-$i%02d")
@@ -256,7 +256,7 @@ class UpsertSpec extends SparkSpec {
     // reader hammer: snapshot the table while the backfill runs. A snapshot
     // either resolves consistently or surfaces a LOUD retryable error (the
     // documented execution-race contract) — it must never return a state
-    // that is not a prefix of the merge's end-commits.
+    // in which only some of the merge's partitions landed.
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val observed = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
     val torn = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -277,18 +277,15 @@ class UpsertSpec extends SparkSpec {
       }
     })
     reader.start()
-    try Upsert.mergeByKey(spark, table, updates, "day", Seq("k"), parallelism = 4)
+    try Upsert.mergeByKey(spark, table, updates, "day", Seq("k"))
     finally { stop.set(true); reader.join() }
     assert(torn.isEmpty, s"torn snapshot: ${torn.peek()}")
     assert(!observed.isEmpty, "the hammer must complete at least one snapshot")
 
-    // prefix check: merged-day sets must follow the actual end-commit order
-    val endOrder = graft.core.TxnLog.commitsSince(spark, table, 0L)
-      .filter(_.op == "upsert-end").sortBy(_.version).map(_.partitions.head)
-    val prefixes = (0 to endOrder.size).map(endOrder.take(_).toSet).toSet
+    // one merge is one commit: every snapshot shows none or all of the days
     observed.forEach { b =>
-      assert(prefixes.contains(b),
-        s"snapshot $b is not a prefix of the end-commit order $endOrder")
+      assert(b.isEmpty || b == days.toSet,
+        s"snapshot $b shows part of the merge, not none or all of $days")
     }
   }
 
@@ -396,7 +393,7 @@ class UpsertSpec extends SparkSpec {
     }
     assert(spark.read.parquet(s"$table/day=2026-01-02").count() == 1,
       "failed write's data is live before the rollback")
-    // the failure path: rollback, then abort (what mergeOnePartition does)
+    // the failure path: rollback, then abort (what a failed merge does)
     Upsert.rollbackFailedPublish(spark, table, "day", "2026-01-02", claim)
     graft.core.TxnLog.abort(spark, table, claim)
     // plain readers AND snapshots see the committed state — the failed
@@ -414,7 +411,7 @@ class UpsertSpec extends SparkSpec {
       .select("v").as[Double].head() == 333.0)
   }
 
-  test("mergeByKey: 8-partition backfill merges in parallel with exact results") {
+  test("mergeByKey: 8-partition backfill merges under one claim with exact results") {
     import spark.implicits._
     val table = tmp("upsert-backfill")
     val days = (1 to 8).map(i => f"2026-02-$i%02d")
@@ -423,22 +420,21 @@ class UpsertSpec extends SparkSpec {
       .write.partitionBy("day").mode("overwrite").parquet(table)
     val updates = days.flatMap(d => Seq((d, "a", 10.0), (d, "c", 3.0)))
       .toDF("day", "k", "v")
-    val touched = Upsert.mergeByKey(spark, table, updates, "day", Seq("k"), parallelism = 4)
+    val touched = Upsert.mergeByKey(spark, table, updates, "day", Seq("k"))
     assert(touched == days)
     val after = spark.read.parquet(table)
       .select("day", "k", "v").as[(String, String, Double)].collect().toSet
     assert(after == days.flatMap(d =>
       Seq((d, "a", 10.0), (d, "b", 2.0), (d, "c", 3.0))).toSet)
-    // the TxnLog shows genuinely interleaved claims: some partition began
-    // before another one's end — i.e. merges overlapped in time, they did
-    // not serialize (pool of 4 over 8 one-second distributed jobs)
+    // the TxnLog shows ONE claim and ONE end for the whole backfill, each
+    // naming all 8 days: the merge commits all its partitions at once
     val commits = graft.core.TxnLog.commitsSince(spark, table, 0L)
-    val beginV = commits.filter(_.op == "upsert-begin").map(c => c.partitions.head -> c.version).toMap
-    val endV = commits.filter(_.op == "upsert-end").map(c => c.partitions.head -> c.version).toMap
-    assert(beginV.keySet == days.toSet && endV.keySet == days.toSet)
-    val interleaved = days.exists(d1 => days.exists(d2 =>
-      d1 != d2 && beginV(d2) > beginV(d1) && beginV(d2) < endV(d1)))
-    assert(interleaved, s"claims serialized — expected overlap: begins=$beginV ends=$endV")
+    val begins = commits.filter(_.op == "upsert-begin")
+    val ends = commits.filter(_.op == "upsert-end")
+    assert(begins.size == 1 && ends.size == 1,
+      s"one begin and one end expected: ${commits.map(c => c.op -> c.partitions)}")
+    assert(begins.head.partitions == days.toSet && ends.head.partitions == days.toSet)
+    assert(ends.head.ref.contains(begins.head.version))
   }
 
   // ------------------------------------------------- MERGE delete clause
