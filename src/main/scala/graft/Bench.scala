@@ -59,17 +59,24 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     spark.range(1000000L).selectExpr("sum(id)").collect() // JVM/codegen warm-up
-    // Parquet footer/metadata warm-up so the alphabetically-first query isn't
-    // charged the one-time corpus discovery cost (count() reads row-group
-    // stats only, no data pages — steady-state throughput is the metric).
-    // Older corpus generations wrote events.parquet as TIMESTAMP(NANOS):
-    // schema inference needs this flag there (otherwise that warm-up
-    // silently fails and the first events query pays the discovery cost the
-    // warm-up exists to remove). No-op on the current timestamp[us] corpus.
+    // Scan warm-up so the alphabetically-first query isn't charged the
+    // first read of each corpus file: the file-status cache, the page cache
+    // and the scan's code paths (count() reads row-group stats only, no
+    // data pages — steady-state throughput is the metric). It pre-pays no
+    // schema discovery: Tables.load takes each schema from one footer on
+    // the driver, with no job. Older corpus generations wrote events.parquet
+    // as TIMESTAMP(NANOS), which reads only with this flag set; a no-op on
+    // the current timestamp[us] corpus.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.core.Tables.all.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case scala.util.control.NonFatal(_) => () }
+      // Not a gate: a table that fails here fails again in every query
+      // that reads it, and those failures land in the bench line's
+      // `errors`. The warm-up only says which table and why, up front.
+      try graft.core.Tables.load(spark, sfDir, t).count()
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"bench warm-up: table $t failed to load: $e")
+      }
     }
 
     // Dev-only subset filter (driver never sets it): comma-separated names.

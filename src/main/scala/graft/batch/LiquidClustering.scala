@@ -2,7 +2,7 @@ package graft.batch
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{LayoutOps, StatsIndex, TxnLog}
+import graft.core.{FooterSchema, LayoutOps, StatsIndex, TxnLog}
 
 /** Incremental clustering — the Delta "liquid clustering" analog
   * (`ALTER TABLE … CLUSTER BY (cols)` + incremental `OPTIMIZE`): register
@@ -172,7 +172,7 @@ object LiquidClustering {
     // from the first candidate's footer schema
     lazy val leadType: Option[org.apache.spark.sql.types.DataType] =
       candidates.headOption.flatMap { d =>
-        scala.util.Try(spark.read.parquet(s"$table/$d").schema)
+        scala.util.Try(FooterSchema.read(spark, s"$table/$d").schema)
           .toOption.flatMap(_.find(_.name == colsP.head).map(_.dataType))
       }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.TxnLog
+import graft.core.{FooterSchema, TxnLog}
 
 /** Type widening as pure metadata — the Delta `delta.enableTypeWidening`
   * analog (Delta 3.2+; the reference enables full Delta, ref
@@ -187,7 +187,7 @@ object TypeWidening {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Seq.empty
     Upsert.liveDirNames(fs, table, partColP).filter { dirName =>
-      val s = spark.read.parquet(s"$table/$dirName").schema
+      val s = FooterSchema.read(spark, s"$table/$dirName").schema
       w.exists { case (c, t) =>
         s.fieldNames.contains(c) &&
           ignoreNull(s(c).dataType) != ignoreNull(t)

@@ -3,7 +3,7 @@ package graft.batch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{AtomicWrite, TxnLog}
+import graft.core.{AtomicWrite, FooterSchema, TxnLog}
 
 /** Partition-granularity MERGE (upsert) for plain-Parquet tables — the
   * stand-in for the `MERGE INTO` the reference would get from Delta
@@ -1890,7 +1890,7 @@ object Upsert {
     try {
       repairCrashedWriter(spark, table, dirName, value, claim.version)
       val partDir = s"$table/$dirName"
-      val rows = DeletionVectors.applyTo(spark.read.parquet(partDir), dvPairs)
+      val rows = DeletionVectors.applyTo(FooterSchema.read(spark, partDir), dvPairs)
       AtomicWrite.publish(spark, partDir,
         retainOldTo = Some(s"$table/$HistoryDir/v${claim.version}/$dirName"),
         retainFirst = true) { tmp =>
@@ -2334,10 +2334,10 @@ object Upsert {
     }
     if (!fs.exists(path)) None
     else if (!requireCoverage)
-      Some(DeletionVectors.applyTo(spark.read.parquet(partDir), dv))
+      Some(DeletionVectors.applyTo(FooterSchema.read(spark, partDir), dv))
     else {
       val old = resolveTypes(
-        DeletionVectors.applyTo(spark.read.parquet(partDir), dv))
+        DeletionVectors.applyTo(FooterSchema.read(spark, partDir), dv))
       // columns DROPPED via ColumnMapping are exempt from coverage: the
       // rewrite is exactly where their bytes lazily leave the partition
       val uncovered = old.columns.toSet -- dataCols.toSet -- droppedCols

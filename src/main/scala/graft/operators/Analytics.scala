@@ -85,6 +85,7 @@ object Analytics {
         countDistinct("customer_id").as("unique_customers"))
       .withColumn("revenue_share_pct",
         (col("rev_dec") * 100).cast("double") /
+          // unpartitioned window, bounded: one row per method × network
           sum(col("rev_dec")).over(Window.partitionBy()).cast("double"))
       .withColumn("total_revenue", col("rev_dec").cast("double"))
       .drop("rev_dec")

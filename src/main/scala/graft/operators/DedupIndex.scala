@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.FooterSchema
+
 /** Persisted MinHash-LSH band index — the 100 TB shape of
   * [[DedupQueries.incrementalScreen]]'s corpus side.
   *
@@ -104,7 +106,7 @@ object DedupIndex extends DerivedIndex("bands", "bp", "doc_id", countField = "do
     // shingles (no md5 signing), so re-shingling the batch for it costs
     // O(batch tokenization) — trivial next to the candidate join it feeds.
     val bBands = bandRows(batch)
-    val idx = s.read.parquet(dataDir(indexDir))
+    val idx = FooterSchema.read(s, dataDir(indexDir))
     val cand = bBands.as("x").join(idx.as("y"),
         col("x.bp") === col("y.bp") && col("x.band") === col("y.band") &&
           col("x.doc_id") =!= col("y.doc_id"))

@@ -46,11 +46,12 @@ object DedupQueries extends QueryModule {
     * one compiled pass instead of an interpreted transform lambda per
     * token); `array_distinct` stays the built-in — both produce the
     * first-occurrence order of the old
-    * `array_distinct(transform(sequence(...), i -> concat_ws(' ', ...)))`. */
-  private[operators] def shingleOf(df: DataFrame): DataFrame = {
+    * `array_distinct(transform(sequence(...), i -> concat_ws(' ', ...)))`,
+    * and a null `text` shingles to an empty array, as its `array()` did. */
+  private[graft] def shingleOf(df: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("toks", TextQueries.toks(col("text")))
-      .withColumn("sh", expr("array_distinct(graft_ngrams3(toks))"))
+      .withColumn("sh", expr("array_distinct(coalesce(graft_ngrams3(toks), array()))"))
   }
 
   private def docs(s: SparkSession, d: String): DataFrame = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.batch.ChangeFeed
+import graft.core.FooterSchema
 
 /** The maintenance protocol of an index derived from a TxnLog-maintained
   * table ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]], [[DedupIndex]]): the
@@ -129,7 +130,7 @@ abstract class DerivedIndex(
       val inserted = changes.withColumn("_rn", row_number().over(newest))
         .filter(col("_rn") === 1)
         .filter(col(ChangeFeed.ChangeTypeCol) === "insert")
-      val live = s.read.parquet(dataDir(indexDir))
+      val live = FooterSchema.read(s, dataDir(indexDir))
       val (touched, added) = delta(s, indexDir, Delta(changedIds, removed, inserted, live))
       val affected = touched.distinct().collect().map(_.get(0)).sortBy(_.toString)
       if (affected.nonEmpty) {
@@ -173,7 +174,7 @@ abstract class DerivedIndex(
     }
 
   private def indexedKeys(s: SparkSession, indexDir: String): Long =
-    s.read.parquet(dataDir(indexDir)).select(keyCol).distinct().count()
+    FooterSchema.read(s, dataDir(indexDir)).select(keyCol).distinct().count()
 
   private def metaFile(indexDir: String) = new Path(s"$indexDir/meta.json")
 

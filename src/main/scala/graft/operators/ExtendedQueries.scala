@@ -280,12 +280,14 @@ object ExtendedQueries extends QueryModule {
       .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
       .agg(sum(dec2(col("l_extendedprice"))).as("r"))
+    // unpartitioned window, bounded: one row per nation (25)
     val w = Window.orderBy(col("r").desc, col("n_name"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val total = rev.agg(sum(col("r")).as("grand"))
     rev.crossJoin(total)
       .select(
         col("n_name"),
+        // unpartitioned window, bounded: one row per nation (25)
         row_number().over(Window.orderBy(col("r").desc, col("n_name")))
           .cast("long").as("rk"),
         col("r").cast("double").as("revenue"),

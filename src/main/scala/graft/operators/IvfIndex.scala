@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.FooterSchema
+
 /** Persisted IVF index — the 100 TB shape of [[SimilarityQueries.topkIvf]].
   *
   * The in-query IVF path re-assigns the whole corpus to cells on every
@@ -50,7 +52,7 @@ object IvfIndex extends DerivedIndex("cells", "cell", "vec_id") {
   def build(s: SparkSession, d: String, indexDir: String): Long = {
     write(s, SimilarityQueries.quantized(s, d),
       SimilarityQueries.codebookRows(s, d), indexDir)
-    s.read.parquet(dataDir(indexDir)).select("cell").distinct().count()
+    FooterSchema.read(s, dataDir(indexDir)).select("cell").distinct().count()
   }
 
   /** Materialize the cell assignment of `q` against `rows` plus the
@@ -87,7 +89,7 @@ object IvfIndex extends DerivedIndex("cells", "cell", "vec_id") {
   // ------------------------------------------------- table-backed variant
 
   private def readCodebook(s: SparkSession, indexDir: String): Seq[(Long, Seq[Long])] =
-    s.read.parquet(codebookDir(indexDir)).collect()
+    FooterSchema.read(s, codebookDir(indexDir)).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
 
   /** Quantize vector-table rows (`vec_id`, `embedding`) with the exact
@@ -117,7 +119,7 @@ object IvfIndex extends DerivedIndex("cells", "cell", "vec_id") {
       val q = quantizeRows(s, src)
       write(s, q, codebook.getOrElse(SimilarityQueries.trainCentroidsOn(q)), indexDir)
     }
-    s.read.parquet(dataDir(indexDir)).select("cell").distinct().count()
+    FooterSchema.read(s, dataDir(indexDir)).select("cell").distinct().count()
   }
 
   protected def rebuild(
@@ -195,7 +197,7 @@ object IvfIndex extends DerivedIndex("cells", "cell", "vec_id") {
     // partition-pruned scan of only the probed cell directories
     val cellIds = probeCells.select("cell").distinct()
       .collect().map(_.getLong(0)).sorted
-    val prunedAssign = s.read.parquet(dataDir(indexDir))
+    val prunedAssign = FooterSchema.read(s, dataDir(indexDir))
       .filter(col("cell").isin(cellIds.map(Long.box): _*))
       .select(col("vec_id"), col("cell").cast("long").as("cell"),
         col("qv"), col("nrm"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.FooterSchema
+
 /** Persisted IVF-PQ index — the composed large-scale ANN shape (FAISS
   * `IndexIVFPQ`): an IVF coarse quantizer prunes the SEARCH SPACE to the
   * probed cells, product-quantization codes compress what remains, and
@@ -68,7 +70,7 @@ object IvfPqIndex extends DerivedIndex("codes", "cell", "vec_id") {
     val q = SimilarityQueries.quantized(s, d)
     write(s, q, SimilarityQueries.codebookRows(s, d),
       PqIndex.codebookDf(s, PqIndex.trainCodebook(s, q)), indexDir)
-    s.read.parquet(dataDir(indexDir)).count()
+    FooterSchema.read(s, dataDir(indexDir)).count()
   }
 
   /** Cell-assign `q` against the coarse codebook and encode it against
@@ -99,11 +101,11 @@ object IvfPqIndex extends DerivedIndex("codes", "cell", "vec_id") {
   // ------------------------------------------------- table-backed variant
 
   private def readCoarse(s: SparkSession, indexDir: String): Seq[(Long, Seq[Long])] =
-    s.read.parquet(coarseDir(indexDir)).collect()
+    FooterSchema.read(s, coarseDir(indexDir)).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toSeq.sortBy(_._1)
 
   private def readPq(s: SparkSession, indexDir: String): Seq[(Int, Long, Seq[Long])] =
-    s.read.parquet(pqDir(indexDir)).collect()
+    FooterSchema.read(s, pqDir(indexDir)).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toSeq)).toSeq
       .sortBy(t => (t._1, t._2))
 
@@ -180,12 +182,12 @@ object IvfPqIndex extends DerivedIndex("codes", "cell", "vec_id") {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val cellIds = pcRows.map(_._2).distinct.sorted
     // the codes read partition-prunes to the probed cell dirs
-    val pruned = s.read.parquet(dataDir(indexDir))
+    val pruned = FooterSchema.read(s, dataDir(indexDir))
       .filter(col("cell").isin(cellIds.map(Long.box).toIndexedSeq: _*))
       .select(col("vec_id"), col("codes"), col("cell").cast("long").as("cell"))
     import s.implicits._
     val qc = broadcast(pcRows.toDF("query_id", "cell"))
-    val cb = s.read.parquet(pqDir(indexDir))
+    val cb = FooterSchema.read(s, pqDir(indexDir))
     // ADC over the pruned codes, each pair restricted to the query's OWN
     // probed cells (a neighbor lives in exactly one cell, so the inner
     // join is the candidate predicate, never a duplicator)

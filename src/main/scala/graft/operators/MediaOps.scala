@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.FooterSchema
+
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata, processed by per-partition batch operators.
   *
@@ -188,7 +190,7 @@ object MediaOps {
   def readPartitioned(spark: SparkSession, path: String): Dataset[MediaRow] = {
     implicit val enc = Encoders.product[MediaRow]
     // partition column comes back as the LAST column — restore field order
-    spark.read.parquet(path)
+    FooterSchema.read(spark, path)
       .select("media_id", "kind", "bytes", "width", "height",
         "sample_rate", "duration_ms", "format")
       .as[MediaRow]

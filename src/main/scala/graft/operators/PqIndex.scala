@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.FooterSchema
+
 /** Persisted product-quantization index — the 100 TB shape of
   * [[SimilarityQueries.pqRecall]]'s compressed-domain ANN.
   *
@@ -118,7 +120,7 @@ object PqIndex extends DerivedIndex("codes", "bucket", "vec_id") {
   def build(s: SparkSession, d: String, indexDir: String): Long = {
     val q = SimilarityQueries.quantized(s, d)
     write(s, codebookDf(s, trainCodebook(s, q)), q, indexDir)
-    s.read.parquet(dataDir(indexDir)).count()
+    FooterSchema.read(s, dataDir(indexDir)).count()
   }
 
   /** Encode `q` against `cb` into the bucketed codes table, and persist
@@ -141,8 +143,8 @@ object PqIndex extends DerivedIndex("codes", "bucket", "vec_id") {
   private[graft] def adcScores(
       s: SparkSession, probes: DataFrame, indexDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val cb = s.read.parquet(codebookDir(indexDir))
-    val codes = s.read.parquet(dataDir(indexDir))
+    val cb = FooterSchema.read(s, codebookDir(indexDir))
+    val codes = FooterSchema.read(s, dataDir(indexDir))
     val parts = (0 until PqM).map { j =>
       val subP = probes.select(col("vec_id"),
         expr(s"slice(qv, ${j * PqSub + 1}, $PqSub)").as("pqv"))
@@ -175,7 +177,7 @@ object PqIndex extends DerivedIndex("codes", "bucket", "vec_id") {
   // ------------------------------------------------- table-backed variant
 
   private def readCodebook(s: SparkSession, indexDir: String): Seq[(Int, Long, Seq[Long])] =
-    s.read.parquet(codebookDir(indexDir)).collect()
+    FooterSchema.read(s, codebookDir(indexDir)).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toSeq)).toSeq
       .sortBy(t => (t._1, t._2))
 

@@ -192,6 +192,7 @@ object RelationalQueries extends QueryModule {
       .withColumn("revenue", col("rev_dec").cast("double"))
       .withColumn("revenue_share_pct",
         (col("rev_dec") * lit(100)).cast("double") /
+          // unpartitioned window, bounded: one row per priority (5)
           sum(col("rev_dec")).over(Window.partitionBy()).cast("double"))
       .select("o_orderpriority", "revenue", "n_orders", "revenue_share_pct")
   }
@@ -224,6 +225,7 @@ object RelationalQueries extends QueryModule {
       .groupBy(year(col("o_orderdate")).cast("long").as("y"),
         month(col("o_orderdate")).cast("long").as("m"))
       .agg(sum(dec2(col("o_totalprice"))).as("rev_dec"))
+    // unpartitioned window, bounded: one row per order month (~80)
     val w = Window.orderBy(col("y"), col("m"))
     monthly
       .withColumn("revenue", col("rev_dec").cast("double"))
@@ -238,6 +240,7 @@ object RelationalQueries extends QueryModule {
       .groupBy(year(col("o_orderdate")).cast("long").as("y"),
         month(col("o_orderdate")).cast("long").as("m"))
       .agg(sum(dec2(col("o_totalprice"))).as("rev_dec"))
+    // unpartitioned window, bounded: one row per order month (~80)
     val w = Window.orderBy(col("y"), col("m")).rowsBetween(-2, 0)
     monthly
       .withColumn("revenue", col("rev_dec").cast("double"))
@@ -513,6 +516,7 @@ object RelationalQueries extends QueryModule {
       .groupBy(year(col("o_orderdate")).cast("long").as("y"),
         month(col("o_orderdate")).cast("long").as("m"))
       .agg(sum(dec2(col("o_totalprice"))).as("rev_dec"))
+    // unpartitioned window, bounded: one row per order month (~80)
     val w = Window.orderBy(col("y"), col("m"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     monthly

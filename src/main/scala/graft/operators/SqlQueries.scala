@@ -19,8 +19,9 @@ import graft.core.Tables
 object SqlQueries extends QueryModule {
 
   /** Temp views over the tables the SQL needs (idempotent per session+dir).
-    * Deliberately NOT all of Tables.all: `spark.read.parquet` infers schema
-    * eagerly, and `events.parquet` (TIMESTAMP_NANOS) needs the nanosAsLong
+    * Deliberately NOT all of Tables.all: a load resolves its schema
+    * eagerly (from one footer, [[graft.core.FooterSchema]]), and an
+    * `events.parquet` written as TIMESTAMP_NANOS needs the nanosAsLong
     * normalization in [[Tables.events]] — registering it raw here would
     * throw before any SQL even runs. */
   private val needed = Seq(
@@ -37,7 +38,7 @@ object SqlQueries extends QueryModule {
   private def views(s: SparkSession, d: String): Unit =
     registeredDir.synchronized { // atomic check+register per session
       if (registeredDir.get(s) != d) {
-        // 7 eager schema inferences, once per session+dir switch
+        // 7 footer reads on the driver, once per session+dir switch
         needed.foreach(t => Tables.load(s, d, t).createOrReplaceTempView(t))
         registeredDir.put(s, d)
       }

@@ -62,4 +62,14 @@ class DedupSpec extends SparkSpec {
     assert(pairs.toSeq == Seq((1L, 2L, 1.0)),
       s"identical normalized docs share every fingerprint; doc 3 shares none: ${pairs.toSeq}")
   }
+
+  test("shingleOf: a null text shingles to an empty array, not null") {
+    import spark.implicits._
+    val docs = Seq((1L, Some("one two three four")), (2L, None: Option[String]))
+      .toDF("doc_id", "text")
+    val sh = DedupQueries.shingleOf(docs).orderBy("doc_id")
+      .select("sh").collect().map(r => Option(r.getSeq[String](0)))
+    assert(sh.toSeq == Seq(Some(Seq("one two three", "two three four")), Some(Seq.empty)),
+      s"legacy SQL gave array() for a null text: ${sh.toSeq}")
+  }
 }

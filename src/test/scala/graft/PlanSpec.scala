@@ -295,6 +295,29 @@ class PlanSpec extends SparkSpec {
       s"BPE form exchanges $exchanges > whitespace form $wsExchanges:\n$p")
   }
 
+  test("row_number pagination bounds its unpartitioned window at 150 rows") {
+    // Spark's InferWindowGroupLimit bounds the Window's input: a
+    // WindowGroupLimit, or for an unpartitioned row_number (this query) a
+    // top-150 TakeOrderedAndProject, so the single-partition window sorts
+    // 150 rows, not the whole table
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+    object aqe extends AdaptiveSparkPlanHelper
+    val plan = SparkEntry.queries("rel_window_pagination")(spark, dir)
+      .queryExecution.executedPlan
+    val windows = aqe.collect(plan) { case w: WindowExec => w }
+    assert(windows.nonEmpty, plan.toString)
+    windows.foreach { w =>
+      val limits = aqe.collect(w.child) {
+        case g: WindowGroupLimitExec => g.limit
+        case t: TakeOrderedAndProjectExec => t.limit
+      }
+      assert(limits.nonEmpty && limits.forall(_ <= 150),
+        s"expected a limit of at most 150 under the Window:\n$plan")
+    }
+  }
+
   test("runtime bloom filter prunes the fact side of a selective fact-fact join") {
     // At 100 TB the win is shuffle-volume reduction: a selective dimension
     // predicate is turned into a bloom filter applied to the fact side
